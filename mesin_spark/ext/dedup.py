@@ -28,7 +28,7 @@ from pyspark.sql import functions as F
 from mesin_spark.ext.ckpt import ckpt
 from mesin_spark.ext.pin import PINNED
 
-from mesin_spark.ext.text import FINGERPRINT_BASE, FINGERPRINT_MOD, tokens
+from mesin_spark.ext.text import tokens
 from mesin_spark.functions import stable_round as R
 
 #: 2^61-1 (Mersenne prime) keeps a*h+b inside signed-64 range when
@@ -170,13 +170,6 @@ def minhash_signature_numpy(num_perm: int = 64, seed: int = 42):
     return sig
 
 
-def minhash_signature(shingle_col: Column, num_perm: int = 64, seed: int = 42) -> Column:
-    """num_perm minhashes of a string-shingle array (convenience wrapper:
-    hash the shingles, then fold)."""
-    hashed = F.transform(shingle_col, lambda s: F.pmod(F.xxhash64(s), F.lit(_HASH_SPACE)))
-    return minhash_signature_from_hashes(hashed, num_perm, seed)
-
-
 def _hashed_shingle_frame(
     df: DataFrame, id_col: str, text_col: str, shingle_k: int
 ) -> DataFrame:
@@ -204,23 +197,31 @@ def _hashed_shingle_frame(
     ).transform(ckpt, eager=True)
 
 
+def _xxhash_band_key(j: int, rows: int) -> Column:
+    """Native band key: xxhash64 over band j's signature rows directly
+    (multi-arg hash of longs — no per-band string building). The
+    element_at indices stay in range: ``_sig`` holds exactly
+    bands·rows = num_perm entries by construction."""
+    return F.xxhash64(*[F.element_at("_sig", j * rows + r + 1) for r in range(rows)])
+
+
 def _band_pairs(
-    sig: DataFrame, num_perm: int, bands: int, max_bucket: int
+    sig: DataFrame,
+    num_perm: int,
+    bands: int,
+    max_bucket: int,
+    band_key=_xxhash_band_key,
 ) -> DataFrame:
-    """LSH banding over a (_id, _sig) frame → distinct candidate pairs."""
+    """LSH banding over a (_id, _sig) frame → distinct candidate pairs
+    (id_a < id_b) from every (band, bucket) holding 2..max_bucket rows.
+    ``band_key(j, rows)`` is band j's bucket key over ``_sig``: xxhash64
+    for the native tier, the portable polynomial fold for
+    minhash_lsh_portable — the one banding kernel both tiers share."""
     rows_per_band = num_perm // bands
-    # band key = xxhash64 over the band's signature rows directly (multi-arg
-    # hash of longs — no per-band string building)
     band_structs = F.array(
         *[
             F.struct(
-                F.lit(j).alias("band"),
-                F.xxhash64(
-                    *[
-                        F.element_at("_sig", j * rows_per_band + r + 1)
-                        for r in range(rows_per_band)
-                    ]
-                ).alias("bkey"),
+                F.lit(j).alias("band"), band_key(j, rows_per_band).alias("bkey")
             )
             for j in range(bands)
         ]
@@ -252,8 +253,6 @@ def _band_pairs(
     # pair space provably never depends on window internals. Measured
     # [see OPTIMIZATION_r13.md] at 10x/100x; candidate pairs
     # byte-identical.
-    from pyspark.sql import Window
-
     w = (
         Window.partitionBy("band", "bkey")
         .orderBy("_id")
@@ -275,6 +274,8 @@ def _band_pairs(
                     F.sequence(F.lit(1), F.size("ids") - 1),
                     lambda i: F.transform(
                         F.slice(F.col("ids"), i + 1, F.size("ids")),
+                        # i runs 1..size-1 and every collected bucket
+                        # holds >= 2 ids, so the index is always in range
                         lambda x: F.struct(
                             F.element_at(F.col("ids"), i).alias("id_a"), x.alias("id_b")
                         ),
@@ -283,7 +284,8 @@ def _band_pairs(
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b")
-    return pairs.distinct()
+    # a repeated id inside one bucket would pair with itself
+    return pairs.filter(F.col("id_a") < F.col("id_b")).distinct()
 
 
 def minhash_lsh_candidates(
@@ -361,6 +363,16 @@ def minhash_lsh_dedup(
 _PORTABLE_MOD = 1_000_000_007
 
 
+def _portable_band_key(j: int, rows: int) -> Column:
+    """Portable band key: the (h·131 + v) mod 1e9+7 polynomial over band
+    j's signature rows — the fold every oracle mirrors."""
+    return F.aggregate(
+        F.slice("_sig", j * rows + 1, rows),
+        F.lit(0).cast("long"),
+        lambda h, v: (h * 131 + v) % F.lit(_PORTABLE_MOD),
+    )
+
+
 def portable_perm_params(num_perm: int) -> list[tuple[int, int]]:
     """Deterministic (a, b) pairs for portable minhash permutations —
     plain integer literals both engines inline, no RNG state."""
@@ -391,7 +403,7 @@ def minhash_lsh_portable(
     arithmetic produces the identical candidate set and pair list — the
     property engine-native sketches (xxhash64 / HLL blobs) can never
     give an oracle. Same plan shape as minhash_lsh_dedup: one shingle
-    pass, banded bucket join with a pre-collect bucket cap, exact-
+    pass, the shared _band_pairs kernel (pre-collect bucket cap), exact-
     Jaccard verify on the hashed shingle sets. Returns
     (id_a, id_b, jaccard), id_a < id_b.
 
@@ -420,34 +432,9 @@ def minhash_lsh_portable(
         .withColumn("_sig", sig)
         .transform(ckpt, eager=True)
     )
-    band_structs = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band"),
-                F.aggregate(
-                    F.slice("_sig", j * rows_per_band + 1, rows_per_band),
-                    F.lit(0).cast("long"),
-                    lambda h, v: (h * 131 + v) % F.lit(_PORTABLE_MOD),
-                ).alias("bkey"),
-            )
-            for j in range(bands)
-        ]
-    )
-    banded = base.select("_id", F.explode(band_structs).alias("b")).select(
-        "_id", F.col("b.band").alias("band"), F.col("b.bkey").alias("bkey")
-    )
-    w = Window.partitionBy("band", "bkey")
-    capped = banded.withColumn("_bn", F.count(F.lit(1)).over(w)).filter(
-        F.col("_bn") <= max_bucket
-    )
-    cands = (
-        capped.select(F.col("_id").alias("id_a"), "band", "bkey")
-        .join(capped.select(F.col("_id").alias("id_b"), "band", "bkey"), ["band", "bkey"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-        .transform(ckpt, eager=True)
-    )
+    cands = _band_pairs(
+        base.select("_id", "_sig"), num_perm, bands, max_bucket, _portable_band_key
+    ).transform(ckpt, eager=True)
     fa = base.select(F.col("_id").alias("id_a"), F.col("_f").alias("f_a"))
     fb = base.select(F.col("_id").alias("id_b"), F.col("_f").alias("f_b"))
     jac = F.size(F.array_intersect("f_a", "f_b")) / F.size(F.array_union("f_a", "f_b"))
@@ -542,145 +529,6 @@ def simhash_portable_bits(col: Column | str) -> Column:
     )
 
 
-def simhash_chunks_from_fps_numpy():
-    """Arrow-batched numpy vote fold: array<long> token FINGERPRINTS →
-    array<long>[4] chunk keys, integer-identical to the
-    simhash_portable_bits vote fold + _pack_chunks (pinned in
-    tests/test_r13_guards.py). The boundary ships longs, not token
-    strings — the full-string twin (simhash_portable_chunks_numpy below)
-    measured 4.3x SLOWER at the 10x corpus (32.1 vs 7.4 s) because the
-    Arrow string transfer + per-token Python object conversion dwarfed
-    the vectorization win; fingerprints keep the O(chars) char fold in
-    codegen'd JVM expressions and vectorize only the O(64·tokens) vote
-    arithmetic, the same boundary split as minhash_signature_numpy."""
-    salts = np.array(
-        [2654435761 + 40503 * b for b in range(64)], dtype=np.uint64
-    )
-    mod31 = np.uint64(1 << 31)
-    pow2 = (1 << np.arange(15, -1, -1, dtype=np.int64))  # MSB-first
-    # ~48 MB ceiling for the (tokens × 64 × 8 B) vote intermediate
-    chunk_tokens = max(1, (48 * 2**20) // (64 * 8))
-
-    @F.pandas_udf("array<long>")
-    def sig(fps: pd.Series) -> pd.Series:
-        arrs = [np.asarray(h, dtype=np.uint64) for h in fps]
-        lens = np.fromiter((a.size for a in arrs), dtype=np.int64, count=len(arrs))
-        out: list[np.ndarray] = [np.zeros(4, dtype=np.int64)] * len(arrs)
-        i = 0
-        while i < len(arrs):
-            j, total = i, 0
-            while j < len(arrs) and (total == 0 or total + lens[j] <= chunk_tokens):
-                total += lens[j]
-                j += 1
-            idx = [k for k in range(i, j) if lens[k] > 0]
-            if idx:
-                flat = np.concatenate([arrs[k] for k in idx])
-                bits = ((flat[:, None] * salts[None, :]) % mod31) >> np.uint64(14)
-                votes = (2 * (bits & np.uint64(1)).astype(np.int64)) - 1
-                seg = np.zeros(len(idx), dtype=np.int64)
-                seg[1:] = np.cumsum(lens[idx][:-1])
-                sums = np.add.reduceat(votes, seg, axis=0)
-                outbits = (sums > 0).astype(np.int64)
-                chunks = np.stack(
-                    [outbits[:, c * 16:(c + 1) * 16] @ pow2 for c in range(4)],
-                    axis=1,
-                )
-                for pos, k in enumerate(idx):
-                    out[k] = chunks[pos]
-            i = j
-        return pd.Series(out)
-
-    return sig
-
-
-def simhash_portable_chunks_numpy():
-    """Arrow-batched numpy twin of simhash_portable_bits + _pack_chunks:
-    array<string> tokens → array<long>[4] chunk keys, INTEGER-IDENTICAL
-    to the expression fold (asserted in tests/test_r13_guards.py). The
-    justified-UDF case (guide §4.2), same as minhash_signature_numpy:
-    the per-token char-polynomial fingerprint and the 64-salt vote fold
-    are O(chars + 64·tokens) interpreted HOF steps per row — the
-    decomposed dominant cost of the simhash portable tier at the 100x
-    probe — and vectorize exactly in integer numpy.
-
-    Arithmetic parity notes:
-    - char codes: the fold does F.split(tok, "") + F.ascii → Java regex
-      split keeps a surrogate PAIR together and ascii() returns the full
-      code point, so Python's per-code-point view is the same sequence;
-      encoding each token as UTF-32-LE and reading uint32 words gives
-      exactly those code points with no per-char Python loop.
-    - Horner fold h ← (h·131 + code) mod 1e9+7 runs vectorized ACROSS
-      tokens, sequentially over char positions (left fold order
-      preserved; values < 2^38 fit uint64 exactly).
-    - vote bits: ((fp·salt) mod 2^31) >> 14 & 1 — products < 2^62.
-    - votes fold to per-doc sums with np.add.reduceat; bit set iff
-      vote sum strictly positive; chunks pack 16 bits MSB-first
-      (acc·2 + b), matching _pack_chunks.
-
-    Feed it a MATERIALIZED token array (eager ckpt) — the same
-    leaf-attribute discipline as minhash_signature_numpy."""
-    salts = np.array(
-        [2654435761 + 40503 * b for b in range(64)], dtype=np.uint64
-    )
-    mod31 = np.uint64(1 << 31)
-    fp_mod = np.uint64(FINGERPRINT_MOD)
-    fp_base = np.uint64(FINGERPRINT_BASE)
-    pow2 = (1 << np.arange(15, -1, -1, dtype=np.int64))  # MSB-first
-    # ~48 MB ceiling for the (tokens × 64 × 8 B) vote intermediate
-    chunk_tokens = max(1, (48 * 2**20) // (64 * 8))
-
-    @F.pandas_udf("array<long>")
-    def sig(toks: pd.Series) -> pd.Series:
-        n_docs = len(toks)
-        doc_tokens = [list(t) if t is not None else [] for t in toks]
-        doc_lens = np.fromiter(
-            (len(t) for t in doc_tokens), dtype=np.int64, count=n_docs
-        )
-        out: list[np.ndarray] = [np.zeros(4, dtype=np.int64)] * n_docs
-        i = 0
-        while i < n_docs:
-            j, total = i, 0
-            while j < n_docs and (total == 0 or total + doc_lens[j] <= chunk_tokens):
-                total += doc_lens[j]
-                j += 1
-            idx = [k for k in range(i, j) if doc_lens[k] > 0]
-            if idx:
-                flat_toks = [t for k in idx for t in doc_tokens[k]]
-                # code points, exactly Java's split("")+ascii sequence
-                buf = "".join(flat_toks).encode("utf-32-le")
-                codes = np.frombuffer(buf, dtype="<u4").astype(np.uint64)
-                tok_lens = np.fromiter(
-                    (len(t) for t in flat_toks), dtype=np.int64,
-                    count=len(flat_toks),
-                )
-                starts = np.zeros(len(flat_toks), dtype=np.int64)
-                starts[1:] = np.cumsum(tok_lens[:-1])
-                # Horner fold, vectorized across tokens
-                h = np.zeros(len(flat_toks), dtype=np.uint64)
-                max_len = int(tok_lens.max()) if len(tok_lens) else 0
-                for pos in range(max_len):
-                    m = tok_lens > pos
-                    h[m] = (h[m] * fp_base + codes[starts[m] + pos]) % fp_mod
-                # 64 vote bits per token → ±1 votes
-                bits = ((h[:, None] * salts[None, :]) % mod31) >> np.uint64(14)
-                votes = (2 * (bits & np.uint64(1)).astype(np.int64)) - 1
-                # per-doc vote sums (reduceat over doc segments)
-                seg = np.zeros(len(idx), dtype=np.int64)
-                seg[1:] = np.cumsum(doc_lens[idx][:-1])
-                sums = np.add.reduceat(votes, seg, axis=0)
-                outbits = (sums > 0).astype(np.int64)
-                chunks = np.stack(
-                    [outbits[:, c * 16:(c + 1) * 16] @ pow2 for c in range(4)],
-                    axis=1,
-                )
-                for pos, k in enumerate(idx):
-                    out[k] = chunks[pos]
-            i = j
-        return pd.Series(out)
-
-    return sig
-
-
 def _pack_chunks(bits: Column | str) -> Column:
     """array<long>[64] of bits → array<long>[4] of 16-bit chunk keys.
     Safe to inline over a MATERIALIZED bits column (attribute references
@@ -729,20 +577,17 @@ def simhash_portable_dedup(
             "simhash_portable_dedup generates 4 chunk keys, which guarantees "
             f"recall only for Hamming <= 3; got max_hamming={max_hamming}"
         )
-    # ROUND-13 MEASURED REJECTION (verdict item 4): Arrow/numpy twins of
-    # this signature pass were built, equivalence-pinned
-    # (tests/test_r13_guards.py) and A/B'd at the 10x corpus BEFORE
-    # wiring — and the expression fold WON. Full-string twin
-    # (simhash_portable_chunks_numpy): 32.1 s vs 7.4 s full-query — the
-    # Arrow string transfer + per-token Python object conversion dwarfs
-    # the vectorization. Fingerprint-split twin
-    # (simhash_chunks_from_fps_numpy, ships array<long>): warm signature
-    # noop 4.0 s vs the fold's 2.0 s — whole-stage codegen runs this
-    # integer zip_with fold faster than a pandas_udf round-trip at every
-    # scale probed. Unlike minhash (whose numpy signature won 23% at
-    # 100x), the simhash vote fold never leaves codegen's happy path.
-    # Both twins stay in this module with their pytests as the recorded
-    # rejection; the fold below remains the portable-spec shape.
+    # MEASURED REJECTION: Arrow/numpy twins of this signature pass were
+    # built, equivalence-checked and A/B'd at the 10x corpus — and the
+    # expression fold WON. A full-string twin ran 32.1 s vs 7.4 s
+    # full-query (the Arrow string transfer + per-token Python object
+    # conversion dwarfs the vectorization); a fingerprint-split twin
+    # shipping array<long> ran a warm signature noop in 4.0 s vs the
+    # fold's 2.0 s — whole-stage codegen runs this integer zip_with fold
+    # faster than a pandas_udf round-trip at every scale probed. Unlike
+    # minhash (whose numpy signature won 23% at 100x), the simhash vote
+    # fold never leaves codegen's happy path. Recorded in
+    # OPTIMIZATION_r13.md.
     sig = (
         df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
         # two projections ON PURPOSE: the vote fold materializes once in
@@ -757,6 +602,7 @@ def simhash_portable_dedup(
         .select("_id", _pack_chunks("_bits").alias("_ch"))
         .transform(ckpt, eager=True)
     )
+    # _pack_chunks always builds exactly 4 chunk keys: indices 1..4 are in range
     chunks = F.array(
         *[
             F.struct(
@@ -872,7 +718,7 @@ def simhash_dedup(
 
 # shared measured-routing helpers (ext/measure): the same dtype-aware
 # byte measure + width sizing the graph tier's edge prepartition uses
-from mesin_spark.ext.measure import partition_width, row_bytes_expr
+from mesin_spark.ext.measure import block_occupancy, partition_width, row_bytes_expr
 
 _row_bytes_expr = row_bytes_expr  # local alias, same discipline
 
@@ -1150,7 +996,8 @@ def bloom_member_flags(
         *[F.lit(w - (1 << 64) if w >= (1 << 63) else w).cast("long") for w in words]
     )
     # the SQL shiftleft takes expression operands (the Python wrapper
-    # doesn't), hence call_function
+    # doesn't), hence call_function; p is a pmod in [0, m), so the word
+    # index p div 64 + 1 never passes the ceil(m/64)-word bitset
     checks = [
         F.element_at(bitset, (p / 64).cast("int") + 1)
         .bitwiseAND(
@@ -1218,6 +1065,30 @@ def _threshold_num(threshold: float) -> int:
     from fractions import Fraction
 
     return max(math.floor(Fraction(str(threshold)) * 1_000_000) - 1, 0)
+
+
+def _rarest_first_prefix(flat: DataFrame, threshold: float) -> DataFrame:
+    """The pigeonhole prefix rows of a (blk, _id, _sz, _tok) frame: each
+    document's tokens ranked rarest-first by per-block frequency (ties by
+    token) and cut at _pigeonhole_prefix_len(_sz). Returns
+    (blk, _tok, _id, _sz). The freq join carries a shuffle_hash pin: both
+    sides are corpus-sized computed projections whose static estimates
+    undercount (the broadcast-OOM class the 100x probe caught)."""
+    freq = flat.groupBy("blk", "_tok").agg(F.count(F.lit(1)).alias("_f"))
+    w = Window.partitionBy("blk", "_id").orderBy("_f", "_tok")
+    return (
+        flat.join(freq.hint("shuffle_hash"), ["blk", "_tok"])
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") <= _pigeonhole_prefix_len("_sz", threshold))
+        .select("blk", "_tok", "_id", "_sz")
+    )
+
+
+#: byte cutoff of the shuffle route's pair-broadcast (~96 B per candidate
+#: pair row): a candidate table is one broadcast, unlike the per-side
+#: gram-table cutoff (verify_broadcast_max_bytes), which prices two
+#: hashed gram relations
+_PAIR_BROADCAST_MAX_BYTES = 256 * 2**20
 
 
 def _gram_verify_join(cands, ga, gb, base, verify_join, max_bytes):
@@ -1292,9 +1163,16 @@ def _gram_verify_join(cands, ga, gb, base, verify_join, max_bytes):
     # cands dropped the pruned rows anyway). Past the pair-count cutoff
     # (candidate sets at 100 TB that outgrow a safe broadcast) the old
     # double-pinned shape runs unchanged.
-    cands = ckpt(cands, eager=True)
-    n_pairs = cands.count()
-    if n_pairs * 96 <= max_bytes:
+    #
+    # The route probe is BOUNDED: only the first cut // 96 + 1 pairs are
+    # checkpointed and counted, so a candidate set past the cutoff never
+    # pays a full eager materialization before its shuffle route; under
+    # the cutoff that bounded checkpoint already holds every pair and
+    # becomes the broadcast side.
+    cut = _PAIR_BROADCAST_MAX_BYTES
+    head = ckpt(cands.limit(cut // 96 + 1), eager=True)
+    if head.count() * 96 <= cut:
+        cands = head
         ids_b = cands.select("blk", "id_b").distinct()
         gb_pruned = gb.join(F.broadcast(ids_b), ["blk", "id_b"], "leftsemi")
         return (
@@ -1410,26 +1288,13 @@ def ngram_jaccard_pairs(
         )
     if prefix_filter == "auto":
         # one extra (linear, metadata-result) pass: block occupancies →
-        # the exact all-pairs candidate count. The probe runs on a
-        # count-only projection (select("blk") prunes the gram arrays to
-        # a transient per-row expression — nothing materializes, nothing
-        # but blk shuffles), so deciding the route never pays for a full
-        # materialization of the blocked-gram projection. The chosen
-        # path then persist()s base below — unlike localCheckpoint,
-        # persist keeps lineage, so an executor loss recomputes the
-        # partition instead of killing the job (the 100 TB requirement).
-        # occupancy counts go through double BEFORE the multiply: long
-        # occ*(occ-1) overflows at ~3e9-doc blocks — exactly the
-        # mega-block case this probe exists to catch (ANSI mode would
-        # throw; non-ANSI wraps negative and mis-routes)
-        occ = base.select("blk").groupBy("blk").agg(
-            F.count(F.lit(1)).cast("double").alias("_occ")
-        )
-        row = occ.agg(
-            F.sum(F.col("_occ") * (F.col("_occ") - 1) / 2).alias("_pairs"),
-            F.sum("_occ").alias("_docs"),
-        ).collect()[0]
-        pairs_per_doc = (row["_pairs"] or 0.0) / max(row["_docs"] or 1.0, 1.0)
+        # the exact all-pairs candidate count, on a count-only projection,
+        # so deciding the route never pays for a full materialization of
+        # the blocked-gram projection. The chosen path then persist()s
+        # base below — unlike localCheckpoint, persist keeps lineage, so
+        # an executor loss recomputes the partition instead of killing
+        # the job (the 100 TB requirement).
+        pairs_per_doc, _ = block_occupancy(base)
         prefix_filter = pairs_per_doc > auto_pairs_per_doc
         # cache the blocked-gram projection for the chosen path: both join
         # sides (3 uses on the prefix path) share one shingle-hash pass.
@@ -1454,20 +1319,13 @@ def ngram_jaccard_pairs(
         flat = base.select(
             "blk", "_id", F.size("_g").alias("_sz"), F.explode("_g").alias("_tok")
         )
-        freq = flat.groupBy("blk", "_tok").agg(F.count(F.lit(1)).alias("_f"))
-        w = Window.partitionBy("blk", "_id").orderBy("_f", "_tok")
         # PINNED: the prefix frame feeds BOTH sides of the candidate
         # self-join, and the differing per-side projections defeat
         # exchange reuse — unpinned, the whole flat⋈freq+window pipeline
         # executed twice (measured at the 100x probe as pairs of
         # equal-value exchange accumulators: 576+536+406 MiB each side,
         # ~1.5 GiB of q_dedup_ngram's 3.3 GiB total)
-        prefix = PINNED.pin(
-            flat.join(freq.hint("shuffle_hash"), ["blk", "_tok"])
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= _pigeonhole_prefix_len("_sz", threshold))
-            .select("blk", "_tok", "_id", "_sz")
-        )
+        prefix = PINNED.pin(_rarest_first_prefix(flat, threshold))
         # carry blk all the way through: ids need not be globally unique
         # across blocks, and joining back by id alone would multiply rows
         # / form cross-block pairs the all-pairs path can never produce.
@@ -1694,37 +1552,19 @@ def ngram_containment_pairs(
             "the prefix path via truthiness)"
         )
     if prefix_filter == "auto":
-        # same measured routing as ngram_jaccard_pairs: block occupancies
-        # on a count-only projection → exact all-pairs candidate count;
-        # occupancy through double before the multiply (mega-block long
-        # overflow guard)
-        occ = base.select("blk").groupBy("blk").agg(
-            F.count(F.lit(1)).cast("double").alias("_occ")
-        )
-        row = occ.agg(
-            F.sum(F.col("_occ") * (F.col("_occ") - 1)).alias("_pairs"),
-            F.sum("_occ").alias("_docs"),
-        ).collect()[0]
+        # same measured routing as ngram_jaccard_pairs, doubled for
         # directed pairs: occ·(occ−1), not /2
-        pairs_per_doc = (row["_pairs"] or 0.0) / max(row["_docs"] or 1.0, 1.0)
-        prefix_filter = pairs_per_doc > auto_pairs_per_doc
+        undirected, _ = block_occupancy(base)
+        prefix_filter = 2 * undirected > auto_pairs_per_doc
         base = PINNED.pin(base)
     cont = F.size(F.array_intersect("g_a", "g_b")) / F.size("g_a")
     if prefix_filter:
         flat = base.select(
             "blk", "_id", F.size("_g").alias("_sz"), F.explode("_g").alias("_tok")
         )
-        freq = flat.groupBy("blk", "_tok").agg(F.count(F.lit(1)).alias("_f"))
-        w = Window.partitionBy("blk", "_id").orderBy("_f", "_tok")
         # contained-candidate prefix: ⌊(1−t)·|a|⌋+1 rarest grams
-        prefix_a = (
-            flat.join(freq.hint("shuffle_hash"), ["blk", "_tok"])
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") <= _pigeonhole_prefix_len("_sz", threshold))
-            .select(
-                "blk", "_tok",
-                F.col("_id").alias("id_a"), F.col("_sz").alias("sz_a"),
-            )
+        prefix_a = _rarest_first_prefix(flat, threshold).select(
+            "blk", "_tok", F.col("_id").alias("id_a"), F.col("_sz").alias("sz_a")
         )
         # the container side keeps FULL postings (it may miss any
         # particular prefix gram of a — only a's side pigeonholes)
@@ -2164,25 +2004,21 @@ def prefix_jaccard_pairs(
     bounded by prefix-token collisions; the verify is exact
     array-intersect Jaccard. Fully deterministic → oracle-checkable.
     Returns (id_a, id_b, jaccard), id_a < id_b."""
-    from pyspark.sql import Window
-
     toks = df.select(
         F.col(id_col).alias("_id"),
         F.array_distinct(tokens(F.col(text_col))).alias("_ts"),
     ).filter(F.size("_ts") > 0)
-    flat = toks.select("_id", F.explode("_ts").alias("tok"))
-    freq = flat.groupBy("tok").agg(F.count(F.lit(1)).alias("_f"))
-    w = Window.partitionBy("_id").orderBy("_f", "tok")
-    ranked = (
-        flat.join(freq, "tok")
-        .withColumn("_rn", F.row_number().over(w))
-        .withColumn("_sz", F.count(F.lit(1)).over(Window.partitionBy("_id")))
+    # one global block; _ts is already distinct, so size(_ts) is the
+    # document's token count
+    flat = toks.select(
+        F.lit(1).alias("blk"), "_id",
+        F.size("_ts").alias("_sz"), F.explode("_ts").alias("_tok"),
     )
-    prefix = ranked.filter(F.col("_rn") <= _pigeonhole_prefix_len("_sz", threshold))
-    a = prefix.select("tok", F.col("_id").alias("id_a"))
-    b = prefix.select("tok", F.col("_id").alias("id_b"))
+    prefix = _rarest_first_prefix(flat, threshold)
+    a = prefix.select("_tok", F.col("_id").alias("id_a"))
+    b = prefix.select("_tok", F.col("_id").alias("id_b"))
     cands = (
-        a.join(b, "tok").filter(F.col("id_a") < F.col("id_b"))
+        a.join(b, "_tok").filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b").distinct()
     )
     ta = toks.select(F.col("_id").alias("id_a"), F.col("_ts").alias("ts_a"))
@@ -2304,16 +2140,8 @@ def levenshtein_pairs(
     )
     if segment_filter == "auto":
         # count-only occupancy probe over DISTINCT names (the candidate
-        # universe); occupancies go through double before the multiply —
-        # the ngram probe's overflow discipline
-        occ = names.select("blk").groupBy("blk").agg(
-            F.count(F.lit(1)).cast("double").alias("_occ")
-        )
-        row = occ.agg(
-            F.sum(F.col("_occ") * (F.col("_occ") - 1) / 2).alias("_pairs"),
-            F.sum("_occ").alias("_docs"),
-        ).collect()[0]
-        pairs_per_doc = (row["_pairs"] or 0.0) / max(row["_docs"] or 1.0, 1.0)
+        # universe)
+        pairs_per_doc, _ = block_occupancy(names)
         segment_filter = pairs_per_doc > auto_pairs_per_doc
         names = PINNED.pin(names)
     if segment_filter:

@@ -7,9 +7,10 @@ report only their pruned scan width to the planner, which then routes
 corpus-sized tables into BroadcastExchanges (a driver OOM) or leaves a
 static multi-GiB frame re-exchanging every iterative round.
 
-Shared by ext/dedup (_gram_verify_join, dedup_clusters) and ext/graph
-(hits edge prepartition); see SHUFFLE.md's round-10/11 manual sections
-for the measured routings.
+Shared by ext/dedup (_gram_verify_join, dedup_clusters, the ngram and
+levenshtein "auto" routes), ext/similarity (embedding_neardup_pairs) and
+ext/graph (hits edge prepartition); see SHUFFLE.md's round-10/11 manual
+sections for the measured routings.
 """
 
 from __future__ import annotations
@@ -46,3 +47,24 @@ def partition_width(df: DataFrame, est_bytes: float,
         df.sparkSession.sparkContext.defaultParallelism,
         int(est_bytes / target_partition_bytes) + 1,
     )
+
+
+def block_occupancy(frame: DataFrame) -> tuple[float, float]:
+    """The count-only occupancy probe behind every blocked all-pairs
+    "auto" route: over ``frame``'s ``blk`` column, returns (undirected
+    all-pairs candidates per row, max block occupancy). Only ``blk``
+    reaches the aggregate, so nothing materializes and nothing but blk
+    shuffles. Occupancies go through double BEFORE the multiply: long
+    occ·(occ−1) overflows at ~3e9-row blocks — exactly the mega-block
+    case the probe exists to catch (ANSI mode would throw; non-ANSI
+    wraps negative and mis-routes)."""
+    occ = frame.select("blk").groupBy("blk").agg(
+        F.count(F.lit(1)).cast("double").alias("_occ")
+    )
+    row = occ.agg(
+        F.sum(F.col("_occ") * (F.col("_occ") - 1) / 2).alias("_pairs"),
+        F.sum("_occ").alias("_docs"),
+        F.max("_occ").alias("_max"),
+    ).collect()[0]
+    pairs_per_row = (row["_pairs"] or 0.0) / max(row["_docs"] or 1.0, 1.0)
+    return pairs_per_row, row["_max"] or 0.0

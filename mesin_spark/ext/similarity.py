@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from mesin_spark.ext.ckpt import ckpt
+from mesin_spark.ext.measure import block_occupancy
 from mesin_spark.ext.pin import PINNED
 
 from mesin_spark.functions import stable_round as R
@@ -75,13 +76,15 @@ def _cs_bound_pass(threshold: float) -> Column:
     16-term sum (no per-pair array allocations — the HOF slice/zip_with
     form of the same bound measured 43.1 s vs 5.0 s on the 100x band-0
     probe precisely because of the three per-pair allocations);
-    coalesce covers vectors shorter than the prefix (missing terms
-    contribute 0 and the rest norm is 0, so the bound degrades to the
-    exact dot — still correct)."""
+    vectors shorter than the prefix read NULL past their end
+    (try_element_at — a plain element_at throws under ANSI) and coalesce
+    makes those terms 0; their rest norm is 0 too, so the bound degrades
+    to the exact dot — still correct."""
     pd = None
     for i in range(1, _CS_PREFIX + 1):
         t = F.coalesce(
-            F.element_at("vec_a", i) * F.element_at("vec_b", i), F.lit(0.0)
+            F.try_element_at("vec_a", F.lit(i)) * F.try_element_at("vec_b", F.lit(i)),
+            F.lit(0.0),
         )
         pd = t if pd is None else pd + t
     return (pd + F.col("rn_a") * F.col("rn_b")) >= (
@@ -106,42 +109,6 @@ def cosine(a: Column, b: Column) -> Column:
     return let_bound(
         F.struct(_as_double(a).alias("a"), _as_double(b).alias("b")), _cos
     )
-
-
-def dot_fixed(a: Column, b: Column, dim: int) -> Column:
-    """``dot`` for a KNOWN dimension as a FLAT expression — bit-identical
-    values (same 0.0 seed, same IEEE left-fold in index order,
-    float→double casts exact).
-
-    MEASURED AND REJECTED for the q_dedup_embed hot path (round 12):
-    the theory was that higher-order functions evaluate outside
-    whole-stage codegen (interpreted lambda per element) so a flat
-    ``element_at`` chain would run at JVM speed. The 100x probe says
-    otherwise: wired into embedding_neardup_pairs, the flat forms ran
-    **1071.9 s vs 201.3 s** for the HOF fold in a same-host fresh-JVM
-    A/B — the 64-term dot per pair and bands×rows×dim signature terms
-    per row make expression trees large enough to leave codegen's happy
-    path and evaluate as per-node interpreted trees, which lose badly
-    to the HOF's tight fold loop. Kept (with norm_fixed /
-    portable_lsh_band_signature_flat and the equivalence pytest) as the
-    recorded rejection; do not re-wire without a fresh A/B."""
-    acc = F.lit(0.0)
-    for d in range(1, dim + 1):
-        acc = acc + (
-            F.element_at(a, d).cast("double")
-            * F.element_at(b, d).cast("double")
-        )
-    return acc
-
-
-def norm_fixed(a: Column, dim: int) -> Column:
-    """``norm`` for a KNOWN dimension as a flat codegen'd expression —
-    bit-identical fold order (see dot_fixed)."""
-    acc = F.lit(0.0)
-    for d in range(1, dim + 1):
-        x = F.element_at(a, d).cast("double")
-        acc = acc + x * x
-    return F.sqrt(acc)
 
 
 def lit_vector(vec: list[float]) -> Column:
@@ -670,31 +637,6 @@ def portable_lsh_band_signature(
     return sig
 
 
-def portable_lsh_band_signature_flat(
-    vec_col, band: int, rows: int, dim: int = 64
-) -> "Column":
-    """``portable_lsh_band_signature`` as a FLAT codegen'd expression —
-    the dot_fixed treatment for the ±1 plane projections: identical
-    weights (portable_plane_weight), identical 0.0-seeded IEEE
-    left-fold in index order, so every signature bit matches the HOF
-    form exactly (pytest-asserted), while the bands×rows×dim arithmetic
-    runs inside whole-stage codegen instead of one interpreted lambda
-    call per element. With ±1 weights each term is a codegen'd
-    multiply-add; repeated ``element_at(vec, d)`` across planes is
-    shared by Catalyst's subexpression elimination."""
-    sig = F.lit(0).cast("long")
-    for r in range(rows):
-        p = band * rows + r
-        acc = F.lit(0.0)
-        for d in range(dim):
-            acc = acc + (
-                F.element_at(vec_col, d + 1).cast("double")
-                * F.lit(portable_plane_weight(p, d, dim))
-            )
-        sig = sig + F.when(acc > 0, F.lit(1 << r)).otherwise(F.lit(0)).cast("long")
-    return sig
-
-
 def embedding_neardup_pairs(
     emb: DataFrame,
     threshold: float = 0.95,
@@ -749,16 +691,15 @@ def embedding_neardup_pairs(
     shuffle_hash pins: the vector frames are computed projections whose
     static size estimates undercount — the broadcast-OOM class the 100x
     sweep caught on the ngram prefix path."""
-    # ROUND-12 MEASURED REVERT: the "flatten to codegen" variant
-    # (dot_fixed / norm_fixed / portable_lsh_band_signature_flat wired in
-    # here, commit 16246b1) was probed at the 100x corpus AFTER the fact:
-    # 1071.9 s vs 201.3 s for this HOF shape in a same-host fresh-JVM A/B
-    # (artifacts/r12/probe100x_batch1.json vs probe_ab_preflat) — a 5.3x
-    # REGRESSION. The giant flat expression trees (64-term dot per pair,
-    # bands*rows*dim signature terms per row) leave whole-stage codegen's
-    # happy path and evaluate as per-node interpreted trees, which lose
-    # badly to the higher-order-function fold loops. The flat helpers stay
-    # in this module with the equivalence pytest as the recorded rejection.
+    # MEASURED REJECTION: flat element_at expressions for the dot, norm
+    # and band signatures (a "flatten to codegen" variant, commit 16246b1)
+    # ran 1071.9 s vs 201.3 s for this HOF shape at the 100x corpus in a
+    # same-host fresh-JVM A/B (artifacts/r12/probe100x_batch1.json vs
+    # probe_ab_preflat) — a 5.3x regression. The giant flat trees (64-term
+    # dot per pair, bands*rows*dim signature terms per row) leave
+    # whole-stage codegen's happy path and evaluate as per-node
+    # interpreted trees, which lose badly to the higher-order-function
+    # fold loops. Recorded in OPTIMIZATION_r12.md.
     if isinstance(candidates, str) and candidates != "auto":
         raise ValueError(
             f"candidates must be True, False, or 'auto' — got {candidates!r}"
@@ -778,15 +719,7 @@ def embedding_neardup_pairs(
         _cs_rest_norm(vd).alias("_rn"),
     )
     if candidates == "auto":
-        occ = base.select("blk").groupBy("blk").agg(
-            F.count(F.lit(1)).cast("double").alias("_occ")
-        )
-        row = occ.agg(
-            F.sum(F.col("_occ") * (F.col("_occ") - 1) / 2).alias("_pairs"),
-            F.sum("_occ").alias("_docs"),
-            F.max("_occ").alias("_max"),
-        ).collect()[0]
-        pairs_per_doc = (row["_pairs"] or 0.0) / max(row["_docs"] or 1.0, 1.0)
+        pairs_per_doc, max_occ = block_occupancy(base)
         candidates = pairs_per_doc > auto_pairs_per_doc
         if candidates and not approx_ok:
             raise ValueError(
@@ -804,7 +737,7 @@ def embedding_neardup_pairs(
             lsh_rows = min(
                 16,
                 max(4, math.ceil(math.log2(
-                    max((row["_max"] or 1.0) / lsh_target_occupancy, 2.0)
+                    max(max_occ / lsh_target_occupancy, 2.0)
                 ))),
             )
         base = PINNED.pin(base)
@@ -1080,15 +1013,17 @@ def sq8_code_col(vec_col: Column, lo: Column, hi: Column) -> Column:
     independent engine reproduces bit-for-bit (floor(+0.5) spells out
     the rounding rule instead of relying on an engine's CAST/round
     half-even behavior). Corpus bounds cover every stored vector, so
-    codes land in [0, 255] without clamping."""
+    codes land in [0, 255] without clamping. A vector longer than the
+    bounds arrays codes its extra dimensions 0 (try_element_at reads NULL
+    past the bounds' end, where a plain element_at throws under ANSI)."""
     return F.transform(
         vec_col,
         lambda x, i: F.when(
-            F.element_at(hi, i + 1) > F.element_at(lo, i + 1),
+            F.try_element_at(hi, i + 1) > F.try_element_at(lo, i + 1),
             F.floor(
-                (x.cast("double") - F.element_at(lo, i + 1))
+                (x.cast("double") - F.try_element_at(lo, i + 1))
                 * F.lit(255.0)
-                / (F.element_at(hi, i + 1) - F.element_at(lo, i + 1))
+                / (F.try_element_at(hi, i + 1) - F.try_element_at(lo, i + 1))
                 + F.lit(0.5)
             ),
         ).otherwise(F.lit(0).cast("long")),
@@ -1317,6 +1252,7 @@ def pq_portable_topk(
     coded = emb.select(F.col(id_col), *code_cols)
     dist = F.lit(0.0)
     for s in range(m):
+        # c{s} is a codeword id in [0, n_codes): always inside the LUT row
         dist = dist + F.element_at(
             F.array(*[F.lit(v) for v in lut[s]]), F.col(f"c{s}") + 1
         )

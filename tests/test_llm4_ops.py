@@ -641,6 +641,22 @@ def test_sq8_codes_range_and_reconstruction_bound(spark):
         ).alias("e")
     ).agg(F.max("e")).collect()[0][0]
     assert err <= 1e-9
+    # vectors shorter than, longer than, or missing against 2-dim bounds:
+    # extra dimensions code 0 (no ANSI index error), empty stays empty,
+    # NULL stays NULL
+    odd = spark.createDataFrame(
+        [(1, [0.5]), (2, []), (3, None), (4, [0.5, 1.0, 9.0])],
+        "id int, v array<double>",
+    ).select(
+        "id",
+        sq8_code_col(
+            F.col("v"),
+            F.array(F.lit(0.0), F.lit(0.0)),
+            F.array(F.lit(1.0), F.lit(1.0)),
+        ).alias("code"),
+    )
+    codes = {r.id: r.code for r in odd.collect()}
+    assert codes == {1: [128], 2: [], 3: None, 4: [128, 255, 0]}
 
 
 def test_sq8_topk_close_to_exact_l2(spark):

@@ -368,12 +368,20 @@ def test_lsh_band_bucket_capped_before_collect(spark):
     assert (9001, 9002) in found
     assert all(a >= 9001 for a, _ in found)
     # the cap must be applied BEFORE any bucket id-array is materialized:
-    # a spillable window count + filter sits upstream of the collect_list
-    # aggregate in the physical plan
+    # the spillable count window and its size filter sit upstream of (below,
+    # later in the tree string than) the collect_list window, and no
+    # aggregate collects ids at all
+    import re
+
     plan = cands._jdf.queryExecution().executedPlan().toString()
-    win = plan.index("Window")
-    agg = plan.index("ObjectHashAggregate")
-    assert agg < win, "window cap must be below (after) the collect aggregate"
+    collect_win = plan.index("Window [collect_list(")
+    cap = re.search(r"Filter \(\(_n#\d+L >= 2\) AND \(_n#\d+L <= 64\)\)", plan)
+    count_win = plan.index("Window [count(1)")
+    assert cap is not None, "bucket-size cap filter missing from the plan"
+    assert collect_win < cap.start() < count_win, (
+        "count-window cap filter must be below (after) the collect_list window"
+    )
+    assert "ObjectHashAggregate" not in plan
     small = D.minhash_lsh_candidates(df, "doc_id", max_bucket=512)
     assert small.count() == 100 * 99 // 2 + 1
 
@@ -682,49 +690,6 @@ def test_embedding_neardup_lsh_route_clone_recall(spark, emb):
     assert not any(b >= 200000 for _a, b in found)
     with pytest.raises(ValueError, match="candidates must be"):
         S.embedding_neardup_pairs(df, candidates="yes")
-
-
-def test_flat_vector_exprs_bit_identical_to_hof(spark, emb):
-    """The flat codegen'd vector expressions (dot_fixed / norm_fixed /
-    portable_lsh_band_signature_flat — the round-12 q_dedup_embed CPU
-    fix) must be BIT-IDENTICAL to the higher-order-function forms they
-    replace: same 0.0 seed, same IEEE left-fold in index order, exact
-    float→double casts. Exact double equality over real fixture
-    vectors, not a tolerance — any reordering would show up here."""
-    from mesin_spark.ext.similarity import (
-        _as_double, dot, dot_fixed, norm, norm_fixed,
-        portable_lsh_band_signature, portable_lsh_band_signature_flat,
-    )
-
-    base = emb.select("vec_id", "embedding").orderBy("vec_id").limit(200)
-    dim = len(base.head()["embedding"])
-    vd = _as_double(F.col("embedding"))
-    rows = base.select(
-        norm(vd).alias("n_hof"),
-        norm_fixed(F.col("embedding"), dim).alias("n_flat"),
-        *[
-            portable_lsh_band_signature(vd, b, 8, dim).alias(f"s{b}_hof")
-            for b in range(3)
-        ],
-        *[
-            portable_lsh_band_signature_flat(
-                F.col("embedding"), b, 8, dim
-            ).alias(f"s{b}_flat")
-            for b in range(3)
-        ],
-    ).collect()
-    for r in rows:
-        assert r["n_hof"] == r["n_flat"]  # exact, not approx
-        for b in range(3):
-            assert r[f"s{b}_hof"] == r[f"s{b}_flat"]
-    # pairwise dot over a small self-join (distinct vectors both sides)
-    a = base.selectExpr("vec_id AS ia", "embedding AS ea").limit(40)
-    b = base.selectExpr("vec_id AS ib", "embedding AS eb").limit(40)
-    prs = a.crossJoin(b).select(
-        dot(_as_double(F.col("ea")), _as_double(F.col("eb"))).alias("d_hof"),
-        dot_fixed(F.col("ea"), F.col("eb"), dim).alias("d_flat"),
-    ).collect()
-    assert prs and all(r["d_hof"] == r["d_flat"] for r in prs)
 
 
 def test_embedding_neardup_auto_routing_by_occupancy(spark, emb):

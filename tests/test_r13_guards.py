@@ -22,16 +22,6 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_DIR
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    from mesin_spark.sources import read_parquet
-    import os
-
-    return read_parquet(spark, os.path.join(SF_DIR, "documents.parquet"))
-
 
 # -- 1. let_bound fed to a pandas UDF ---------------------------------------
 
@@ -180,105 +170,18 @@ def test_reduceat_empties_interleaved(spark):
             assert got[i] == [_MERSENNE] * 64, f"doc {i}"
 
 
-# -- simhash numpy twin: integer-identical to the expression fold -----------
-
-
-def test_simhash_numpy_matches_fold(spark):
-    from mesin_spark.ext.ckpt import ckpt
-    from mesin_spark.ext.dedup import (
-        _pack_chunks,
-        simhash_portable_bits,
-        simhash_portable_chunks_numpy,
-    )
-    from mesin_spark.ext.text import tokens
-
-    rows = [
-        (0, "the quick brown fox jumps over the lazy dog"),
-        (1, ""),  # empty doc -> no tokens -> all-zero votes -> chunks 0
-        (2, "   "),  # whitespace only
-        (3, "Der schnelle braune Fuchs üöä ß"),  # non-ASCII BMP chars
-        (4, "的 了 是 在 我 有 和 不"),  # CJK
-        (5, "a b c d e f g h i j k l m n o p q r s t u v w x y z"),
-        (6, "repeated repeated repeated repeated token token"),
-        (7, "MiXeD CaSe ToKeNs lower UPPER"),
-        (8, "x" * 500),  # one long token
-        (9, "short"),
-    ] + [(100 + i, f"doc number {i} with words alpha beta gamma {i*7}") for i in range(40)]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    fold = {
-        r.doc_id: list(r.ch)
-        for r in df.select(
-            "doc_id", simhash_portable_bits(F.col("text")).alias("_bits")
-        ).select("doc_id", _pack_chunks("_bits").alias("ch")).collect()
-    }
-    toks = ckpt(
-        df.select("doc_id", tokens("text").alias("_t")), eager=True
-    )
-    np_ = {
-        r.doc_id: list(r.ch)
-        for r in toks.select(
-            "doc_id", simhash_portable_chunks_numpy()(F.col("_t")).alias("ch")
-        ).collect()
-    }
-    assert fold == np_ and len(fold) == 50
-    # the fingerprint-split twin (array<long> boundary) must also match
-    from mesin_spark.ext.dedup import simhash_chunks_from_fps_numpy
-    from mesin_spark.ext.sketches import token_fingerprint
-
-    fps = ckpt(
-        df.select(
-            "doc_id",
-            F.transform(tokens("text"), token_fingerprint).alias("_fps"),
-        ),
-        eager=True,
-    )
-    np_fps = {
-        r.doc_id: list(r.ch)
-        for r in fps.select(
-            "doc_id", simhash_chunks_from_fps_numpy()(F.col("_fps")).alias("ch")
-        ).collect()
-    }
-    assert fold == np_fps
-
-
-def test_simhash_numpy_fixture_docs(spark, docs):
-    """Same equivalence over real fixture documents (the corpus the
-    oracle certifies against)."""
-    from mesin_spark.ext.ckpt import ckpt
-    from mesin_spark.ext.dedup import (
-        _pack_chunks,
-        simhash_portable_bits,
-        simhash_portable_chunks_numpy,
-    )
-    from mesin_spark.ext.text import tokens
-
-    d = docs.limit(200)
-    fold = {
-        r.doc_id: list(r.ch)
-        for r in d.select(
-            "doc_id", simhash_portable_bits(F.col("text")).alias("_bits")
-        ).select("doc_id", _pack_chunks("_bits").alias("ch")).collect()
-    }
-    toks = ckpt(d.select("doc_id", tokens("text").alias("_t")), eager=True)
-    np_ = {
-        r.doc_id: list(r.ch)
-        for r in toks.select(
-            "doc_id", simhash_portable_chunks_numpy()(F.col("_t")).alias("ch")
-        ).collect()
-    }
-    assert fold == np_ and len(fold) == 200
-
-
 # -- verify-join shuffle restructure (round 13): all routes identical -------
 
 
-def test_gram_verify_shuffle_routes_identical(spark):
+def test_gram_verify_shuffle_routes_identical(spark, monkeypatch):
     """The round-13 shuffle-route restructure (broadcast the checkpointed
     candidate pairs + semi-prune the container gram side) and its
-    past-the-cutoff fallback (the old double-pinned shape, forced here
-    with verify_broadcast_max_bytes=0) must return identical pairs to
-    the broadcast route."""
-    from mesin_spark.ext.dedup import ngram_containment_pairs
+    past-the-cutoff fallback (the old double-pinned shape) must return
+    identical pairs to the broadcast route. The bounded pair-count probe
+    is pinned exactly at its cutoff: n candidate pairs at 96 B each take
+    the pair-broadcast route (read from the plan's leftsemi prune) when
+    96·n fits and fall back one byte below it."""
+    import mesin_spark.ext.dedup as D
 
     rows = []
     for i in range(30):
@@ -290,20 +193,29 @@ def test_gram_verify_shuffle_routes_identical(spark):
                  base + " " + " ".join(f"pad{i}y{j}" for j in range(25)))
             )
     df = spark.createDataFrame(rows, "doc_id long, src string, text string")
-    got = {}
-    for label, kw in (
-        ("broadcast", dict(verify_join="broadcast")),
-        ("shuffle_new", dict(verify_join="shuffle")),
-        ("shuffle_fallback", dict(verify_join="shuffle",
-                                  verify_broadcast_max_bytes=0)),
-    ):
-        got[label] = sorted(
-            tuple(r)
-            for r in ngram_containment_pairs(
-                df, "doc_id", block_col="src", prefix_filter=True,
-                threshold=0.8, collapse_dups=False, **kw
-            ).collect()
+    counts = []
+    real = D._gram_verify_join
+
+    def spy(cands, *args):
+        counts.append(cands.count())
+        return real(cands, *args)
+
+    monkeypatch.setattr(D, "_gram_verify_join", spy)
+
+    def run(verify_join):
+        out = D.ngram_containment_pairs(
+            df, "doc_id", block_col="src", prefix_filter=True,
+            threshold=0.8, collapse_dups=False, verify_join=verify_join,
         )
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        return sorted(tuple(r) for r in out.collect()), plan
+
+    got = {"broadcast": run("broadcast")[0]}
+    n = counts[0]
+    for label, cut in (("shuffle_new", 96 * n), ("shuffle_fallback", 96 * n - 1)):
+        monkeypatch.setattr(D, "_PAIR_BROADCAST_MAX_BYTES", cut)
+        got[label], plan = run("shuffle")
+        assert ("LeftSemi" in plan) == (label == "shuffle_new"), label
     assert got["broadcast"] == got["shuffle_new"] == got["shuffle_fallback"]
     assert len(got["broadcast"]) > 0
 
@@ -318,17 +230,24 @@ def test_cs_prefilter_exact_vs_bruteforce(spark):
     NO prefilter, at a low threshold that puts many pairs near the
     boundary, on vectors with energy concentrated in the TAIL (the
     prefilter's weakest case: prefix dot ~0, bound dominated by rest
-    norms)."""
+    norms). Dims around and below the 16-term prefix (2, 15, 16, 17)
+    pin the short-vector path: the prefix terms past a vector's end must
+    read as 0 — under ANSI a raw element_at there throws."""
     import random
 
-    from mesin_spark.ext.similarity import embedding_neardup_pairs
+    from mesin_spark.ext.similarity import (
+        _as_double, dot, embedding_neardup_pairs, norm,
+    )
+    from mesin_spark.functions import stable_round as R
 
+    # one block per dim (pairs never cross blocks), so one job covers all
     rng = random.Random(13)
     rows = []
-    for i in range(60):
-        head = [rng.uniform(-0.05, 0.05) for _ in range(16)]
-        tail = [rng.uniform(-1, 1) for _ in range(48)]
-        rows.append((i, "b", head + tail))
+    for k, dim in enumerate((64, 2, 15, 16, 17)):
+        for i in range(60):
+            head = [rng.uniform(-0.05, 0.05) for _ in range(min(dim, 16))]
+            tail = [rng.uniform(-1, 1) for _ in range(dim - 16)]
+            rows.append((1000 * k + i, f"d{dim}", head + tail))
     df = spark.createDataFrame(rows, "id long, blk string, v array<double>")
     got = sorted(
         tuple(r)
@@ -338,23 +257,23 @@ def test_cs_prefilter_exact_vs_bruteforce(spark):
         ).collect()
     )
     # brute force in the same engine arithmetic, no prefilter
-    from mesin_spark.ext.similarity import _as_double, dot, norm
-    from mesin_spark.functions import stable_round as R
-
-    a = df.select(F.col("id").alias("id_a"),
+    a = df.select(F.col("id").alias("id_a"), F.col("blk").alias("blk_a"),
                   _as_double(F.col("v")).alias("va"))
-    b = df.select(F.col("id").alias("id_b"),
+    b = df.select(F.col("id").alias("id_b"), F.col("blk").alias("blk_b"),
                   _as_double(F.col("v")).alias("vb"))
-    sim = R(dot(F.col("va"), F.col("vb")) / (norm(F.col("va")) * norm(F.col("vb"))), 6)
+    sim = R(dot(F.col("va"), F.col("vb"))
+            / (norm(F.col("va")) * norm(F.col("vb"))), 6)
     want = sorted(
         tuple(r)
-        for r in a.crossJoin(b)
+        for r in a.join(b, F.col("blk_a") == F.col("blk_b"))
         .filter(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b", sim.alias("sim"))
         .filter(F.col("sim") >= 0.3)
         .collect()
     )
-    assert got == want and len(want) > 0
+    assert got == want
+    # every dim contributes boundary-region pairs
+    assert {a // 1000 for a, _b, _s in want} == set(range(5))
 
 
 # -- 3. NULL-vector guard ----------------------------------------------------

@@ -1,7 +1,8 @@
 """Dump .explain("formatted") for headline (and named extra) queries into
-plans/r13/<query>_<tag>.txt — the optimization round's plan evidence.
+plans/<round>/<query>_<tag>.txt — an optimization round's plan evidence.
 
-Usage: python tools/dump_r13_plans.py <tag> [query ...]
+Usage: python tools/dump_round_plans.py <round> <tag> [query ...]
+       e.g. python tools/dump_round_plans.py r13 after q_dedup_minhash
        (no query args = the full bench HEADLINE list)
 """
 
@@ -17,15 +18,17 @@ from mesin_spark.session import get_session  # noqa: E402
 
 
 def main() -> None:
-    tag = sys.argv[1] if len(sys.argv) > 1 else "before"
+    if len(sys.argv) < 3:
+        sys.exit(__doc__)
+    round_name, tag = sys.argv[1], sys.argv[2]
     import __spark_entry__ as entrymod
     from bench import HEADLINE
 
-    names = sys.argv[2:] or HEADLINE
+    names = sys.argv[3:] or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    spark = get_session("dump_r13_plans")
+    spark = get_session("dump_round_plans")
     registry = entrymod.queries()
-    out_dir = os.path.join(REPO_ROOT, "plans", "r13")
+    out_dir = os.path.join(REPO_ROOT, "plans", round_name)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         try:

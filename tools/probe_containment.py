@@ -21,7 +21,7 @@ def main() -> int:
     scaled = sys.argv[1]
     out_path = sys.argv[2] if len(sys.argv) > 2 else None
 
-    from pyspark.sql import functions as F, Window
+    from pyspark.sql import functions as F
     from mesin_spark.session import get_session
     from mesin_spark.sources import read_parquet
     from mesin_spark.ext import dedup as D
@@ -45,14 +45,8 @@ def main() -> int:
              grams.alias("_g"))
     flat = base.select("blk", "_id", F.size("_g").alias("_sz"),
                        F.explode("_g").alias("_tok"))
-    freq = flat.groupBy("blk", "_tok").agg(F.count(F.lit(1)).alias("_f"))
-    w = Window.partitionBy("blk", "_id").orderBy("_f", "_tok")
-    prefix_a = (
-        flat.join(freq.hint("shuffle_hash"), ["blk", "_tok"])
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= D._pigeonhole_prefix_len("_sz", 0.8))
-        .select("blk", "_tok", F.col("_id").alias("id_a"),
-                F.col("_sz").alias("sz_a"))
+    prefix_a = D._rarest_first_prefix(flat, 0.8).select(
+        "blk", "_tok", F.col("_id").alias("id_a"), F.col("_sz").alias("sz_a")
     )
     post_b = flat.select("blk", "_tok", F.col("_id").alias("id_b"),
                          F.col("_sz").alias("sz_b"))
