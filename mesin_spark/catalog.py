@@ -20,6 +20,7 @@ import os
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 #: The driver-generated star schema + LLM-pipeline tables (TESTDATA.md).
 TESTDATA_TABLES = (
@@ -40,6 +41,24 @@ TESTDATA_TABLES = (
 #: with SF but stay far below fact-table size — broadcast up to the
 #: autoBroadcastJoinThreshold, which AQE also re-checks at runtime.)
 BROADCAST_DIMS = frozenset({"region", "nation", "supplier", "part", "customer"})
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: StructType | str) -> DataFrame:
+    """A small driver-built result frame (status rows, plan text, audit
+    records, empty typed tables) as an Arrow-backed LocalRelation:
+    collecting it runs no Spark job, where ``createDataFrame(list)``
+    plans a Python RDD and runs one. For engine-built rows only: user
+    rows (``insert_values``) stay on the list path, which converts naive
+    datetimes through local time."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    table = pa.Table.from_pylist(
+        [dict(zip(schema.names, r)) for r in rows], schema=to_arrow_schema(schema)
+    )
+    return spark.createDataFrame(table)
 
 
 class CatalogError(ValueError):
@@ -74,6 +93,9 @@ class Catalog:
         self.spark = spark
         self.tables: dict[str, TableMeta] = {}
         self.indexes: dict[str, IndexMeta] = {}
+        # table path -> ((data dir, file listing), frame read at that
+        # listing); see ManagedTable.df. Session state, never saved.
+        self.frames: dict[str, tuple[tuple, DataFrame]] = {}
 
     # -- registration ------------------------------------------------------
     def register_parquet(self, name: str, path: str) -> DataFrame:
@@ -129,7 +151,7 @@ class Catalog:
             ),
         }
         for name, schema in schemas.items():
-            self.register_dataframe(name, self.spark.createDataFrame([], schema))
+            self.register_dataframe(name, local_frame(self.spark, [], schema))
 
     # -- resolution --------------------------------------------------------
     def table(self, name: str) -> DataFrame:
@@ -143,7 +165,7 @@ class Catalog:
                 return
             raise CatalogError(f"Table '{name}' does not exist in database")
         self.spark.catalog.dropTempView(name)
-        del self.tables[name]
+        self.frames.pop(self.tables.pop(name).path, None)
         # cascade: drop indexes on the table (reference DROP TABLE has a
         # CASCADE flag, logical_plan.rs:75-79; indexes are our only dependents)
         for iname in [i for i, m in self.indexes.items() if m.table == name]:

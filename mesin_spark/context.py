@@ -30,7 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
-from mesin_spark.catalog import TESTDATA_TABLES, Catalog
+from mesin_spark.catalog import TESTDATA_TABLES, Catalog, local_frame
 from mesin_spark.session import get_session
 
 #: Reference dialect surface (src/lib.rs:9-23).
@@ -1056,7 +1056,7 @@ class ExecutionContext:
                     "EXPLAIN supports query statements (SELECT/WITH/VALUES)"
                 )
             plan = self.explain(inner)
-            return self.spark.createDataFrame([(plan,)], "plan string")
+            return local_frame(self.spark, [(plan,)], "plan string")
         from mesin_spark import sql_dml
 
         if sql_dml.is_dml(stmt):

@@ -38,7 +38,7 @@ from pyspark.sql import types as Ty
 
 from mesin_spark.ext.ckpt import ckpt
 
-from mesin_spark.catalog import Catalog, CatalogError, IndexMeta, TableMeta
+from mesin_spark.catalog import Catalog, CatalogError, IndexMeta, TableMeta, local_frame
 
 
 class ConstraintViolation(CatalogError):
@@ -107,6 +107,22 @@ class ColumnDefinition:
 
     def to_field(self) -> Ty.StructField:
         return Ty.StructField(self.name, ddl_type(self.data_type), self.nullable)
+
+
+def _listing(data_dir: str) -> tuple:
+    """Sorted (file, size, mtime_ns) of every file under ``data_dir`` (or
+    of the file itself): a stat walk, no footer opened."""
+    if os.path.isfile(data_dir):
+        st = os.stat(data_dir)
+        return (("", st.st_size, st.st_mtime_ns),)
+    out = []
+    for root, _dirs, files in os.walk(data_dir):
+        for fname in files:
+            p = os.path.join(root, fname)
+            with contextlib.suppress(FileNotFoundError):
+                st = os.stat(p)
+                out.append((os.path.relpath(p, data_dir), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
 
 
 class ManagedTable:
@@ -233,8 +249,8 @@ class ManagedTable:
             )
             for r in recs
         ]
-        return self.spark.createDataFrame(
-            rows, "version BIGINT, op STRING, ts DOUBLE, details STRING"
+        return local_frame(
+            self.spark, rows, "version BIGINT, op STRING, ts DOUBLE, details STRING"
         )
 
     def enable_versioning(self) -> int:
@@ -512,13 +528,28 @@ class ManagedTable:
 
     # -- read --------------------------------------------------------------
     def df(self) -> DataFrame:
-        # the robust reader, not bare spark.read.parquet: an imported
-        # table with ns-timestamp or NTZ columns must read identically
-        # to how register_parquet exposed it (footer inspection is
-        # driver-side metadata, cheap relative to any DML that follows)
+        """The current version as a frame. The robust reader, not bare
+        spark.read.parquet: an imported table with ns-timestamp or NTZ
+        columns must read identically to how register_parquet exposed
+        it. A read is not cheap: every footer is opened, and
+        spark.read.parquet runs a schema-inference job per call (0.10-0.12
+        s each on a 4-core host at sf0.01). So with a catalog, the frame
+        is kept in ``Catalog.frames`` and handed back while the data dir
+        and its files (name, size, mtime) are unchanged; a commit, a
+        write from another session or an out-of-band file changes that
+        key and the next call reads again."""
         from mesin_spark.sources import read_parquet
 
-        return read_parquet(self.spark, self._data_dir())
+        data_dir = self._data_dir()
+        if self.catalog is None:
+            return read_parquet(self.spark, data_dir)
+        key = (data_dir, _listing(data_dir))
+        hit = self.catalog.frames.get(self.path)
+        if hit is not None and hit[0] == key:
+            return hit[1]
+        df = read_parquet(self.spark, data_dir)
+        self.catalog.frames[self.path] = (key, df)
+        return df
 
     def _refresh_view(self) -> None:
         df = self.df()
@@ -1119,7 +1150,7 @@ class DdlSession:
             raise CatalogError(f"Table '{name}' already exists")
         schema = Ty.StructType([c.to_field() for c in columns])
         path = os.path.join(self.base_dir, name)
-        self.spark.createDataFrame([], schema=schema).write.mode("overwrite").parquet(path)
+        local_frame(self.spark, [], schema).write.mode("overwrite").parquet(path)
         df = self.spark.read.parquet(path)
         self.catalog.register_dataframe(name, df, path=path)
         meta = self.catalog.tables[name]

@@ -998,8 +998,10 @@ def sq8_bounds(emb: DataFrame, vec_col: str = "embedding", dim: int = 64) -> Dat
     single scan + a 1-row reduce — the training pass of a FAISS-style
     SQ8 ScalarQuantizer (public design: faiss ScalarQuantizer,
     QT_8bit)."""
-    lows = [F.min(F.col(vec_col)[d].cast("double")).alias(f"_lo{d}") for d in range(dim)]
-    highs = [F.max(F.col(vec_col)[d].cast("double")).alias(f"_hi{d}") for d in range(dim)]
+    # F.get reads NULL past a short vector's end (a bare [d] throws under
+    # ANSI), and min/max skip NULLs
+    lows = [F.min(F.get(F.col(vec_col), d).cast("double")).alias(f"_lo{d}") for d in range(dim)]
+    highs = [F.max(F.get(F.col(vec_col), d).cast("double")).alias(f"_hi{d}") for d in range(dim)]
     return emb.agg(*lows, *highs).select(
         F.array(*[F.col(f"_lo{d}") for d in range(dim)]).alias("lo"),
         F.array(*[F.col(f"_hi{d}") for d in range(dim)]).alias("hi"),

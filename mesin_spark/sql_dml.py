@@ -25,6 +25,7 @@ import re
 
 from pyspark.sql import DataFrame
 
+from mesin_spark.catalog import local_frame
 from mesin_spark.dml import ColumnDefinition, DdlSession
 
 #: Statement keywords this router owns; anything else is a query and
@@ -129,8 +130,9 @@ _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 
 
 def _status(sess: DdlSession, statement: str, target: str, n: int) -> DataFrame:
-    return sess.spark.createDataFrame(
-        [(statement, target, n)], "statement string, target string, rows_affected long"
+    return local_frame(
+        sess.spark, [(statement, target, n)],
+        "statement string, target string, rows_affected long",
     )
 
 
@@ -316,18 +318,19 @@ def _analyze(sess: DdlSession, sql: str) -> DataFrame:
     meta.properties["stats_path"] = stats_path
     meta.properties["stats_columns"] = cols
     rows = [
-        {
-            "col": c,
-            "n": int(r["n"]),
-            "n_null": int(r["n_null"]),
-            "ndv": int(r["ndv"]),
-            "min_v": float(r["min_v"]) if r["min_v"] is not None else None,
-            "max_v": float(r["max_v"]) if r["max_v"] is not None else None,
-        }
+        (
+            c,
+            int(r["n"]),
+            int(r["n_null"]),
+            int(r["ndv"]),
+            float(r["min_v"]) if r["min_v"] is not None else None,
+            float(r["max_v"]) if r["max_v"] is not None else None,
+        )
         for c, r in stats.summary.items()
     ]
-    return sess.spark.createDataFrame(
-        rows, "col STRING, n BIGINT, n_null BIGINT, ndv BIGINT, min_v DOUBLE, max_v DOUBLE"
+    return local_frame(
+        sess.spark, rows,
+        "col STRING, n BIGINT, n_null BIGINT, ndv BIGINT, min_v DOUBLE, max_v DOUBLE",
     )
 
 
@@ -603,7 +606,8 @@ def _refresh(sess: DdlSession, sql: str) -> DataFrame:
     from mesin_spark.ext.matview import open_agg_view_by_name
 
     st = open_agg_view_by_name(sess, m.group(1)).refresh()
-    return sess.spark.createDataFrame(
+    return local_frame(
+        sess.spark,
         [(
             "REFRESH MATERIALIZED VIEW", m.group(1), st.delta_rows,
             st.groups_touched, st.from_version, st.to_version,
@@ -704,7 +708,7 @@ def _show(sess: DdlSession, sql: str) -> DataFrame:
             for k, v in sorted(props.items())
         )
         ddl += f"\nPROPERTIES ({kv})"
-    return sess.spark.createDataFrame([(name, ddl)], "table string, create_stmt string")
+    return local_frame(sess.spark, [(name, ddl)], "table string, create_stmt string")
 
 
 def _restore(sess: DdlSession, sql: str) -> DataFrame:

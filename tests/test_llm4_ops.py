@@ -657,6 +657,13 @@ def test_sq8_codes_range_and_reconstruction_bound(spark):
     )
     codes = {r.id: r.code for r in odd.collect()}
     assert codes == {1: [128], 2: [], 3: None, 4: [128, 255, 0]}
+    # bounds over short, empty and NULL vectors: the missing dimensions
+    # are skipped (no ANSI index error), not read as 0
+    short = spark.createDataFrame(
+        [([0.1, 0.2],), ([0.3],), ([],), (None,)], "embedding array<double>"
+    )
+    b = sq8_bounds(short, dim=2).collect()[0]
+    assert (b.lo, b.hi) == ([0.1, 0.2], [0.3, 0.2])
 
 
 def test_sq8_topk_close_to_exact_l2(spark):

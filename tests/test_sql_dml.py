@@ -894,3 +894,190 @@ def test_orphan_version_dir_from_crashed_writer_is_cleared(ctx, spark):
     os.makedirs(os.path.join(mt.path, "v00003"))
     ctx.execute("RESTORE orph TO VERSION 1")
     assert ctx.execute("SELECT count(*) AS n FROM orph").collect()[0]["n"] == 5000
+
+
+# -- driver-built result frames and committed-version frame reuse ----------
+
+
+def _jobs_to_collect(spark, df):
+    """Spark jobs started by ``df.collect()``, counted by job group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"collect-{uuid.uuid4().hex[:8]}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_dml_and_explain_result_frames_start_no_job(ctx, spark):
+    ctx.execute("CREATE TABLE rf (k BIGINT, v DOUBLE, s STRING)")
+    frames = {
+        "INSERT": ctx.execute("INSERT INTO rf VALUES (1, 1.0, 'a'), (2, NULL, NULL)"),
+        "UPDATE": ctx.execute("UPDATE rf SET v = 5.0 WHERE k = 2"),
+        "DELETE": ctx.execute("DELETE FROM rf WHERE k = 1"),
+        "MERGE": ctx.execute(
+            "MERGE INTO rf USING (SELECT * FROM VALUES (2, 7.0, 'b') AS s(k, v, s))"
+            " AS s ON rf.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v"
+        ),
+        "EXPLAIN": ctx.execute("EXPLAIN SELECT * FROM rf"),
+    }
+    assert {k: _jobs_to_collect(spark, f) for k, f in frames.items()} == dict.fromkeys(frames, 0)
+    status = spark.createDataFrame([], "statement string, target string, rows_affected long")
+    for stmt, n in (("INSERT", 2), ("UPDATE", 1), ("DELETE", 1), ("MERGE", 1)):
+        assert frames[stmt].schema == status.schema
+        assert [tuple(r) for r in frames[stmt].collect()] == [(stmt, "rf", n)]
+    assert frames["EXPLAIN"].schema == spark.createDataFrame([], "plan string").schema
+    assert "rf" in frames["EXPLAIN"].collect()[0]["plan"].lower()
+
+
+_LOCAL_FRAME_CASES = {
+    "status": ("statement string, target string, rows_affected long", [("INSERT", "t", 3)]),
+    "analyze": (
+        "col STRING, n BIGINT, n_null BIGINT, ndv BIGINT, min_v DOUBLE, max_v DOUBLE",
+        [("a", 3, 1, 2, -1.5, 2.25)],
+    ),
+    "refresh": (
+        "statement string, target string, delta_rows long, "
+        "groups_touched long, from_version long, to_version long",
+        [("REFRESH MATERIALIZED VIEW", "mv", 2, 1, 3, 4)],
+    ),
+    "show_create": ("table string, create_stmt string", [("t", "CREATE TABLE t (\n    k BIGINT\n)")]),
+    "explain": ("plan string", [("== Physical Plan ==\n*(1) Scan",)]),
+    "history": ("version BIGINT, op STRING, ts DOUBLE, details STRING", [(1, "CONVERT", 1.7e9, '{"a": 1}')]),
+}
+
+
+@pytest.mark.parametrize("site", sorted(_LOCAL_FRAME_CASES))
+def test_local_frame_matches_list_frame(spark, site):
+    """Each converted site's schema and rows equal the createDataFrame(list)
+    frame it replaced, with a row of NULLs in every column."""
+    from mesin_spark.catalog import local_frame
+
+    ddl, rows = _LOCAL_FRAME_CASES[site]
+    rows = rows + [(None,) * len(rows[0])]
+    got, ref = local_frame(spark, rows, ddl), spark.createDataFrame(rows, ddl)
+    assert got.schema == ref.schema
+    assert got.collect() == ref.collect()
+
+
+def test_empty_local_frames_match_list_frames(spark, tmp_path):
+    """CREATE TABLE's empty frame and the demo catalog's: same schema, and
+    CREATE TABLE's parquet reads back with the same schema."""
+    from pyspark.sql import types as Ty
+
+    from mesin_spark.catalog import Catalog, local_frame
+    from mesin_spark.dml import ColumnDefinition
+
+    cols = [
+        ColumnDefinition("id", "BIGINT", primary_key=True),
+        ColumnDefinition("name", "VARCHAR(20)", nullable=False),
+    ] + [
+        ColumnDefinition(f"c{i}", t)
+        for i, t in enumerate(
+            ["INT", "FLOAT", "DOUBLE", "BOOLEAN", "DATE", "TIMESTAMP", "DECIMAL(10,2)"]
+        )
+    ]
+    schema = Ty.StructType([c.to_field() for c in cols])
+    got, ref = local_frame(spark, [], schema), spark.createDataFrame([], schema)
+    assert got.schema == ref.schema
+    got.write.parquet(str(tmp_path / "got"))
+    ref.write.parquet(str(tmp_path / "ref"))
+    read = spark.read.parquet
+    assert read(str(tmp_path / "got")).schema == read(str(tmp_path / "ref")).schema
+    demo = Catalog(spark)
+    demo.register_demo_catalog()
+    users = demo.table("users")
+    assert users.schema == spark.createDataFrame([], "id long, name string, email string").schema
+    assert _jobs_to_collect(spark, users) == 0 and users.collect() == []
+
+
+def _reads(monkeypatch):
+    """Count sources.read_parquet calls (ManagedTable.df imports it per call)."""
+    from mesin_spark import sources
+
+    calls = []
+    orig = sources.read_parquet
+
+    def counting(spark, path):
+        calls.append(path)
+        return orig(spark, path)
+
+    monkeypatch.setattr(sources, "read_parquet", counting)
+    return calls
+
+
+def _contents(ctx):
+    return sorted(tuple(r) for r in ctx.execute("SELECT * FROM t").collect())
+
+
+@pytest.mark.parametrize("layout", ["flat", "versioned"])
+def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch, layout):
+    """Statements whose source reads the target itself: the same
+    rows_affected and contents as reading the table afresh, and each
+    statement reads the table once, after its commit."""
+    ctx.execute("CREATE TABLE t (k BIGINT, v BIGINT)")
+    ctx.execute("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)")
+    mt = ctx.ddl.table("t")
+    if layout == "versioned":
+        mt.enable_versioning()
+    mt.df()
+    calls = _reads(monkeypatch)
+    cases = [
+        ("INSERT INTO t SELECT * FROM t", 3,
+         [(1, 10), (1, 10), (2, 20), (2, 20), (3, 30), (3, 30)]),
+        ("UPDATE t SET v = v + 1 WHERE k IN (SELECT k FROM t WHERE v >= 20)", 4,
+         [(1, 10), (1, 10), (2, 21), (2, 21), (3, 31), (3, 31)]),
+        ("DELETE FROM t WHERE k IN (SELECT k FROM t WHERE v = 10)", 2,
+         [(2, 21), (2, 21), (3, 31), (3, 31)]),
+        ("MERGE INTO t USING (SELECT DISTINCT k, v * 10 AS v FROM t WHERE k = 2) AS s"
+         " ON t.k = s.k WHEN MATCHED THEN UPDATE SET v = s.v", 1,
+         [(2, 210), (2, 210), (3, 31), (3, 31)]),
+    ]
+    for sql, n, rows in cases:
+        before = len(calls)
+        assert ctx.execute(sql).collect()[0]["rows_affected"] == n, sql
+        assert len(calls) - before == 1, sql
+        assert _contents(ctx) == rows, sql
+        assert sorted(tuple(r) for r in mt.df().collect()) == rows, sql
+    assert (mt.current_version() is None) == (layout == "flat")
+
+
+@pytest.mark.parametrize("layout", ["flat", "versioned"])
+def test_frame_reuse_sees_outside_writes(ctx, spark, layout):
+    """A write through a second DdlSession on the same base dir, or a file
+    dropped into the table dir, is seen by the next statement; and
+    save_catalog + DdlSession.open round-trips the catalog unchanged."""
+    import json
+    import shutil
+
+    from mesin_spark.dml import DdlSession
+
+    ctx.execute("CREATE TABLE t (k BIGINT, v BIGINT)")
+    ctx.execute("INSERT INTO t VALUES (1, 10), (2, 20)")
+    mt = ctx.ddl.table("t")
+    if layout == "versioned":
+        mt.enable_versioning()
+    assert mt.df().count() == 2
+    saved = ctx.ddl.save_catalog()
+    with open(saved) as f:
+        doc = json.load(f)
+    other = DdlSession.open(spark, ctx.ddl.base_dir)
+    other.table("t").insert_values([(3, 30)])
+    assert ctx.execute("UPDATE t SET v = 0 WHERE k > 0").collect()[0]["rows_affected"] == 3
+    assert _contents(ctx) == [(1, 0), (2, 0), (3, 0)]
+    data_dir = mt._data_dir()
+    part = sorted(f for f in os.listdir(data_dir) if f.endswith(".parquet"))[0]
+    shutil.copy(os.path.join(data_dir, part), os.path.join(data_dir, "part-99999-extra.parquet"))
+    extra = spark.read.parquet(os.path.join(data_dir, part)).count()
+    assert mt.df().count() == 3 + extra
+    assert ctx.execute("DELETE FROM t").collect()[0]["rows_affected"] == 3 + extra
+    assert _contents(ctx) == []
+    # the saved catalog holds no frames: reopening and saving again
+    # writes the same document
+    reopened = DdlSession.open(spark, ctx.ddl.base_dir)
+    with open(reopened.save_catalog()) as f:
+        assert json.load(f) == doc
