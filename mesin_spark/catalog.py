@@ -228,15 +228,12 @@ class Catalog:
         for t in doc["tables"]:
             if not os.path.exists(t["path"]):
                 continue
-            # versioned layout: read through the version pointer
+            # versioned layout: df() reads through the version pointer,
+            # and seeds self.frames for the table's first statement
             from mesin_spark.dml import ManagedTable
 
-            mt = ManagedTable(self.spark, t["name"], t["path"], catalog=None)
-            data_dir = mt._data_dir()
-            from mesin_spark.sources import read_parquet
-
-            df = read_parquet(self.spark, data_dir)
-            self.register_dataframe(t["name"], df, path=t["path"])
+            mt = ManagedTable(self.spark, t["name"], t["path"], catalog=self)
+            self.register_dataframe(t["name"], mt.df(), path=t["path"])
             meta = self.tables[t["name"]]
             meta.constraints = t.get("constraints", [])
             meta.properties = t.get("properties", {})

@@ -1151,8 +1151,9 @@ class DdlSession:
         schema = Ty.StructType([c.to_field() for c in columns])
         path = os.path.join(self.base_dir, name)
         local_frame(self.spark, [], schema).write.mode("overwrite").parquet(path)
-        df = self.spark.read.parquet(path)
-        self.catalog.register_dataframe(name, df, path=path)
+        mt = ManagedTable(self.spark, name, path, self.catalog)
+        # mt.df() seeds Catalog.frames, so the first statement reads once
+        self.catalog.register_dataframe(name, mt.df(), path=path)
         meta = self.catalog.tables[name]
         meta.constraints = constraints or []
         meta.properties["columns"] = [
@@ -1165,7 +1166,7 @@ class DdlSession:
             }
             for c in columns
         ]
-        return ManagedTable(self.spark, name, path, self.catalog)
+        return mt
 
     def table(self, name: str) -> ManagedTable:
         meta = self.catalog.tables.get(name)
@@ -1183,14 +1184,14 @@ class DdlSession:
             raise CatalogError(f"Table '{name}' already exists")
         path = os.path.join(self.base_dir, name)
         source.write.mode("overwrite").parquet(path)
-        df = self.spark.read.parquet(path)
-        self.catalog.register_dataframe(name, df, path=path)
+        mt = ManagedTable(self.spark, name, path, self.catalog)
+        df = self.catalog.register_dataframe(name, mt.df(), path=path)
         meta = self.catalog.tables[name]
         meta.properties["columns"] = [
             {"name": f.name, "data_type": f.dataType.simpleString(), "nullable": f.nullable}
             for f in df.schema.fields
         ]
-        return ManagedTable(self.spark, name, path, self.catalog)
+        return mt
 
     def import_parquet(self, name: str, src_path: str) -> ManagedTable:
         """Copy an existing parquet file/dir into a managed (mutable) table."""

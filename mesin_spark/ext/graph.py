@@ -60,73 +60,128 @@ def _measured_edge_pin(
     return PINNED.pin(e.repartition(width, F.col(key)))
 
 
+def pagerank_setup(
+    e_norm: DataFrame, salts: int = 1, self_edges: bool = False
+) -> tuple[DataFrame, DataFrame, int]:
+    """The static input of pagerank_round, built once per run from the
+    deduplicated (src, dst, w=1/outdeg) edges: the augmented edges, the
+    initial state and the node count N.
+
+    A state holds p(v) per node plus one sentinel row (node NULL) holding
+    the uniform term c that all nodes share: rank(v) = p(v) + c. The
+    augmented edges (src, dst, w, _k) fold the dangling mass and c into
+    the round's one aggregate: real edges u→v (w = 1/outdeg(u));
+    sentinel→v for every node (w = w_in(v), v's summed in-weight, so
+    every node reaches the output) and sentinel→sentinel (w = the
+    dangling count); u→sentinel per dangling u (w = 1); with
+    ``self_edges``, v→v per node and for the sentinel with a NULL w,
+    which adds nothing to the sum and carries the old value into
+    ``_prev``. ``_k`` salts the sentinel's out-edges over ``salts`` join
+    keys, so the shuffle route does not meet them in one partition.
+    Rank 1/N everywhere is p = 0, c = 1/N: the initial state is the
+    sentinel row alone."""
+    from functools import reduce
+
+    # (node, is_dang, w_in) in ONE aggregate: src rows vote has-out=true,
+    # dst rows vote false and bring their in-weight
+    nodes = (
+        e_norm.select(
+            F.col("src").alias("node"), F.lit(True).alias("_o"), F.lit(0.0).alias("w")
+        )
+        .union(e_norm.select(F.col("dst").alias("node"), F.lit(False).alias("_o"), "w"))
+        .groupBy("node")
+        .agg((~F.max("_o")).alias("is_dang"), F.sum("w").alias("w_in"))
+    )
+    n, n_dang = nodes.agg(
+        F.count(F.lit(1)), F.sum(F.col("is_dang").cast("long"))
+    ).first()
+    if n == 0:
+        raise ValueError(
+            "pagerank: edge list is empty (after any upstream filter) — "
+            "no graph to rank"
+        )
+    sentinel = F.lit(None).cast(nodes.schema["node"].dataType)
+    one = e_norm.sparkSession.range(1)
+    # the sentinel joins the node list with the dangling count as w_in
+    ids = nodes.union(one.select(sentinel, F.lit(False), F.lit(float(n_dang))))
+    node = F.col("node")
+
+    def edges(frame, s, d, w, k=F.lit(0)):
+        return frame.select(s.alias("src"), d.alias("dst"), w.alias("w"), k.alias("_k"))
+
+    parts = [
+        edges(e_norm, F.col("src"), F.col("dst"), F.col("w")),
+        edges(ids, sentinel, node, F.col("w_in"), F.pmod(F.hash(node), F.lit(salts))),
+        edges(ids.filter("is_dang"), node, sentinel, F.lit(1.0)),
+    ]
+    if self_edges:
+        parts.append(edges(ids, node, node, F.lit(None).cast("double")))
+    state = one.select(sentinel.alias("node"), F.lit(1.0 / n).alias("p"))
+    return reduce(DataFrame.union, parts).transform(ckpt, eager=True), state, n
+
+
 def pagerank_round(
-    nodes: DataFrame,
-    e_norm: DataFrame,
-    ranks: DataFrame,
+    state: DataFrame,
+    aug: DataFrame,
     damping: float,
     n: int,
-    carry_prev: bool = False,
+    salts: int = 1,
     broadcast_ranks: bool = False,
 ) -> DataFrame:
     """ONE power-iteration round — the exact frame pagerank() builds per
-    loop step, exposed so plan tests assert on the real implementation
-    instead of a hand-built replica. ``nodes`` carries (node, is_dang),
-    ``e_norm`` (src, dst, w=1/outdeg), ``ranks`` (node, is_dang, rank).
+    loop step, exposed so plan tests assert on the real implementation.
+    ``state`` and ``aug`` are as pagerank_setup describes. One join of
+    the state into the augmented edges and one groupBy(dst) give
+    s(v) = Σ_{u→v} rank(u)/outdeg(u) per node and the dangling mass at
+    the sentinel, so p'(v) = d·s(v) and c' = (1-d)/N + d·s(sentinel)/N.
+    The round reads ``state`` once, so chained rounds grow the plan
+    linearly.
 
-    ``carry_prev=True`` keys the update join on ``ranks`` instead of
-    ``nodes`` so the OLD rank rides along as ``_prev``: the tol
-    convergence check in pagerank() is then a 1-row agg on the
-    already-checkpointed round output — no rank-pairing join, no extra
-    shuffle (a separate new⋈old delta join measured SLOWER than the two
-    rounds it saved at sf0.1). It must be requested ONLY for a round
-    that is immediately checkpointed: referencing ``ranks`` on both
-    sides doubles the logical plan per round, so chaining carry_prev
-    rounds un-truncated grows the plan 2^rounds (measured as a
-    multi-minute analysis hang at checkpoint_every=10).
-
-    ``broadcast_ranks=True`` is the small-vertex-set route (the
-    broadcast-join analogue for iterative graph algorithms): the rank
-    vector — one (node, rank) row per vertex, NOT the edge list —
-    broadcasts into the e_norm scan, and the contribution aggregate's
-    map-side partial combine means the round's ONLY exchange moves
-    ≤ |V| partially-summed rows; the update join then broadcasts the
-    equally-small contribs frame back against nodes. Per round: one
-    tiny shuffle instead of the shuffle path's four exchanges (the
-    static frames re-shuffle every round because localCheckpoint
-    surfaces UnknownPartitioning under AQE — see pagerank()). The edge
-    list itself never moves in either path."""
-    if broadcast_ranks:
-        rk = ranks.select("node", "rank")
-        contribs = (
-            e_norm.join(F.broadcast(rk), e_norm["src"] == rk["node"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("in_sum"))
-        )
-    else:
-        contribs = (
-            ranks.join(e_norm, ranks["node"] == e_norm["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("w")).alias("in_sum"))
-        )
-    dangling = ranks.filter("is_dang").agg(
-        F.coalesce(F.sum("rank"), F.lit(0.0)).alias("_dm")
+    ``broadcast_ranks=True`` is the small-vertex-set route: the state —
+    one row per vertex, NOT the edge list — broadcasts into the edge
+    scan, and the aggregate's map-side partial combine makes the round's
+    ONLY exchange ≤ |V| partially-summed rows. The shuffle route
+    exchanges the state and the edges on the join key instead."""
+    st = state.select(
+        F.col("node").alias("_n"),
+        "p",
+        F.explode(
+            F.sequence(F.lit(0), F.when(F.col("node").isNull(), salts - 1).otherwise(0))
+        ).alias("_j"),
     )
-    new_rank = (
-        F.lit((1.0 - damping) / n)
-        + F.lit(damping) * (F.col("_dm") / n + F.coalesce("in_sum", F.lit(0.0)))
-    ).alias("rank")
-    cb = F.broadcast(contribs) if broadcast_ranks else contribs
-    if carry_prev:
-        return (
-            ranks.join(cb, ranks["node"] == contribs["dst"], "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("node", "is_dang", F.col("rank").alias("_prev"), new_rank)
+    if broadcast_ranks:
+        st = F.broadcast(st)
+    s = (
+        aug.join(st, F.col("src").eqNullSafe(F.col("_n")) & (F.col("_k") == F.col("_j")))
+        .groupBy(F.col("dst").alias("node"))
+        .agg(
+            F.sum(F.col("p") * F.col("w")).alias("_s"),
+            F.sum(F.when(F.col("w").isNull(), F.col("p"))).alias("_prev"),
         )
+    )
+    uniform = (1.0 - damping) / n + damping * (F.col("_s") / n)
+    return s.select(
+        "node",
+        F.when(F.col("node").isNull(), uniform).otherwise(damping * F.col("_s")).alias("p"),
+        "_prev",
+    )
+
+
+def _ranks(state: DataFrame) -> DataFrame:
+    """(node, rank, _prev) of every real node: its p plus the sentinel's
+    uniform term, and likewise for the previous round's values (a node
+    absent from the previous state had p = 0)."""
+    c = state.filter(F.col("node").isNull()).select(
+        F.col("p").alias("_c"), F.col("_prev").alias("_c0")
+    )
     return (
-        nodes.join(cb, nodes["node"] == contribs["dst"], "left")
-        .crossJoin(F.broadcast(dangling))
-        .select("node", "is_dang", new_rank)
+        state.filter(F.col("node").isNotNull())
+        .crossJoin(F.broadcast(c))
+        .select(
+            "node",
+            (F.col("p") + F.col("_c")).alias("rank"),
+            (F.coalesce("_prev", F.lit(0.0)) + F.col("_c0")).alias("_prev"),
+        )
     )
 
 
@@ -142,7 +197,23 @@ def pagerank(
     broadcast_max_nodes: int = 8_000_000,
     final_checkpoint: bool = True,
 ) -> DataFrame:
-    """PageRank over a directed edge list (duplicate edges collapse).
+    """PageRank over a directed edge list (duplicate edges collapse; an
+    edge with a NULL endpoint names no node and is dropped).
+
+    rank' = (1-d)/N + d·(Σ_in rank/outdeg + dangling_mass/N), the
+    standard power iteration with dangling-node redistribution so ranks
+    sum to 1 every round. Fixed iteration count keeps runs comparable.
+    Returns (node, rank). Each round is one join + one groupBy(dst)
+    over edges augmented once in setup (pagerank_setup, pagerank_round).
+
+    ``checkpoint_every`` is a lineage-recovery choice: a round reads the
+    previous state once, so the plan grows linearly between checkpoints.
+    Checkpoints go through ext.ckpt.ckpt: the default ``local`` backend
+    keeps blocks executor-local (fast, but a lost executor kills the
+    iteration); set ``mesin.checkpoint.backend=reliable`` (+
+    ``mesin.checkpoint.dir`` on durable storage) on a real cluster so
+    node churn refetches from storage instead of failing a 40-round
+    job. Results are backend-identical (pytest-asserted).
 
     ``final_checkpoint=False`` skips the last round's materialization: a
     caller that consumes the result exactly once (one collect / one sink
@@ -152,86 +223,42 @@ def pagerank(
     Keep the default when the result is reused.
 
     ``tol`` bounds the SINGLE-ROUND max rank delta, evaluated at
-    checkpoint rounds (the round output carries the previous rank, so
-    the check is one 1-row aggregate on the materialized frame). Note a
-    single-round delta is smaller than the k-round-window delta an
-    earlier revision compared, by roughly the geometric tail factor
-    1/(1-damping·λ) — a tol calibrated against window semantics exits
-    sooner here; calibrate against measured single-round deltas (the
-    registry q_pagerank documents its sweep).
+    checkpoint rounds: the augmented edges then carry a self-edge per
+    node, so the round's aggregate also yields the previous value and
+    the check is one 1-row aggregate on the materialized state. A
+    single-round delta is smaller than a k-round-window delta by roughly
+    the geometric tail factor 1/(1-damping·λ); calibrate tol against
+    measured single-round deltas.
 
-    rank' = (1-d)/N + d·(Σ_in rank/outdeg + dangling_mass/N), the
-    standard power iteration with dangling-node redistribution so ranks
-    sum to 1 every round. Fixed iteration count keeps runs comparable.
-    Returns (node, rank).
+    Under AQE a checkpoint does NOT preserve hash partitioning (LogicalRDD
+    surfaces UnknownPartitioning), so on the shuffle route the static
+    edges re-shuffle each round. Repartitioning them once on the join key
+    and persist()ing was measured and REJECTED at bench scale: a
+    fixed-width repartition is exempt from AQE coalescing, and scheduling
+    32-partition stages of tiny tasks doubled the wall time (5.4s → 10.9s
+    min at sf0.1). On a cluster-sized edge list the trade inverts.
 
-    Per-round plan discipline:
-    - 1/outdeg folds into the edge list ONCE (``e_norm``), so the round
-      is a single ranks⋈e_norm join + groupBy(dst) — not a per-round
-      outdeg join.
-    - every node carries a precomputed ``is_dang`` flag (no out-edges)
-      that survives each rank update, so the dangling mass is a MAP-SIDE
-      filter + 1-row aggregate — no per-round join and no driver
-      ``.collect()``; the 1-row frame crossJoins back in as a broadcast.
-    - checkpoint every k rounds, not every round: the in-between round's
-      rank subtree is shared by the next round's branches through a
-      reused shuffle exchange, so skipping the materialization drops a
-      per-round job without recompute; past k≈4 un-truncated plan growth
-      costs more than it saves (measured at sf0.1: every-1 6.1s,
-      every-2 4.9s, every-4 4.5s, never 11.7s), and periodic truncation
-      keeps recovery bounded.
-    Note: under AQE a checkpoint of either backend does NOT preserve
-    hash partitioning (LogicalRDD surfaces UnknownPartitioning —
-    verified on the executed plan), so the static e_norm/nodes frames
-    re-shuffle each round (4 exchanges/round vs the algorithmic
-    minimum 2). Checkpoints go through ext.ckpt.ckpt: the default
-    ``local`` backend keeps blocks executor-local (fast, but a lost
-    executor kills the iteration — no lineage survives truncation);
-    set ``mesin.checkpoint.backend=reliable`` (+
-    ``mesin.checkpoint.dir`` on durable storage) on a real cluster so
-    node churn refetches from storage instead of failing a 40-round
-    job. Results are backend-identical (pytest-asserted). The
-    obvious fix — repartition the static frames once on their join keys
-    and persist() (which DOES keep outputPartitioning) — was measured
-    and REJECTED at bench scale: a fixed-width repartition is exempt
-    from AQE coalescing, so every round ran 32-partition stages of tiny
-    tasks instead of AQE's ~3 coalesced ones, and scheduling overhead
-    doubled the wall time (5.4s → 10.9s min at sf0.1). The trade
-    inverts when partitions carry real data (a cluster-sized edge
-    list): there, pre-partition the edge list once, Pregel-style, and
-    size the width to the data — the plan shape supports it, local mode
-    just must not pay it.
-
-    ``broadcast_ranks`` (None = auto by node count): the rank vector is
-    one row per VERTEX — orders of magnitude smaller than the edge list
-    it multiplies against — so when |V| ≤ broadcast_max_nodes it
-    broadcasts into the edge scan exactly like a small dimension into a
-    fact join, collapsing the round to ONE ≤|V|-row exchange (see
+    ``broadcast_ranks`` (None = auto by node count): the state is one row
+    per VERTEX, so when |V| ≤ broadcast_max_nodes it broadcasts into the
+    edge scan like a small dimension into a fact join (see
     pagerank_round). The 8M default is ~128 MB of (int64 node, double
-    rank) pairs at 16 B/row — the scale where Spark's own broadcast
-    guidance tops out; a web-scale graph with billions of vertices
-    auto-falls back to the shuffle path, whose per-round cost is the
-    two keyed exchanges that ARE Pregel. |V| is already counted for the
-    teleport term, so the auto-route adds zero work.
+    rank) pairs — where Spark's own broadcast guidance tops out; a
+    larger graph falls back to the keyed exchanges that ARE Pregel.
 
-    Setup has two shapes keyed off the same knob, and the auto route is
-    resolved BEFORE setup (one map-side approx_count_distinct pre-pass
-    over the raw edges when ``broadcast_ranks=None``), so an auto-big
-    graph gets the skew-safe setup too — not only explicit False.
-    Small-graph (auto-small / True): 1/outdeg folds into the edge list
-    via a count window over
-    the just-deduplicated edges — two exchanges, ONE scan of the raw
-    edge build, no edges⋈outdeg self-join, and the node frame derives
-    from the checkpointed e_norm without re-reading the raw build
-    (two materializations instead of three; measured −0.7s of
-    q_pagerank's sf0.1 wall). Big-graph (auto-big / explicit False): the window
-    would buffer each src's full edge group in one task — a power-law
-    hub with 10^8 out-edges is a straggler/spill risk — so that path
-    keeps the skew-safe groupBy(src) outdeg (map-side partial combine)
+    Setup has two shapes keyed off the same knob, resolved BEFORE setup
+    (one map-side approx_count_distinct pre-pass over the raw edges when
+    ``broadcast_ranks=None``). Small-graph: 1/outdeg folds into the edge
+    list via a count window over the just-deduplicated edges — ONE scan
+    of the raw edge build, no edges⋈outdeg self-join (measured −0.7s of
+    q_pagerank's sf0.1 wall). Big-graph: the window would buffer each
+    src's full edge group in one task — a straggler/spill risk for a
+    power-law hub — so that path keeps the skew-safe groupBy(src) outdeg
     joined back to the edges, the classic Pregel prep."""
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    if max_iter < 1:
+        raise ValueError("pagerank: max_iter must be >= 1")
+    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
     if broadcast_ranks is None:
         # Resolve the auto route BEFORE the setup branch: the two setup
         # shapes differ too (window outdeg buffers a hub's whole edge
@@ -255,6 +282,7 @@ def pagerank(
             .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
             .transform(ckpt, eager=True)
         )
+        salts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     else:
         # one exchange instead of two: hash(src) satisfies BOTH the
         # (src,dst) dedup agg's clustering (subset rule) and the outdeg
@@ -271,24 +299,7 @@ def pagerank(
             )
             .transform(ckpt, eager=True)
         )
-    # (node, is_dang) in ONE aggregate (round 12): src rows vote
-    # has-out=true, dst rows vote false, max() settles each node — the
-    # previous shape (srcs distinct + union distinct + left join) paid
-    # an extra exchange and a join for the same integer-exact output.
-    # Same keys as the old union-distinct, so no new skew exposure.
-    nodes = (
-        e_norm.select(F.col("src").alias("node"), F.lit(True).alias("_o"))
-        .union(e_norm.select(F.col("dst").alias("node"), F.lit(False).alias("_o")))
-        .groupBy("node")
-        .agg((~F.max("_o")).alias("is_dang"))
-        .transform(ckpt, eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError(
-            "pagerank: edge list is empty (after any upstream filter) — "
-            "no graph to rank"
-        )
+        salts = 1
     # edge prepartition MEASURED AND REJECTED here (round 11): unlike
     # hits (whose 12 half-round combines emitted edge-order bytes —
     # 3.2 GiB at 100x), pagerank's per-round combine output is |V|-small
@@ -296,43 +307,22 @@ def pagerank(
     # an edge-sized exchange without per-round savings (744 → 1,109 MiB
     # measured at the 100x probe). The per-round partial-combine
     # exchange IS this loop's floor.
-    # NOT checkpointed: the initial ranks frame is a constant-literal
-    # projection of the just-checkpointed nodes frame — re-evaluating it
-    # per round-1 branch is a map-side no-op, and skipping the eager
-    # materialization saves one full job per run (measured ~0.3s of the
-    # registry query's wall time)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
+    aug, state, n = pagerank_setup(e_norm, salts, self_edges=tol is not None)
     for it in range(max_iter):
-        at_ckpt = (it + 1) % max(1, checkpoint_every) == 0 or it == max_iter - 1
-        check_tol = at_ckpt and tol is not None and it < max_iter - 1
-        # carry_prev only on a round that is checkpointed RIGHT AFTER —
-        # see pagerank_round: an un-truncated carry_prev chain doubles
-        # the logical plan per round
-        ranks = pagerank_round(
-            nodes,
-            e_norm,
-            ranks,
-            damping,
-            n,
-            carry_prev=check_tol,
-            broadcast_ranks=broadcast_ranks,
-        )
-        if at_ckpt:
-            if it < max_iter - 1 or final_checkpoint:
-                ranks = ranks.transform(ckpt, eager=True)
-            if check_tol:
-                # convergence exit, evaluated only at checkpoint rounds:
-                # the round output carries the previous rank as _prev,
-                # so the single-round max delta is one 1-row aggregate
-                # over the JUST-materialized frame — no rank-pairing
-                # join, no extra shuffle, zero cost when tol is unset
-                delta = ranks.agg(
-                    F.max(F.abs(F.col("rank") - F.col("_prev")))
-                ).collect()[0][0]
+        state = pagerank_round(state, aug, damping, n, salts, broadcast_ranks)
+        last = it == max_iter - 1
+        if (it + 1) % max(1, checkpoint_every) == 0 or last:
+            if not last or final_checkpoint:
+                state = state.transform(ckpt, eager=True)
+            if tol is not None and not last:
+                delta = (
+                    _ranks(state)
+                    .agg(F.max(F.abs(F.col("rank") - F.col("_prev"))))
+                    .first()[0]
+                )
                 if delta is not None and delta < tol:
                     break
-                ranks = ranks.drop("_prev")
-    return ranks.select("node", "rank")
+    return _ranks(state).select("node", "rank")
 
 
 def degree_stats(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -745,11 +735,10 @@ def hits_portable(
     half-round plus two broadcast 1-row norms; integer sums are
     order-independent, so the join strategy cannot perturb the
     fixed-point values. Each HALF-round is eagerly checkpointed, and that cadence
-    is structural, not tunable: the normalization crossJoin references
-    the raw half-round frame TWICE (once for values, once for the
-    norm), so an un-truncated chain doubles the logical plan per
-    half-round — the same 2^rounds analysis blowup the pagerank
-    carry_prev note documents. Measured two-scale slope 1.48 at 3×
+    is structural, not tunable: the norm reads the raw half-round twice
+    (the normalization crossJoin references the raw frame once for
+    values and once for the norm), so an un-truncated chain doubles the
+    logical plan per half-round. Measured two-scale slope 1.48 at 3×
     data. Returns (node, hub_fp, auth_fp) with absent sides as 0."""
     if rounds < 1:
         # rounds=0 would leave the authority frame unbuilt and crash at
@@ -868,10 +857,10 @@ def hits(
     ≤ broadcast_max_nodes broadcasts the score vector into the static
     edge scan (one partial-combined ≤|V|-row exchange + one 1-row norm
     broadcast per half-round), larger graphs fall back to keyed-shuffle
-    Pregel half-rounds. Each half-round materializes eagerly — the
-    normalization references its raw aggregate twice (values + norm),
-    so an un-truncated chain doubles the logical plan per half-round
-    (the hits_portable cadence note; structural, not tunable). Returns
+    Pregel half-rounds. Each half-round materializes eagerly — the norm
+    reads the raw half-round twice (values + norm), so an un-truncated
+    chain doubles the logical plan per half-round (structural, not
+    tunable). Returns
     (node, hub, auth) with absent sides as 0.0.
 
     ``prepartition`` (measured, default auto at ≥192 MiB edge bytes —

@@ -67,6 +67,8 @@ def q_col_stats(spark, sf_dir):
         "ndv",
         R(F.col("min_v"), 4).alias("min_v"),
         R(F.col("max_v"), 4).alias("max_v"),
+        # ANSI-safe: percentile over the 3-element DEFAULT_PROBS array
+        # returns 3 entries, or NULL on empty input (element_at(NULL) is NULL)
         R(F.element_at("quantiles", 1), 4).alias("p25"),
         R(F.element_at("quantiles", 2), 4).alias("p50"),
         R(F.element_at("quantiles", 3), 4).alias("p75"),
@@ -962,6 +964,8 @@ def q_phrase_search(spark, sf_dir):
 
     docs = T(spark, sf_dir, "documents")
     ts = _tokens(F.col("text"))
+    # ANSI-safe only because the size(ts) >= 2 filter is combined ahead of
+    # the exists: i runs 1..size-1, so i and i + 1 are both in range
     has_phrase = F.exists(
         F.sequence(F.lit(1), F.greatest(F.lit(1), F.size(ts) - 1)),
         lambda i: (F.element_at(ts, i) == "key")
@@ -1019,7 +1023,7 @@ def q_degree_stats(spark, sf_dir):
 @query("q_pagerank")
 def q_pagerank(spark, sf_dir):
     """PageRank over the purchase graph (rows-only: per-node double
-    ranks accumulate engine-specific FP summation order across 8 power
+    ranks accumulate engine-specific FP summation order across 6 power
     iterations, so exact cross-engine hashing is not meaningful —
     structural properties are pytest-proven instead: mass conservation,
     star dominance, cycle uniformity, broadcast/shuffle path agreement).
@@ -1027,8 +1031,8 @@ def q_pagerank(spark, sf_dir):
     route (pinned explicitly — see the broadcast_ranks note below): the
     rank vector broadcasts into the edge scan like a dim into a fact
     join, so each round is ONE ≤|V|-row exchange (the map-side partial
-    combine of the contribution agg) instead of the shuffle path's
-    four; a billion-node graph on the auto route falls back to the
+    combine of the round's one aggregate) instead of the shuffle path's
+    three; a billion-node graph on the auto route falls back to the
     Pregel shuffle rounds AND the skew-safe groupBy-outdeg setup (the
     auto decision resolves before setup). Suppliers accumulate rank
     from customers; dangling customers redistribute."""
@@ -1038,20 +1042,17 @@ def q_pagerank(spark, sf_dir):
     # (sf0.1 single-round deltas 3.6e-4 / 8.2e-6 / 1.8e-7 at iters
     # 2/4/6 — below the 1e-6 tol the previous revision checked at
     # runtime), so the registry query pins it instead of paying the
-    # tol machinery (carry_prev rounds + per-checkpoint 1-row collects)
-    # to rediscover it every run; pagerank(tol=...) remains for inputs
-    # whose convergence round is unknown (tested in test_llm5_ops).
-    # checkpoint_every=3 re-measured min-of-3 with 6 fixed rounds:
-    # ck2 4.9s / ck3 3.5s / ck6 4.8s — two checkpoints (iters 3, 6)
-    # balance plan-growth cost against materialization jobs. Round 7:
-    # the broadcast-rank route + single-pass window outdeg setup +
-    # dropping _purchase_edges' redundant distinct re-measured 3.06s
-    # min-of-4 at sf0.1 (was 4.07s). The pinned count stays valid at
-    # the bench's 3x scale point because the scaled copy is DISJOINT
-    # key-shifted shards of this same graph — per-shard spectra (and
-    # hence convergence rounds) are identical. A graph with unknown
-    # mixing should call pagerank(tol=...) instead.
-    # broadcast_ranks pinned True (not auto): the auto route now resolves
+    # tol machinery (a self-edge per node in every round + a 1-row
+    # collect per checkpoint) to rediscover it every run. The pinned
+    # count stays valid at the bench's 3x scale point because the scaled
+    # copy is DISJOINT key-shifted shards of this same graph — per-shard
+    # spectra (and hence convergence rounds) are identical. A graph with
+    # unknown mixing should call pagerank(tol=...) instead.
+    # checkpoint_every=3 bounds the lineage a lost executor replays; the
+    # round's plan grows linearly, so the cadence barely moves the wall
+    # time (sf0.01, 4-core host, medians of 7: every round 3.80 s, every
+    # 3 rounds 3.80 s, none 3.96 s).
+    # broadcast_ranks pinned True (not auto): the auto route resolves
     # BEFORE setup via an approx_count_distinct pre-pass over the raw
     # edges — correct for unknown graphs, but here it would re-run the
     # orders⋈lineitem edge build once more per call to learn what this

@@ -242,6 +242,23 @@ def test_pagerank_tol_early_exit(spark):
         assert abs(x["rank"] - 1.0 / 6) < 1e-9
 
 
+def test_pagerank_drops_null_endpoints(spark):
+    """A NULL endpoint names no node: its edge is dropped rather than
+    read as the NULL-keyed sentinel row that carries the uniform term."""
+    import pytest
+
+    from mesin_spark.ext.graph import pagerank
+
+    base = [(1, 2), (2, 3), (3, 1), (4, 1)]
+    clean = spark.createDataFrame(base, "src long, dst long")
+    dirty = spark.createDataFrame(base + [(None, 2), (4, None)], "src long, dst long")
+    want = {r["node"]: r["rank"] for r in pagerank(clean, max_iter=4).collect()}
+    got = {r["node"]: r["rank"] for r in pagerank(dirty, max_iter=4).collect()}
+    assert got == want
+    with pytest.raises(ValueError, match="max_iter"):
+        pagerank(clean, max_iter=0)
+
+
 def test_triangle_count_known_graphs(spark):
     from mesin_spark.ext.graph import triangle_count
 

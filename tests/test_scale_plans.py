@@ -432,18 +432,15 @@ def test_kmv_overlap_pair_join_is_metadata_sized(spark):
 
 
 def test_pagerank_round_plan_shape(spark):
-    """One pagerank power-iteration round must keep its plan lean:
-    dangling mass is a map-side filter + 1-row broadcast (no per-round
-    dangling JOIN), no cartesian product, and at most 5 shuffle
-    exchanges (rank⋈edges SMJ pair + groupBy(dst) + rank-update SMJ
-    pair; the 1-row dangling agg's SinglePartition is metadata-sized).
-    Built from pagerank's OWN input/round builders, so a regression in
-    the real implementation fails here."""
+    """One pagerank power-iteration round must keep its plan lean: one
+    join of the state into the augmented edges plus one groupBy(dst).
+    The dangling mass and the uniform term ride that aggregate, so a
+    round holds no nested-loop join and no cartesian product. Built from
+    pagerank's OWN setup/round builders, so a regression in the real
+    implementation fails here."""
     import re
 
-    from pyspark.sql import functions as F
-
-    from mesin_spark.ext.graph import pagerank_round
+    from mesin_spark.ext.graph import pagerank_round, pagerank_setup
     from mesin_spark.queries.stats_menu import _purchase_edges
 
     edges = _purchase_edges(spark, SF_DIR)
@@ -454,45 +451,59 @@ def test_pagerank_round_plan_shape(spark):
         .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
         .localCheckpoint(eager=True)
     )
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(
-            outdeg.select(F.col("src").alias("node"), F.lit(True).alias("_has_out")),
-            "node",
-            "left",
-        )
-        .select("node", F.col("_has_out").isNull().alias("is_dang"))
-        .localCheckpoint(eager=True)
-    )
-    n = nodes.count()
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=True)
-    one_round = pagerank_round(nodes, e_norm, ranks, damping=0.85, n=n)
-    plan = physical(one_round)
-    assert "CartesianProduct" not in plan
-    # the dangling-mass arm must be aggregate-then-broadcast, never a
-    # third data-sized join: exactly one nested-loop join (the 1-row
-    # crossJoin) and no more than two SMJ/shuffle-hash joins
-    assert plan.count("BroadcastNestedLoopJoin") == 1
-    assert len(re.findall(r"(SortMergeJoin|ShuffledHashJoin)", plan)) <= 2
-    assert len(re.findall(r"Exchange (hash|Single|range)", plan)) <= 5
+
+    def round_plan(salts, broadcast_ranks):
+        aug, state, n = pagerank_setup(e_norm, salts)
+        # a mid-run state (every node plus the sentinel), as round 2 sees it
+        state = pagerank_round(
+            state, aug, 0.85, n, salts, broadcast_ranks
+        ).localCheckpoint(eager=True)
+        plan = physical(pagerank_round(state, aug, 0.85, n, salts, broadcast_ranks))
+        assert "CartesianProduct" not in plan
+        assert "BroadcastNestedLoopJoin" not in plan
+        return plan
+
+    # the SHUFFLE route: the state and the edges exchange on the join key
+    # (the sentinel salted over the shuffle partitions) and the aggregate
+    # on dst — one keyed join, at most three exchanges
+    salts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    plan = round_plan(salts, False)
+    assert len(re.findall(r"(SortMergeJoin|ShuffledHashJoin)", plan)) <= 1
+    assert len(re.findall(r"Exchange (hash|Single|range)", plan)) <= 3
 
     # the SMALL-VERTEX-SET round (broadcast_ranks=True, what q_pagerank's
-    # ~16k-node graph auto-takes): the rank vector broadcasts into the
-    # edge scan and contribs broadcast back — the round's only data
-    # exchange is the contribution aggregate's partial->final hash
-    # exchange, so: zero sort-merge/shuffled-hash joins, and at most the
-    # agg exchange + the 1-row dangling SinglePartition
-    bcast_round = pagerank_round(
-        nodes, e_norm, ranks, damping=0.85, n=n, broadcast_ranks=True
-    )
-    bplan = physical(bcast_round)
-    assert "CartesianProduct" not in bplan
+    # ~16k-node graph takes): the state broadcasts into the edge scan, so
+    # the round's only data exchange is the contribution aggregate's
+    # partial->final hash exchange
+    bplan = round_plan(1, True)
     assert not re.findall(r"(SortMergeJoin|ShuffledHashJoin)", bplan)
-    assert bplan.count("BroadcastHashJoin") >= 2  # ranks in, contribs out
-    assert len(re.findall(r"Exchange hash", bplan)) <= 1
-    assert len(re.findall(r"Exchange (hash|Single|range)", bplan)) <= 2
+    assert bplan.count("BroadcastHashJoin") == 1  # the state into the edges
+    assert len(re.findall(r"Exchange (hash|Single|range)", bplan)) <= 1
+
+
+@pytest.mark.parametrize("broadcast_ranks", [True, False])
+def test_pagerank_plan_grows_linearly(spark, broadcast_ranks):
+    """Without a checkpoint the optimized plan's leaf count grows by a
+    constant per round from 4 to 8 rounds: each round reads the previous
+    state once (it doubled per round while the dangling-mass aggregate
+    read the ranks a second time)."""
+    from mesin_spark.ext.graph import pagerank
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)], "src bigint, dst bigint"
+    )
+    leaves = []
+    for rounds in range(4, 9):
+        ranks = pagerank(
+            edges,
+            max_iter=rounds,
+            checkpoint_every=rounds,
+            broadcast_ranks=broadcast_ranks,
+            final_checkpoint=False,
+        )
+        leaves.append(ranks._jdf.queryExecution().optimizedPlan().collectLeaves().size())
+    steps = {b - a for a, b in zip(leaves, leaves[1:])}
+    assert len(steps) == 1, leaves
 
 
 def test_portable_vector_outputs_are_mapside_scans(spark):

@@ -1018,14 +1018,15 @@ def _contents(ctx):
 def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch, layout):
     """Statements whose source reads the target itself: the same
     rows_affected and contents as reading the table afresh, and each
-    statement reads the table once, after its commit."""
+    statement, the first after CREATE TABLE included, reads the table
+    once, after its commit."""
     ctx.execute("CREATE TABLE t (k BIGINT, v BIGINT)")
+    calls = _reads(monkeypatch)
     ctx.execute("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)")
+    assert len(calls) == 1
     mt = ctx.ddl.table("t")
     if layout == "versioned":
         mt.enable_versioning()
-    mt.df()
-    calls = _reads(monkeypatch)
     cases = [
         ("INSERT INTO t SELECT * FROM t", 3,
          [(1, 10), (1, 10), (2, 20), (2, 20), (3, 30), (3, 30)]),
@@ -1044,6 +1045,27 @@ def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch, layout):
         assert _contents(ctx) == rows, sql
         assert sorted(tuple(r) for r in mt.df().collect()) == rows, sql
     assert (mt.current_version() is None) == (layout == "flat")
+
+
+@pytest.mark.parametrize("how", ["ctas", "reopen"])
+def test_first_statement_after_ctas_or_reopen_reads_once(ctx, spark, monkeypatch, how):
+    """CREATE TABLE AS SELECT and DdlSession.open keep the frame they
+    register the table with, so the table's first statement reads it
+    once, after its commit."""
+    from mesin_spark.dml import DdlSession
+
+    ctx.execute("CREATE TABLE s (k BIGINT, v BIGINT)")
+    ctx.execute("INSERT INTO s VALUES (1, 10), (2, 20)")
+    if how == "ctas":
+        mt = ctx.ddl.create_table_as("t", ctx.execute("SELECT * FROM s"))
+    else:
+        ctx.ddl.save_catalog()
+        mt = DdlSession.open(spark, ctx.ddl.base_dir).table("s")
+    calls = _reads(monkeypatch)
+    mt.update({"v": "v + 1"}, "k = 1")
+    assert len(calls) == 1
+    assert sorted(tuple(r) for r in mt.df().collect()) == [(1, 11), (2, 20)]
+    assert len(calls) == 1
 
 
 @pytest.mark.parametrize("layout", ["flat", "versioned"])
