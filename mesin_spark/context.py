@@ -30,6 +30,7 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.errors import AnalysisException
 
+from mesin_spark import sqltext
 from mesin_spark.catalog import TESTDATA_TABLES, Catalog, local_frame
 from mesin_spark.session import get_session
 
@@ -79,8 +80,7 @@ def normalize_dialect(sql: str, dialect: str) -> str:
     - pg-like (postgres/redshift/duckdb/sqlite/snowflake/ansi/generic):
       ``expr::type`` → ``CAST(expr AS type)`` (identifiers, numbers,
       string literals, parenthesized groups) and double-quoted identifiers
-      → backticked. Single-quoted string literals are never touched (char
-      scanner, not regex-over-everything).
+      → backticked.
     - mssql: ``SELECT TOP n`` → trailing ``LIMIT n``; ``[bracket]``
       identifiers → backticked.
     - mysql (EXTENSION dialect — the reference maps it to generic) and
@@ -118,7 +118,10 @@ def normalize_dialect(sql: str, dialect: str) -> str:
       the extremum form yields NULL) is documented, matching how most
       engines' users encounter these predicates.
 
-    Constructs beyond these surface Spark's parse error unchanged."""
+    Every rewrite reads the text through ``mesin_spark.sqltext``, which
+    holds Spark's lexical rule: literals, quoted identifiers and comments
+    are never rewritten. Constructs beyond these surface Spark's parse
+    error unchanged."""
     if re.match(r"\s*(SELECT|WITH|\()", sql, re.I):
         # QUALIFY wraps the statement in SELECT * FROM (...) — only valid
         # for queries; a DML statement containing QUALIFY must reach the
@@ -141,94 +144,73 @@ def normalize_dialect(sql: str, dialect: str) -> str:
         return _normalize_mssql(sql)
     if dialect not in _PG_LIKE:
         return sql
+    if '"' in sql:
+        sql = "".join(
+            _backtick(sql[a:b]) if kind == '"' else sql[a:b]
+            for kind, a, b in sqltext.spans(sql)
+        )
+    return _rewrite_casts(sql) if "::" in sql else sql
+
+
+def _backtick(quoted: str) -> str:
+    """A double-quoted identifier as Spark's backticked one; an
+    unterminated one stays as it is."""
+    if len(quoted) < 2 or not quoted.endswith('"'):
+        return quoted
+    return "`" + quoted[1:-1].replace('""', '"').replace("`", "``") + "`"
+
+
+#: the type after ``::``: a name with an optional parameter list
+_CAST_TYPE = re.compile(r"\w*(?:\([\w\s,]*\))?")
+
+
+def _rewrite_casts(sql: str) -> str:
+    """``operand::type`` → ``CAST(operand AS type)`` when the operand is a
+    simple token ending right before the ``::``: an identifier (qualified or
+    backticked), a number, a string literal, or a parenthesized group with
+    an optional function name before it (``fn(x)::T``, chained casts)."""
     out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":  # string literal: copy verbatim, honoring '' escapes
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
+    pos = 0  # len("".join(out))
+    starts: dict[int, int] = {}  # end of an emitted token or group -> its start
+    opens: list[int] = []
+    for kind, a, b in sqltext.spans(sql):
+        if kind:
+            if kind not in ("--", "/*"):  # a comment is never an operand
+                starts[pos + b - a] = pos
+            out.append(sql[a:b])
+            pos += b - a
+            continue
+        i = a
+        while i < b:
+            ch = sql[i]
+            if sql.startswith("::", i):
+                k = _CAST_TYPE.match(sql, i + 2, b).end()
+                typename = sql[i + 2 : k]
+                emitted = "".join(out)
+                p = starts.get(pos, pos)
+                if not emitted.endswith("'"):
+                    while p > 0 and (emitted[p - 1].isalnum() or emitted[p - 1] in "_.`"):
+                        p -= 1
+                operand = emitted[p:]
+                if operand.strip() and typename.strip():
+                    cast = f"CAST({operand} AS {typename})"
+                    out, pos = [emitted[:p], cast], p + len(cast)
+                    starts[pos] = p
+                    i = k
                     continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-        elif ch == '"':  # quoted identifier -> backticks
-            j = sql.find('"', i + 1)
-            if j == -1:
-                out.append(sql[i:])
-                break
-            out.append("`" + sql[i + 1 : j] + "`")
-            i = j + 1
-        elif ch == ":" and i + 1 < n and sql[i + 1] == ":":
-            # expr::type — rewrite when the operand is a simple token
-            # (identifier, quoted identifier we just emitted, number, or
-            # a parenthesized group ending right before the '::')
-            k = i + 2
-            while k < n and (sql[k].isalnum() or sql[k] in "_("):
-                if sql[k] == "(":  # e.g. ::DECIMAL(10,2)
-                    depth = 1
-                    k += 1
-                    while k < n and depth:
-                        depth += {"(": 1, ")": -1}.get(sql[k], 0)
-                        k += 1
-                    break
-                k += 1
-            typename = sql[i + 2 : k]
-            # walk back over the operand in what we've emitted so far
-            emitted = "".join(out)
-            m = len(emitted)
-            if m and emitted[-1] == "'":
-                # string-literal operand ('2024-01-01'::date): scan back to
-                # the opening quote, honoring '' escapes — the whole literal
-                # is the operand
-                p = m - 2
-                while p >= 0:
-                    if emitted[p] == "'":
-                        if p > 0 and emitted[p - 1] == "'":
-                            p -= 2  # doubled quote inside the literal
-                            continue
-                        break
-                    p -= 1
-                operand_start = max(p, 0)
-            elif m and emitted[-1] == ")":
-                depth = 0
-                p = m - 1
-                while p >= 0:
-                    depth += {")": 1, "(": -1}.get(emitted[p], 0)
-                    if depth == 0:
-                        break
-                    p -= 1
-                # include a function name before the parens: fn(x)::T, CAST(..)::T
-                while p > 0 and (emitted[p - 1].isalnum() or emitted[p - 1] in "_.`"):
-                    p -= 1
-                operand_start = p
-            elif m and emitted[-1] == "`":
-                # backtick-quoted identifier (possibly qualified: t.`my col`)
-                p = emitted.rfind("`", 0, m - 1)
-                while p > 0 and (emitted[p - 1].isalnum() or emitted[p - 1] in "_.`"):
-                    p -= 1
-                operand_start = p
-            else:
-                p = m
-                while p > 0 and (emitted[p - 1].isalnum() or emitted[p - 1] in "_.`"):
-                    p -= 1
-                operand_start = p
-            operand = emitted[operand_start:]
-            if not operand.strip() or not typename.strip():
                 # no identifiable operand/type: emit '::' untouched rather
                 # than fabricating CAST( AS T) — Spark's parser gives the
                 # honest error
                 out.append("::")
+                pos += 2
                 i += 2
                 continue
-            out = [emitted[:operand_start], f"CAST({operand} AS {typename})"]
-            i = k
-        else:
+            if ch == "(":
+                opens.append(pos)
+            elif ch == ")" and opens:
+                starts[pos + 1] = opens.pop()
             out.append(ch)
+            pos += 1
             i += 1
     return "".join(out)
 
@@ -262,183 +244,63 @@ _QUANT_RE = re.compile(
 def _rewrite_quantified(sql: str) -> str:
     """Rewrite ANSI quantified comparison subqueries (op ALL/ANY/SOME
     (subquery)) into forms Spark supports — see normalize_dialect's
-    docstring for exactness notes. Char-scanner driven: quantifier
-    keywords inside string literals never match; the subquery's closing
-    paren is found by balanced-paren scan (quote-aware), and rewrites
-    re-scan so nested occurrences inside subqueries are handled too."""
+    docstring for exactness notes. Rewrites re-scan from the rewritten
+    spot, so nested occurrences inside subqueries are handled too."""
+    start = 0
     while True:
-        # locate the first candidate OUTSIDE string literals
-        m = None
-        i, n = 0, len(sql)
-        while i < n:
-            if sql[i] == "'":
-                j = i + 1
-                while j < n:
-                    if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    if sql[j] == "'":
-                        break
-                    j += 1
-                i = j + 1
-                continue
-            m = _QUANT_RE.match(sql, i)
-            if m:
+        for i, ch, _ in sqltext.scan(sql, start):
+            if ch in "=<>!" and (m := _QUANT_RE.match(sql, i)):
                 break
-            i += 1
-        if not m:
+        else:
             return sql
         op, quant = m.group(1), m.group(2).upper()
+        close = sqltext.matching_paren(sql, m.end() - 1)
+        sub = sql[m.end() : close]
         # combos with no sound rewrite (= ALL, <> ANY/SOME) fall through
         # to the documented contract: the construct surfaces Spark's own
-        # parse error unchanged, never a KeyError from this scanner
-        form = _QUANT_FORMS.get((op, quant))
-        if form is None:
-            i2 = m.end()
-            return sql[:i2] + _rewrite_quantified(sql[i2:])
-        # balanced-paren, quote-aware scan for the subquery body
-        depth, j = 1, m.end()
-        while j < n and depth:
-            ch = sql[j]
-            if ch == "'":
-                j += 1
-                while j < n:
-                    if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    if sql[j] == "'":
-                        break
-                    j += 1
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            j += 1
-        sub = sql[m.end() : j - 1]
+        # parse error unchanged, never a KeyError from this scanner. And
         # quantified comparisons take a SUBQUERY; anything else (e.g. the
         # any()/some() aggregates over a column) is left untouched
-        if not sub.lstrip().upper().startswith(("SELECT", "WITH", "VALUES")):
-            i = m.end()
-            head, tail = sql[:i], sql[i:]
-            rest = _rewrite_quantified(tail)
-            return head + rest
+        form = _QUANT_FORMS.get((op, quant))
+        if (
+            form is None
+            or close == -1
+            or not sub.lstrip().upper().startswith(("SELECT", "WITH", "VALUES"))
+        ):
+            start = m.end()
+            continue
         if form == "in":
             repl = f" IN ({sub})"
         elif form == "not_in":
             repl = f" NOT IN ({sub})"
         else:
             repl = f"{op} (SELECT {form}(_qv) FROM ({sub}) _quant(_qv))"
-        sql = sql[: m.start()] + repl + sql[j:]
+        sql = sql[: m.start()] + repl + sql[close + 1 :]
+        start = m.start()
 
 
 def _rewrite_qualify(sql: str) -> str:
     """Rewrite a TOP-LEVEL ``... QUALIFY <pred> [ORDER BY ...] [LIMIT n]``
     into ``SELECT * FROM (...) _qualify WHERE <pred> [ORDER BY/LIMIT]``.
-    Char scanner: QUALIFY inside string literals, quoted identifiers or
-    parentheses (subqueries) is left alone — nested QUALIFY would need a
-    real parser and surfaces Spark's parse error instead."""
-    n = len(sql)
-    i, depth = 0, 0
-    q_start = q_end = -1
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            i += 1
-            while i < n:
-                if sql[i] == "'" and i + 1 < n and sql[i + 1] == "'":
-                    i += 2
-                    continue
-                if sql[i] == "'":
-                    break
-                i += 1
-            i += 1
-        elif ch in "\"`":
-            j = sql.find(ch, i + 1)
-            i = n if j == -1 else j + 1
-        elif ch in "()":
-            depth += 1 if ch == "(" else -1
-            i += 1
-        elif (
-            depth == 0
-            and sql[i : i + 7].upper() == "QUALIFY"
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-            and (i + 7 == n or not (sql[i + 7].isalnum() or sql[i + 7] == "_"))
-        ):
-            q_start, q_end = i, i + 7
-            break
-        else:
-            i += 1
-    if q_start == -1:
+    QUALIFY inside parentheses (subqueries) is left alone — nested QUALIFY
+    would need a real parser and surfaces Spark's parse error instead."""
+    q = sqltext.find_keyword(sql, "QUALIFY")
+    if q == -1:
         return sql
-    head = sql[:q_start].rstrip().rstrip(";")
-    rest = sql[q_end:]
+    head = sqltext.close_comment(sql[:q].rstrip().rstrip(";"))
+    rest = sql[q + 7 :]
     # the predicate runs until a top-level ORDER BY / LIMIT (those move to
     # the outer query), or the end of the statement
-    tail_at = len(rest)
-    i, depth = 0, 0
-    while i < len(rest):
-        ch = rest[i]
-        if ch == "'":
-            i += 1
-            while i < len(rest) and rest[i] != "'":
-                i += 1
-            i += 1
-        elif ch in "()":
-            depth += 1 if ch == "(" else -1
-            i += 1
-        elif depth == 0 and (
-            rest[i : i + 8].upper() == "ORDER BY" or rest[i : i + 5].upper() == "LIMIT"
-        ):
-            tail_at = i
-            break
-        else:
-            i += 1
-    pred = rest[:tail_at].strip().rstrip(";")
+    tail_at = sqltext.find_keyword(rest, "ORDER BY", "LIMIT")
+    if tail_at == -1:
+        tail_at = len(rest)
+    pred = sqltext.close_comment(rest[:tail_at].strip().rstrip(";"))
     tail = rest[tail_at:].strip().rstrip(";")
     return f"SELECT * FROM ({head}) _qualify WHERE {pred}" + (f" {tail}" if tail else "")
 
 
 _AJ_STOP = ("WHERE", "GROUP", "ORDER", "LIMIT", "HAVING", "QUALIFY", "UNION",
             "INTERSECT", "EXCEPT", "SETTINGS")
-
-
-def _scan_top_level(sql: str, start: int = 0):
-    """Yield (i, ch) for positions OUTSIDE string literals / quoted
-    identifiers, tracking paren depth — the shared walk all the dialect
-    rewriters need. Yields (i, ch, depth)."""
-    i, n, depth = start, len(sql), 0
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch in '"`':
-            j = sql.find(ch, i + 1)
-            i = n if j == -1 else j + 1
-            continue
-        if ch in "()":
-            depth += 1 if ch == "(" else -1
-        yield i, ch, depth
-        i += 1
-
-
-def _kw_at(sql: str, i: int, kw: str) -> bool:
-    """True when ``kw`` (single word) starts at i as a whole word."""
-    n = len(sql)
-    k = len(kw)
-    return (
-        sql[i : i + k].upper() == kw
-        and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-        and (i + k == n or not (sql[i + k].isalnum() or sql[i + k] == "_"))
-    )
 
 
 def _rewrite_array_join(sql: str) -> str:
@@ -448,16 +310,10 @@ def _rewrite_array_join(sql: str) -> str:
     subqueries are reached because the rewrite re-runs on its own output
     until no top-level clause remains — nested ones surface Spark's parse
     error, the documented contract for constructs beyond the normalizer."""
-    aj_at = -1
-    left = False
-    for i, ch, depth in _scan_top_level(sql):
-        if depth == 0 and _kw_at(sql, i, "ARRAY"):
-            rest = sql[i + 5 :].lstrip()
-            if rest.upper().startswith("JOIN"):
-                aj_at = i
-                break
+    aj_at = sqltext.find_keyword(sql, "ARRAY JOIN")
     if aj_at == -1:
         return sql
+    left = False
     # optional LEFT immediately before
     head_end = aj_at
     pre = sql[:aj_at].rstrip()
@@ -471,10 +327,10 @@ def _rewrite_array_join(sql: str) -> str:
     # operand starts after 'JOIN'
     j = sql.upper().index("JOIN", aj_at) + 4
     # find the top-level FROM that owns this clause (last FROM before it)
-    from_at = -1
-    for i, ch, depth in _scan_top_level(sql[:head_end]):
-        if depth == 0 and _kw_at(sql[:head_end], i, "FROM"):
-            from_at = i
+    before = sql[:head_end]
+    from_at, k = -1, sqltext.find_keyword(before, "FROM")
+    while k != -1:
+        from_at, k = k, sqltext.find_keyword(before, "FROM", start=k + 4)
     if from_at == -1:
         raise ValueError("ARRAY JOIN without a FROM clause")
     src = sql[from_at + 4 : head_end].strip()
@@ -482,7 +338,7 @@ def _rewrite_array_join(sql: str) -> str:
     op_end = len(sql)
     as_at = -1
     comma_at = -1
-    for i, ch, depth in _scan_top_level(sql, j):
+    for i, ch, depth in sqltext.scan(sql, j):
         if depth != 0:
             continue
         if ch == ",":
@@ -490,10 +346,10 @@ def _rewrite_array_join(sql: str) -> str:
         if ch == ";":
             op_end = i
             break
-        if any(_kw_at(sql, i, k) for k in _AJ_STOP):
+        if any(sqltext.word_at(sql, i, k) for k in _AJ_STOP):
             op_end = i
             break
-        if _kw_at(sql, i, "AS") and as_at == -1:
+        if sqltext.word_at(sql, i, "AS") and as_at == -1:
             as_at = i
     if comma_at != -1 and comma_at < op_end:
         raise ValueError(
@@ -523,93 +379,12 @@ def _rewrite_array_join(sql: str) -> str:
 _COMBINATOR_BASES = frozenset({"count", "sum", "avg", "min", "max"})
 
 
-def _matching_paren(sql: str, open_idx: int) -> int:
-    """Index of the ')' matching the '(' at ``open_idx``, honoring string
-    literals ('' escapes), double-quoted and backtick identifiers — the
-    quote-aware sibling of a raw paren count (a ')' inside a literal must
-    not close the argument list). Returns -1 when unbalanced."""
-    depth = 0
-    i, n = open_idx, len(sql)
-    while i < n:
-        ch = sql[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "\\" and j + 1 < n:
-                    j += 2  # backslash escape (clickhouse-style \')
-                    continue
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            i = j + 1
-            continue
-        if ch in '"`':
-            j = sql.find(ch, i + 1)
-            i = n if j == -1 else j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return -1
-
-
-def _split_top_commas(segment: str) -> list[str]:
-    """Split an argument list on top-level commas, honoring nested parens
-    and string/identifier quoting (a comma inside '...' is data)."""
-    parts: list[str] = []
-    cur: list[str] = []
-    depth = 0
-    i, n = 0, len(segment)
-    while i < n:
-        ch = segment[i]
-        if ch == "'":
-            j = i + 1
-            while j < n:
-                if segment[j] == "\\" and j + 1 < n:
-                    j += 2  # backslash escape (clickhouse-style \')
-                    continue
-                if segment[j] == "'" and j + 1 < n and segment[j + 1] == "'":
-                    j += 2
-                    continue
-                if segment[j] == "'":
-                    break
-                j += 1
-            cur.append(segment[i : min(j + 1, n)])
-            i = j + 1
-            continue
-        if ch in '"`':
-            j = segment.find(ch, i + 1)
-            j = n - 1 if j == -1 else j
-            cur.append(segment[i : j + 1])
-            i = j + 1
-            continue
-        if ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-        i += 1
-    parts.append("".join(cur))
-    return parts
-
-
 def _rewrite_iff(sql: str) -> str:
     """Snowflake ``IFF(cond, a, b)`` → Spark ``IF(cond, a, b)`` — same
     three-argument conditional, different name. Only a whole-word IFF
-    followed by '(' rewrites; string literals are never touched."""
-    for i, ch, depth in _scan_top_level(sql):
-        if not _kw_at(sql, i, "IFF"):
+    followed by '(' rewrites."""
+    for i, ch, depth in sqltext.scan(sql):
+        if not sqltext.word_at(sql, i, "IFF"):
             continue
         j = i + 3
         while j < len(sql) and sql[j].isspace():
@@ -627,7 +402,9 @@ def _rewrite_regex_match(sql: str) -> str:
     pattern. Only a ``~`` with a string-literal right operand is treated
     as the operator (a tilde with any other operand passes through —
     Spark has no other infix ``~``, so its parser reports it)."""
-    for i, ch, depth in _scan_top_level(sql):
+    if "~" not in sql:
+        return sql
+    for i, ch, depth in sqltext.scan(sql):
         if ch != "~":
             continue
         neg = i > 0 and sql[i - 1] == "!"
@@ -637,24 +414,15 @@ def _rewrite_regex_match(sql: str) -> str:
             j += 1
         if j >= len(sql) or sql[j] != "'":
             continue  # not a literal pattern: leave for Spark's parser
-        # literal end ('' escapes)
-        k = j + 1
-        n = len(sql)
-        while k < n:
-            if sql[k] == "'" and k + 1 < n and sql[k + 1] == "'":
-                k += 2
-                continue
-            if sql[k] == "'":
-                break
-            k += 1
-        pat = sql[j : k + 1]
+        _, _, k = next(sqltext.spans(sql, j))
+        pat = sql[j:k]
         if star:
             pat = "'(?i)" + pat[1:]
         start = i - 1 if neg else i
         # `lhs NOT RLIKE pat` parses on Spark with semantics identical to
         # postgres `lhs !~ pat` (negation scoped to the comparison)
         repl = f"NOT RLIKE {pat}" if neg else f"RLIKE {pat}"
-        return _rewrite_regex_match(sql[:start] + repl + sql[k + 1 :])
+        return _rewrite_regex_match(sql[:start] + repl + sql[k:])
     return sql
 
 
@@ -662,10 +430,9 @@ def _rewrite_exclude(sql: str) -> str:
     """DuckDB ``* EXCLUDE (cols)`` / ``* EXCLUDE col`` → Spark's
     ``* EXCEPT (cols)`` — same semantics, different keyword. Only an
     EXCLUDE directly following a ``*`` (or ``alias.*``) is rewritten;
-    the single-bare-column form gains the parentheses Spark requires.
-    String literals are never touched (the shared top-level scanner)."""
-    for i, ch, depth in _scan_top_level(sql):
-        if not _kw_at(sql, i, "EXCLUDE"):
+    the single-bare-column form gains the parentheses Spark requires."""
+    for i, ch, depth in sqltext.scan(sql):
+        if not sqltext.word_at(sql, i, "EXCLUDE"):
             continue
         pre = sql[:i].rstrip()
         if not pre.endswith("*"):
@@ -690,10 +457,9 @@ def _rewrite_combinators(sql: str) -> str:
     ``sumIf(x, cond)`` / ``avgIf`` / ``minIf`` / ``maxIf`` →
     ``sum(CASE WHEN cond THEN x END)`` (non-matching rows contribute
     NULL, which the aggregate skips — ClickHouse's exact semantics), and
-    ``countIf(cond)`` → ``count(CASE WHEN cond THEN 1 END)``. String
-    literals are never touched; other combinators (-Array, -State,
-    -Merge) surface Spark's error unchanged."""
-    for i, ch, depth in _scan_top_level(sql):
+    ``countIf(cond)`` → ``count(CASE WHEN cond THEN 1 END)``. Other
+    combinators (-Array, -State, -Merge) surface Spark's error unchanged."""
+    for i, ch, depth in sqltext.scan(sql):
         if ch != "(":
             continue
         # identifier ending just before the paren (whitespace allowed)
@@ -709,17 +475,14 @@ def _rewrite_combinators(sql: str) -> str:
         base = ident[:-2]
         if base.lower() not in _COMBINATOR_BASES:
             continue
-        q = _matching_paren(sql, i)
+        q = sqltext.matching_paren(sql, i)
         if q == -1:
             continue
-        parts = _split_top_commas(sql[i + 1 : q])
+        parts = sqltext.split(sql[i + 1 : q])
         if base.lower() == "count" and len(parts) == 1:
-            repl = f"count(CASE WHEN {parts[0].strip()} THEN 1 END)"
+            repl = f"count(CASE WHEN {parts[0]} THEN 1 END)"
         elif len(parts) == 2:
-            repl = (
-                f"{base.lower()}(CASE WHEN {parts[1].strip()}"
-                f" THEN {parts[0].strip()} END)"
-            )
+            repl = f"{base.lower()}(CASE WHEN {parts[1]} THEN {parts[0]} END)"
         else:
             continue  # wrong arity: let Spark's parser report it
         return _rewrite_combinators(sql[:j] + repl + sql[q + 1 :])
@@ -742,13 +505,7 @@ def _rewrite_flatten(sql: str) -> str:
     rewritten output until none remain; FLATTEN's richer outputs
     (seq/key/path/index over objects) surface Spark's error unchanged,
     the documented contract for constructs beyond the normalizer."""
-    lat_at = -1
-    for i, ch, depth in _scan_top_level(sql):
-        if depth == 0 and _kw_at(sql, i, "LATERAL"):
-            rest = sql[i + 7 :].lstrip()
-            if rest.upper().startswith("FLATTEN"):
-                lat_at = i
-                break
+    lat_at = sqltext.find_keyword(sql, "LATERAL FLATTEN")
     if lat_at == -1:
         return sql
     p = sql.upper().index("FLATTEN", lat_at) + 7
@@ -756,10 +513,10 @@ def _rewrite_flatten(sql: str) -> str:
         p += 1
     if p >= len(sql) or sql[p] != "(":
         return sql
-    q = _matching_paren(sql, p)
+    q = sqltext.matching_paren(sql, p)
     if q == -1:
         raise ValueError("FLATTEN: unbalanced parentheses")
-    parts = [a for a in _split_top_commas(sql[p + 1 : q]) if a.strip()]
+    parts = sqltext.split(sql[p + 1 : q])
     input_expr, outer = None, False
     for part in parts:
         m = re.match(r"\s*(input|outer)\s*=>\s*(.*?)\s*$", part, re.I | re.S)
@@ -807,42 +564,30 @@ def _rewrite_group_concat(sql: str, dialect: str = "mysql") -> str:
     BY together, values are deduped AFTER the sort (array_distinct keeps
     the first occurrence in sort order) — exact MySQL semantics whenever
     the keys derive from expr, and a deterministic dedup-by-value when
-    they don't. All parsing is quote-aware (shared scanners),
-    nested parens in exprs/keys/sep survive, and multiple occurrences
-    rewrite via recursion. Everything stays a single grouped aggregate:
-    the sort is a per-group array sort after the partial agg, no extra
-    shuffle."""
-    gc_at = -1
-    for i, ch, depth in _scan_top_level(sql):
-        if _kw_at(sql, i, "GROUP_CONCAT"):
-            gc_at = i
-            break
+    they don't. Nested parens in exprs/keys/sep survive, and multiple
+    occurrences rewrite via recursion. Everything stays a single grouped
+    aggregate: the sort is a per-group array sort after the partial agg,
+    no extra shuffle."""
+    gc_at = next(
+        (i for i, _, _ in sqltext.scan(sql) if sqltext.word_at(sql, i, "GROUP_CONCAT")), -1
+    )
     if gc_at == -1:
         return sql
     open_idx = sql.find("(", gc_at)
     if open_idx == -1 or sql[gc_at + 12 : open_idx].strip():
         return sql
-    close_idx = _matching_paren(sql, open_idx)
+    close_idx = sqltext.matching_paren(sql, open_idx)
     if close_idx == -1:
         return sql
     inner = sql[open_idx + 1 : close_idx]
     body = inner.lstrip()
     distinct = False
-    if _kw_at(body, 0, "DISTINCT"):
+    if sqltext.word_at(body, 0, "DISTINCT"):
         distinct = True
         body = body[8:].lstrip()
     # locate top-level ORDER ... BY and SEPARATOR within the argument
-    order_at = sep_at = -1
-    for i, ch, depth in _scan_top_level(body):
-        if depth != 0:
-            continue
-        if order_at == -1 and _kw_at(body, i, "ORDER"):
-            rest = body[i + 5 :].lstrip()
-            if rest.upper().startswith("BY"):
-                order_at = i
-        if sep_at == -1 and _kw_at(body, i, "SEPARATOR"):
-            sep_at = i
-            break
+    order_at = sqltext.find_keyword(body, "ORDER BY")
+    sep_at = sqltext.find_keyword(body, "SEPARATOR")
     sep = "','"
     if sep_at != -1:
         sep = body[sep_at + 9 :].strip() or sep
@@ -852,7 +597,7 @@ def _rewrite_group_concat(sql: str, dialect: str = "mysql") -> str:
     ordered = order_at != -1 and (sep_at == -1 or order_at < sep_at)
     expr = (body_main[:order_at] if ordered else body_main).strip()
     # dialect-specific argument-list comma (see docstring)
-    parts = [p.strip() for p in _split_top_commas(expr)]
+    parts = sqltext.split(expr)
     if len(parts) == 2 and dialect == "sqlite" and sep_at == -1:
         expr, sep = parts[0], parts[1]
     elif len(parts) > 1 and dialect == "mysql":
@@ -869,8 +614,7 @@ def _rewrite_group_concat(sql: str, dialect: str = "mysql") -> str:
     ord_part = ord_part[2:].strip()  # past BY
     keys: list[str] = []
     descs: list[bool] = []
-    for item in _split_top_commas(ord_part):
-        item = item.strip()
+    for item in sqltext.split(ord_part):
         up = item.upper()
         if up.endswith(" DESC"):
             descs.append(True)
@@ -903,70 +647,24 @@ def _rewrite_group_concat(sql: str, dialect: str = "mysql") -> str:
     )
 
 
+_TOP_RE = re.compile(r"(?<!\w)(SELECT)\s+TOP\s+(\d+)", re.I)
+
+
 def _normalize_mssql(sql: str) -> str:
     """mssql surface: ``[bracket]`` identifiers → backticks and the
-    top-level ``SELECT TOP n`` → a trailing ``LIMIT n``. Char scanner so
-    brackets/TOP inside string literals are never touched; TOP is only
-    rewritten for the outermost SELECT (subquery TOP would need a real
-    parser — those surface Spark's parse error unchanged)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    limit: str | None = None
-    depth = 0
-    while i < n:
-        ch = sql[i]
-        if ch == "'":  # string literal: verbatim, honoring '' escapes
-            j = i + 1
-            while j < n:
-                if sql[j] == "'" and j + 1 < n and sql[j + 1] == "'":
-                    j += 2
-                    continue
-                if sql[j] == "'":
-                    break
-                j += 1
-            out.append(sql[i : j + 1])
-            i = j + 1
-        elif ch == "[":  # bracket identifier -> backticks
-            j = sql.find("]", i + 1)
-            if j == -1:
-                out.append(sql[i:])
-                break
-            out.append("`" + sql[i + 1 : j] + "`")
-            i = j + 1
-        elif ch in "()":
-            depth += 1 if ch == "(" else -1
-            out.append(ch)
-            i += 1
-        elif (
-            depth == 0
-            and limit is None
-            and sql[i : i + 6].upper() == "SELECT"
-            and (i + 6 == n or sql[i + 6].isspace())
-            and (i == 0 or not (sql[i - 1].isalnum() or sql[i - 1] == "_"))
-        ):
-            j = i + 6
-            while j < n and sql[j].isspace():
-                j += 1
-            if sql[j : j + 3].upper() == "TOP" and j + 3 < n and sql[j + 3].isspace():
-                k = j + 3
-                while k < n and sql[k].isspace():
-                    k += 1
-                d = k
-                while d < n and sql[d].isdigit():
-                    d += 1
-                if d > k:
-                    limit = sql[k:d]
-                    out.append(sql[i : i + 6] + " ")
-                    i = d
-                    continue
-            out.append(sql[i : i + 6])
-            i += 6
-        else:
-            out.append(ch)
-            i += 1
-    text = "".join(out)
-    if limit is not None:
-        text = text.rstrip().rstrip(";") + f" LIMIT {limit}"
+    top-level ``SELECT TOP n`` → a trailing ``LIMIT n``. Brackets are not
+    quotes in Spark (``a[1]`` indexes an array), so they are rewritten only
+    in code; TOP is only rewritten for the outermost SELECT (subquery TOP
+    would need a real parser — those surface Spark's parse error
+    unchanged)."""
+    text = "".join(
+        sql[a:b] if kind else re.sub(r"\[([^\]]*)\]", r"`\1`", sql[a:b])
+        for kind, a, b in sqltext.spans(sql)
+    )
+    for i, _, depth in sqltext.scan(text):
+        if depth == 0 and (m := _TOP_RE.match(text, i)):
+            body = text[: m.start()] + m.group(1) + " " + text[m.end() :]
+            return sqltext.close_comment(body.rstrip().rstrip(";")) + f" LIMIT {m.group(2)}"
     return text
 
 
@@ -1138,7 +836,7 @@ class ExecutionContext:
             self.spark.conf.set("spark.sql.shuffle.partitions", str(n))
 
     def execute_script(self, sql: str) -> list[DataFrame]:
-        """Run a multi-statement script (';'-separated, quote-aware)
+        """Run a multi-statement script (';'-separated, see _split_statements)
         statement by statement, returning each statement's result frame.
         The single-statement ``execute`` stays strict (the reference
         truncates scripts to ``ast[0]`` silently, src/context.rs:49 — we
@@ -1169,31 +867,8 @@ class ExecutionContext:
 
     @staticmethod
     def _split_statements(sql: str) -> list[str]:
-        """Split on top-level ';' while respecting quoted strings
-        (both '' doubling and backslash escapes — Spark's default parser
-        accepts 'don\'t', and a ';' inside such a literal must not
-        split the statement)."""
-        out, buf, quote = [], [], None
-        it = iter(range(len(sql)))
-        for i in it:
-            ch = sql[i]
-            if quote:
-                buf.append(ch)
-                if ch == "\\" and i + 1 < len(sql):
-                    buf.append(sql[i + 1])
-                    next(it, None)
-                    continue
-                if ch == quote:
-                    quote = None
-            elif ch in ("'", '"'):
-                quote = ch
-                buf.append(ch)
-            elif ch == ";":
-                if "".join(buf).strip():
-                    out.append("".join(buf).strip())
-                buf = []
-            else:
-                buf.append(ch)
-        if "".join(buf).strip():
-            out.append("".join(buf).strip())
-        return out
+        """Split on top-level ';' (``mesin_spark.sqltext``'s rule: a ';' in
+        a literal, a quoted identifier or a comment does not split). The
+        comments around a statement are dropped, so its leading keyword
+        routes it."""
+        return sqltext.split(sql, ";")

@@ -39,6 +39,7 @@ from pyspark.sql import types as Ty
 from mesin_spark.ext.ckpt import ckpt
 
 from mesin_spark.catalog import Catalog, CatalogError, IndexMeta, TableMeta, local_frame
+from mesin_spark.sqltext import matching_paren, split
 
 
 class ConstraintViolation(CatalogError):
@@ -46,18 +47,6 @@ class ConstraintViolation(CatalogError):
     ``enforce_constraints`` table property — see
     ManagedTable.validate_constraints)."""
 
-
-def _balanced_paren_body(text: str, start: int) -> str:
-    """Contents of the paren group opening at ``start`` (nesting-aware)."""
-    depth = 0
-    for i in range(start, len(text)):
-        if text[i] == "(":
-            depth += 1
-        elif text[i] == ")":
-            depth -= 1
-            if depth == 0:
-                return text[start + 1 : i]
-    raise ValueError(f"unbalanced parens in constraint text: {text[:60]!r}")
 
 # DataTypeEnum (reference common.rs:69-80) → Spark types; sqlparser mapping
 # at tmp/crud.txt:423-437. Unsupported there (decimal/interval/arrays/...)
@@ -969,17 +958,18 @@ class ManagedTable:
             if kind in ("PRIMARY_KEY", "UNIQUE"):
                 m = re.search(r"\(([^)]*)\)", text)
                 if m:
-                    cols = [
-                        x.strip().strip('"').strip("`")
-                        for x in m.group(1).split(",")
-                        if x.strip()
-                    ]
+                    cols = [x.strip('"').strip("`") for x in split(m.group(1))]
                     label = "PRIMARY KEY" if kind == "PRIMARY_KEY" else "UNIQUE"
                     key_sets.append((label, cols))
             elif kind == "CHECK":
                 i = text.find("(")
                 if i >= 0:
-                    checks.append(_balanced_paren_body(text, i).strip())
+                    j = matching_paren(text, i)
+                    if j == -1:
+                        raise ValueError(
+                            f"unbalanced parens in constraint text: {text[:60]!r}"
+                        )
+                    checks.append(text[i + 1 : j].strip())
             elif kind == "FOREIGN_KEY":
                 m = re.search(
                     r"FOREIGN\s+KEY\s*\(([^)]*)\)\s*REFERENCES\s+"
@@ -988,11 +978,7 @@ class ManagedTable:
                     re.I,
                 )
                 if m:
-                    child = [x.strip() for x in m.group(1).split(",") if x.strip()]
-                    parent_cols = [
-                        x.strip() for x in m.group(3).split(",") if x.strip()
-                    ]
-                    fks.append((child, m.group(2), parent_cols))
+                    fks.append((split(m.group(1)), m.group(2), split(m.group(3))))
         # PRIMARY KEY implies NOT NULL on its columns (SQL standard)
         for label, cols in key_sets:
             if label == "PRIMARY KEY":

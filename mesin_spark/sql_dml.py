@@ -7,9 +7,9 @@ unlike the reference (which stops at pretty-printing the plan,
 src/context.rs:53), actually executes them.
 
 Parsing strategy: statements are recognized by leading keyword and cut
-at TOP-LEVEL keywords (WHERE / SET / VALUES) with a quote- and
-paren-aware scanner — expressions inside them are never re-parsed here;
-they pass through to Spark SQL (`F.expr`) which is the single
+at TOP-LEVEL keywords (WHERE / SET / VALUES) with ``mesin_spark.sqltext``,
+which holds Spark's lexical rule — expressions inside them are never
+re-parsed here; they pass through to Spark SQL (`F.expr`) which is the single
 expression grammar everywhere else in the engine. VALUES literal rows
 are evaluated by Spark itself (``SELECT * FROM (VALUES ...)``), so
 every literal form Spark accepts works here — no hand-rolled literal
@@ -27,6 +27,7 @@ from pyspark.sql import DataFrame
 
 from mesin_spark.catalog import local_frame
 from mesin_spark.dml import ColumnDefinition, DdlSession
+from mesin_spark.sqltext import find_keyword, matching_paren, scan, split, word_at
 
 #: Statement keywords this router owns; anything else is a query and
 #: falls through to ``spark.sql`` (the Query arm of the dispatcher).
@@ -62,68 +63,14 @@ def is_dml(sql: str) -> bool:
     return kw in DML_KEYWORDS
 
 
-# -- top-level text scanning ----------------------------------------------
-
-
-def _scan(s: str):
-    """Yield (index, char, depth, in_quote) over s, tracking paren depth
-    and single/double-quoted runs ('' doubling AND backslash escapes
-    honored — Spark's default parser accepts both)."""
-    depth, quote, i, n = 0, None, 0, len(s)
-    while i < n:
-        ch = s[i]
-        if quote:
-            if ch == "\\" and i + 1 < n:
-                yield i, ch, depth, True
-                yield i + 1, s[i + 1], depth, True
-                i += 2
-                continue
-            if ch == quote:
-                if quote == "'" and i + 1 < n and s[i + 1] == "'":
-                    yield i, ch, depth, True
-                    i += 1
-                else:
-                    quote = None
-            yield i, ch, depth, quote is not None
-        else:
-            if ch in ("'", '"'):
-                quote = ch
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-            yield i, ch, depth, quote is not None
-        i += 1
-
-
-def _find_keyword(s: str, word: str) -> int:
-    """Index of the first TOP-LEVEL, unquoted, word-boundary occurrence
-    of ``word`` (case-insensitive), or -1."""
-    w = word.upper()
-    L = len(w)
-    up = s.upper()
-    for i, _ch, depth, q in _scan(s):
-        if depth == 0 and not q and up.startswith(w, i):
-            before_ok = i == 0 or not (up[i - 1].isalnum() or up[i - 1] == "_")
-            j = i + L
-            after_ok = j >= len(s) or not (up[j].isalnum() or up[j] == "_")
-            if before_ok and after_ok:
-                return i
-    return -1
-
-
-def _split_toplevel(s: str, sep: str = ",") -> list[str]:
-    """Split on top-level, unquoted ``sep``."""
-    parts, start = [], 0
-    for i, ch, depth, q in _scan(s):
-        if ch == sep and depth == 0 and not q:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return [p.strip() for p in parts if p.strip()]
-
-
 _IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
+
+
+def _close_paren(text: str, open_idx: int) -> int:
+    close = matching_paren(text, open_idx)
+    if close == -1:
+        raise ValueError(f"unbalanced parens: {text[open_idx:][:60]!r}")
+    return close
 
 
 # -- statement handlers ----------------------------------------------------
@@ -143,13 +90,11 @@ def _insert(sess: DdlSession, sql: str) -> DataFrame:
     table, rest = m.group(1), sql[m.end() :].lstrip()
     columns = None
     if rest.startswith("("):
-        close = next(
-            i for i, ch, depth, q in _scan(rest) if ch == ")" and depth == 0 and not q
-        )
+        close = _close_paren(rest, 0)
         # normalize_dialect rewrites "quoted" identifiers to `backticked`
         # before dispatch — strip both quoting styles or no name matches
         # the schema and every column silently inserts NULL
-        columns = [c.strip().strip('"').strip("`") for c in rest[1:close].split(",")]
+        columns = [c.strip('"').strip("`") for c in split(rest[1:close])]
         rest = rest[close + 1 :].lstrip()
     mt = sess.table(table)
     if re.match(r"VALUES\b", rest, re.I):
@@ -202,12 +147,12 @@ def _update(sess: DdlSession, sql: str) -> DataFrame:
     if not m:
         raise ValueError(f"Cannot parse UPDATE statement: {sql[:80]}")
     table, rest = m.group(1), sql[m.end() :]
-    wpos = _find_keyword(rest, "WHERE")
+    wpos = find_keyword(rest, "WHERE")
     set_part, where = (
         (rest[:wpos], rest[wpos + 5 :].strip()) if wpos >= 0 else (rest, None)
     )
     assignments: dict[str, str] = {}
-    for a in _split_toplevel(set_part):
+    for a in split(set_part):
         eq = a.find("=")
         col, expr = a[:eq].strip().strip('"').strip("`"), a[eq + 1 :].strip()
         assignments[col] = expr
@@ -238,7 +183,7 @@ def _delete(sess: DdlSession, sql: str) -> DataFrame:
 
 def _column_def(text: str) -> ColumnDefinition:
     parts = text.split()
-    name = parts[0].strip('"')
+    name = parts[0].strip('"').strip("`")
     # type may be parameterized: DECIMAL(10,2) arrives unsplit because
     # column defs are cut at top-level commas only
     m = re.match(rf"{re.escape(parts[0])}\s+([A-Za-z0-9_]+(\s*\([^)]*\))?)", text)
@@ -295,7 +240,7 @@ def _analyze(sess: DdlSession, sql: str) -> DataFrame:
     mt = sess.table(name)
     df = mt.df()
     if m.group(3):
-        cols = [c.strip() for c in m.group(3).split(",") if c.strip()]
+        cols = split(m.group(3))
     else:
         numeric = {"int", "bigint", "smallint", "tinyint", "float", "double", "decimal"}
         cols = [
@@ -379,29 +324,18 @@ def _copy(sess: DdlSession, sql: str) -> DataFrame:
 
 def _split_when_clauses(whens: str) -> list[str]:
     """Split a MERGE's WHEN region at TOP-LEVEL WHEN keywords only —
-    quote/paren aware AND CASE-depth aware, so a CASE WHEN ... END
+    outside parens AND outside CASE ... END, so a CASE WHEN ... END
     inside an UPDATE SET expression never shatters the clause."""
-    up = whens.upper()
     case_depth = 0
     cuts = []
-    for i, _ch, depth, q in _scan(whens):
-        if q or depth != 0:
+    for i, _ch, depth in scan(whens):
+        if depth != 0:
             continue
-        before_ok = i == 0 or not (up[i - 1].isalnum() or up[i - 1] == "_")
-        if not before_ok:
-            continue
-
-        def word_at(w):
-            j = i + len(w)
-            return up.startswith(w, i) and (
-                j >= len(whens) or not (up[j].isalnum() or up[j] == "_")
-            )
-
-        if word_at("CASE"):
+        if word_at(whens, i, "CASE"):
             case_depth += 1
-        elif word_at("END"):
+        elif word_at(whens, i, "END"):
             case_depth = max(0, case_depth - 1)
-        elif word_at("WHEN") and case_depth == 0:
+        elif word_at(whens, i, "WHEN") and case_depth == 0:
             cuts.append(i)
     parts = []
     for k, start in enumerate(cuts):
@@ -421,9 +355,7 @@ def _merge(sess: DdlSession, sql: str) -> DataFrame:
         raise ValueError(f"Cannot parse MERGE statement: {sql[:80]}")
     table, rest = m.group(1), sql[m.end() :].lstrip()
     if rest.startswith("("):
-        close = next(
-            i for i, ch, depth, q in _scan(rest) if ch == ")" and depth == 0 and not q
-        )
+        close = _close_paren(rest, 0)
         source = sess.spark.sql(rest[1:close])
         rest = rest[close + 1 :].lstrip()
     else:
@@ -437,7 +369,7 @@ def _merge(sess: DdlSession, sql: str) -> DataFrame:
     if not om:
         raise ValueError(f"MERGE missing ON clause: {rest[:60]}")
     rest = rest[om.end() :]
-    wpos = _find_keyword(rest, "WHEN")
+    wpos = find_keyword(rest, "WHEN")
     if wpos < 0:
         raise ValueError("MERGE has no WHEN clauses")
     cond, whens = rest[:wpos], rest[wpos:]
@@ -463,7 +395,7 @@ def _merge(sess: DdlSession, sql: str) -> DataFrame:
             set_part = re.sub(r"(?i)^MATCHED\s+THEN\s+UPDATE\s+SET\s+", "", clause)
             update_cols = [
                 a.split("=")[0].strip().split(".")[-1].strip('"').strip("`")
-                for a in _split_toplevel(set_part)
+                for a in split(set_part)
             ]
         elif re.match(r"NOT\s+MATCHED\s+THEN\s+INSERT\b", clause, re.I):
             insert_unmatched = True
@@ -477,10 +409,10 @@ def _merge(sess: DdlSession, sql: str) -> DataFrame:
                 im = re.match(r"\(([^)]*)\)\s+VALUES\s+\((.*)\)\s*$", extra, re.I | re.S)
                 ok = False
                 if im:
-                    cols = [c.strip().strip('"').strip("`") for c in im.group(1).split(",")]
+                    cols = [c.strip('"').strip("`") for c in split(im.group(1))]
                     vals = [
-                        v.strip().split(".")[-1].strip().strip('"').strip("`")
-                        for v in _split_toplevel(im.group(2))
+                        v.split(".")[-1].strip().strip('"').strip("`")
+                        for v in split(im.group(2))
                     ]
                     ok = cols == vals and all(
                         re.fullmatch(_IDENT, c) for c in cols
@@ -531,7 +463,7 @@ def _create_matview(sess: DdlSession, sql: str, m: "re.Match") -> DataFrame:
     from mesin_spark.ext.matview import create_agg_view
 
     name = m.group(1)
-    key_cols = [c.strip() for c in m.group(2).split(",") if c.strip()]
+    key_cols = split(m.group(2))
     if not key_cols:
         raise ValueError("CREATE MATERIALIZED VIEW requires KEY (cols)")
     body = m.group(3).strip()
@@ -544,12 +476,12 @@ def _create_matview(sess: DdlSession, sql: str, m: "re.Match") -> DataFrame:
         raise ValueError(
             "materialized view body must be SELECT ... FROM <table> GROUP BY ..."
         )
-    group_by = [g.strip() for g in sm.group(3).rstrip(";").split(",")]
+    group_by = split(sm.group(3).rstrip(";"))
     group_cols: list[str] = []
     sum_cols: list[str] = []
     has_count = False
-    for item in _split_toplevel(sm.group(1)):
-        expr = item.strip()
+    for item in split(sm.group(1)):
+        expr = item
         alias = re.match(rf"(?is)^(.+?)\s+AS\s+{_IDENT}$", expr)
         if alias:
             expr = alias.group(1).strip()
@@ -561,7 +493,7 @@ def _create_matview(sess: DdlSession, sql: str, m: "re.Match") -> DataFrame:
             group_cols.append(expr)
         else:
             raise ValueError(
-                f"unsupported materialized-view select item {item.strip()!r} "
+                f"unsupported materialized-view select item {item!r} "
                 "(supported: group columns, COUNT(*), SUM(col))"
             )
     if not has_count:
@@ -638,7 +570,7 @@ def _optimize(sess: DdlSession, sql: str) -> DataFrame:
     target = int(m.group(2)) if m.group(2) else 256
     sort_by = None
     if m.group(3):
-        sort_by = [c.strip().strip('"').strip("`") for c in m.group(3).split(",")]
+        sort_by = [c.strip('"').strip("`") for c in split(m.group(3))]
     n_files = mt.compact(target_file_mb=target, sort_by=sort_by)
     return _status(sess, "OPTIMIZE", m.group(1), n_files)
 
@@ -758,13 +690,9 @@ def _create(sess: DdlSession, sql: str) -> DataFrame:
         if_not_exists = tm.group(1) is not None
         table = tm.group(2)
         body_open = tm.end() - 1
-        body = sql[body_open:]
-        close = next(
-            i for i, ch, depth, q in _scan(body) if ch == ")" and depth == 0 and not q
-        )
-        inner = body[1:close]
+        close = _close_paren(sql, body_open)
         columns, constraints = [], []
-        for item in _split_toplevel(inner):
+        for item in split(sql[body_open + 1 : close]):
             cm = _TABLE_CONSTRAINT_RE.match(item)
             if cm:
                 constraints.append(
@@ -782,7 +710,7 @@ def _create(sess: DdlSession, sql: str) -> DataFrame:
     )
     if im:
         unique, name, table = im.group(1) is not None, im.group(3), im.group(4)
-        cols = [c.strip().strip('"') for c in im.group(5).split(",")]
+        cols = [c.strip('"') for c in split(im.group(5))]
         meta = sess.create_index(table, cols, name=name, unique=unique)
         return _status(sess, "CREATE INDEX", meta.name, 0)
     raise ValueError(f"Unsupported CREATE statement: {sql[:80]}")
@@ -798,7 +726,7 @@ def _drop(sess: DdlSession, sql: str) -> DataFrame:
         raise ValueError(f"Cannot parse DROP statement: {sql[:80]}")
     kind = m.group(1).upper()
     if_exists = m.group(2) is not None
-    names = [n.strip().strip('"') for n in m.group(3).split(",")]
+    names = [n.strip('"') for n in split(m.group(3))]
     if kind == "TABLE":
         sess.drop_table(*names, if_exists=if_exists, cascade=m.group(4) is not None)
         return _status(sess, "DROP TABLE", ",".join(names), 0)
@@ -835,20 +763,13 @@ def _alter(sess: DdlSession, sql: str) -> DataFrame:
         # key/value metadata; 'enforce_constraints' = 'true' switches on
         # write-time constraint validation (ManagedTable.validate_constraints)
         open_at = pm.end() - 1
-        seg = action[open_at:]
-        close_rel = next(
-            (i for i, ch, depth, q in _scan(seg) if ch == ")" and depth == 0 and not q),
-            None,
-        )
-        if close_rel is None:
-            raise ValueError(f"SET PROPERTIES has unbalanced parens: {action[:60]}")
-        close = open_at + close_rel
+        close = _close_paren(action, open_at)
         if action[close + 1 :].strip():
             raise ValueError(
                 f"Unexpected text after SET PROPERTIES list: {action[close + 1 :][:40]!r}"
             )
         n_set = 0
-        for pair in _split_toplevel(action[open_at + 1 : close]):
+        for pair in split(action[open_at + 1 : close]):
             km = re.match(r"'((?:[^']|'')*)'\s*=\s*'((?:[^']|'')*)'$", pair)
             if not km:
                 raise ValueError(

@@ -38,6 +38,14 @@ def test_multi_statement_errors(ctx):
 
 def test_semicolon_in_literal_not_split(ctx):
     assert ctx.execute("SELECT 'a;b' AS s").collect()[0].s == "a;b"
+    # nor in a backticked name or a comment
+    assert ctx.execute("SELECT 1 AS `a;b`").columns == ["a;b"]
+    assert ExecutionContext._split_statements("SELECT 1 -- it's one; really\n; SELECT 2") == [
+        "SELECT 1",
+        "SELECT 2",
+    ]
+    # a comment around a statement is not a statement of its own
+    assert ExecutionContext._split_statements("-- load\nSELECT 1; /* done */") == ["SELECT 1"]
 
 
 def test_dialect_surface():
@@ -192,6 +200,8 @@ def test_per_dialect_normalization(spark):
         == "SELECT  `col name` FROM `t` WHERE x = 'TOP 3' LIMIT 5"
     )
     assert nd("SELECT TOP 10 * FROM t;", "mssql") == "SELECT  * FROM t LIMIT 10"
+    # a trailing line comment does not swallow the LIMIT
+    assert nd("SELECT TOP 3 x FROM t -- top 3", "mssql") == "SELECT  x FROM t -- top 3\n LIMIT 3"
     # TOP in a subquery is out of scope: passes through (Spark raises)
     assert nd("SELECT (SELECT TOP 2 x FROM u) FROM t", "mssql").count("TOP") == 1
 
@@ -213,31 +223,45 @@ def test_normalize_dialect_properties(spark):
     from hypothesis import strategies as st
 
     from mesin_spark.context import normalize_dialect as nd
+    from mesin_spark.sqltext import spans
 
     ident = st.text("abcxyz_", min_size=1, max_size=6)
-    lit = st.text("ab:'\"`() ,.0", max_size=8).map(lambda s: "'" + s.replace("'", "''") + "'")
+    lit = st.one_of(
+        st.text("ab:'\"`() ,.0;-/*").map(lambda s: "'" + s.replace("'", "''") + "'"),
+        st.text("ab:'\\-/*;").map(
+            lambda s: "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        ),
+    )
+    # (text, the string literal in it or None)
     atom = st.one_of(
-        ident,
-        lit,
-        st.integers(0, 999).map(str),
-        ident.map(lambda s: f'"{s}"'),
-        st.tuples(ident, ident).map(lambda t: f"({t[0]} + {t[1]})"),
+        ident.map(lambda s: (s, None)),
+        lit.map(lambda s: (s, s)),
+        st.integers(0, 999).map(lambda i: (str(i), None)),
+        ident.map(lambda s: (f'"{s}"', None)),
+        st.tuples(ident, ident).map(lambda t: (f"({t[0]} + {t[1]})", None)),
     )
     casted = st.tuples(atom, st.sampled_from(["INT", "date", "DECIMAL(10,2)", "STRING"])).map(
-        lambda t: f"{t[0]}::{t[1]}"
+        lambda t: (f"{t[0][0]}::{t[1]}", t[0][1])
     )
     term = st.one_of(atom, casted)
-    sql = st.lists(term, min_size=1, max_size=5).map(lambda ts: "SELECT " + ", ".join(ts))
+    sql = st.lists(term, min_size=1, max_size=5).map(
+        lambda ts: ("SELECT " + ", ".join(t for t, _ in ts), [lit for _, lit in ts if lit])
+    )
 
-    @given(sql)
+    @given(sql, st.sampled_from(sorted(DIALECTS)))
     @settings(max_examples=300, deadline=None)
-    def check(s):
+    def check(case, dialect):
+        s, lits = case
         out = nd(s, "postgres")
         assert "CAST( AS" not in out
         assert "::" not in out.replace("'", "")  or "'" in s  # casts rewritten outside literals
         # idempotent: a second pass over cast-free output changes nothing
         again = nd(out, "postgres")
         assert again == out
+        # every dialect: each literal comes through byte-for-byte, in order
+        out = nd(s, dialect)
+        assert [out[a:b] for kind, a, b in spans(out) if kind == "'"] == lits
+        assert nd(out, dialect) == out
 
     check()
 
@@ -283,6 +307,11 @@ class TestQualifyRewrite:
 
         s = "SELECT 'we QUALIFY leads' AS tag, \"QUALIFY\" FROM t"
         assert _rewrite_qualify(s) == s
+        # nor in the predicate, nor in a comment before QUALIFY
+        out = _rewrite_qualify("SELECT a FROM t QUALIFY \"limit\" > 0")
+        assert out == "SELECT * FROM (SELECT a FROM t) _qualify WHERE \"limit\" > 0"
+        out = _rewrite_qualify("SELECT a FROM t -- don't\nQUALIFY rn = 1")
+        assert out == "SELECT * FROM (SELECT a FROM t -- don't\n) _qualify WHERE rn = 1"
 
     def test_subquery_qualify_untouched(self):
         from mesin_spark.context import _rewrite_qualify
@@ -295,6 +324,9 @@ class TestQualifyRewrite:
 
         s = "SELECT qualify_flag FROM t WHERE disqualify = 1"
         assert _rewrite_qualify(s) == s
+        # LIMIT inside a longer word does not end the predicate
+        out = _rewrite_qualify("SELECT a FROM t QUALIFY rn = 1 AND delimiter > 0")
+        assert out == "SELECT * FROM (SELECT a FROM t) _qualify WHERE rn = 1 AND delimiter > 0"
 
     def test_end_to_end_execute(self, spark):
         from mesin_spark.context import ExecutionContext
@@ -314,6 +346,16 @@ class TestQualifyRewrite:
         assert rows
         assert all(r["rn"] == 1 for r in rows)
         assert len({r["o_custkey"] for r in rows}) == len(rows)
+        rows2 = ctx.execute(
+            """
+            SELECT o_custkey, 1 AS delimiter,
+                   row_number() OVER (PARTITION BY o_custkey
+                                      ORDER BY o_totalprice DESC) AS rn
+            FROM orders_q -- don't
+            QUALIFY rn = 1 AND delimiter > 0
+            """
+        ).collect()
+        assert sorted(r["o_custkey"] for r in rows2) == sorted(r["o_custkey"] for r in rows)
 
 
 def test_cluster_conf_profile():
@@ -648,6 +690,9 @@ def test_exclude_rewrites():
     # EXCLUDE not after a star, or inside a literal: untouched
     s = "SELECT 'EXCLUDE nope', x AS exclude_col FROM t"
     assert ex(s) == s
+    # a backslash-escaped quote does not end the literal before it
+    s = "SELECT 'it\\'s' AS s, * EXCLUDE (x) FROM t"
+    assert ex(s) == "SELECT 'it\\'s' AS s, * EXCEPT (x) FROM t"
 
 
 def test_regex_match_rewrites():
@@ -674,6 +719,8 @@ def test_iff_rewrites_and_executes(spark):
     c = ExecutionContext(dialect="snowflake", spark=spark)
     row = c.execute("SELECT IFF(1 < 2, 'yes', 'no') AS r").collect()[0]
     assert row.r == "yes"
+    row = c.execute("SELECT 'it\\'s' AS s, IFF(1 < 2, 'yes', 'no') AS r").collect()[0]
+    assert (row.s, row.r) == ("it's", "yes")
 
 
 def test_group_concat_rewrites():

@@ -252,18 +252,25 @@ def test_execute_script_returns_per_statement_frames(ctx):
 def test_scanner_units():
     """Pure-text edge cases for the statement scanner: keywords inside
     literals and parens must not cut; doubled-quote escapes honored."""
-    from mesin_spark.sql_dml import _find_keyword, _split_toplevel, is_dml
+    from mesin_spark.sql_dml import _column_def, is_dml
+    from mesin_spark.sqltext import find_keyword as _find_keyword, split as _split_toplevel
 
     assert _find_keyword("a = 'no WHERE here' WHERE b = 1", "WHERE") == 20
     assert _find_keyword("x IN (SELECT 1 WHERE true)", "WHERE") == -1  # in parens
     assert _find_keyword("nowhere = 1", "WHERE") == -1  # word boundary
     assert _find_keyword("a = 'it''s WHERE' WHERE b", "WHERE") == 18  # '' escape
+    assert _find_keyword("a = 'it\\'s WHERE' WHERE b", "WHERE") == 18  # \\' escape
+    assert _find_keyword("a = 1 -- no WHERE\n WHERE b", "WHERE") == 19  # comment
+    assert _find_keyword("a = 1 /* WHERE */ WHERE b", "WHERE") == 18
     assert _split_toplevel("a, f(b, c), 'x,y', (d, e)") == [
         "a",
         "f(b, c)",
         "'x,y'",
         "(d, e)",
     ]
+    # a backticked name may hold commas (CREATE TABLE m (k INT, `a,b` INT))
+    assert _split_toplevel("k INT, `a,b` INT, s STRING") == ["k INT", "`a,b` INT", "s STRING"]
+    assert _column_def("`a,b` INT").name == "a,b"
     assert is_dml("INSERT INTO t VALUES (1)")
     assert is_dml("MERGE INTO t USING s ON t.k = s.k WHEN MATCHED THEN DELETE")
     assert not is_dml("SELECT 1")
@@ -283,18 +290,24 @@ _quoted = st.text(
 ).map(lambda s: "'" + s.replace("\\", "\\\\").replace("'", "''") + "'")
 # backslashes double: the scanner follows Spark's default parser, where
 # backslash escapes inside string literals ('\' alone is unterminated)
+_backslashed = st.text(alphabet=",;()'\\ab", max_size=8).map(
+    lambda s: "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+)
+_backticked = st.text(alphabet=",;()`'ab", min_size=1, max_size=8).map(
+    lambda s: "`" + s.replace("`", "``") + "`"
+)
 _paren = st.tuples(_ident, _ident).map(lambda t: f"({t[0]}, {t[1]})")
-_atom = st.one_of(_ident, _quoted, _paren)
+_atom = st.one_of(_ident, _quoted, _backslashed, _backticked, _paren)
 
 
 @settings(max_examples=200, deadline=None)
 @given(st.lists(_atom, min_size=1, max_size=6))
 def test_split_toplevel_roundtrips_atoms(atoms):
-    """Joining atoms (identifiers, ''-escaped quoted strings with
-    arbitrary content, paren groups) with top-level commas and splitting
-    again recovers exactly the atoms — commas/parens INSIDE atoms never
-    cut."""
-    from mesin_spark.sql_dml import _split_toplevel
+    """Joining atoms (identifiers, ''- and backslash-escaped quoted strings
+    with arbitrary content, backticked names, paren groups) with top-level
+    commas and splitting again recovers exactly the atoms — commas/parens
+    INSIDE atoms never cut."""
+    from mesin_spark.sqltext import split as _split_toplevel
 
     assert _split_toplevel(", ".join(atoms)) == atoms
 
@@ -325,9 +338,6 @@ def test_ddl_type_total_over_menu(name):
 def test_parse_bytes_inverts_fmt(n, unit):
     """shuffle_audit's byte parser inverts its formatter to within
     rounding (the formatter keeps one decimal)."""
-    import sys
-
-    sys.path.insert(0, "/root/repo")
     from tools.shuffle_audit import _UNITS, fmt, parse_bytes
 
     got = parse_bytes(f"{n / _UNITS[unit.upper()]:,.1f} {unit}")
@@ -699,6 +709,8 @@ def test_enforced_insert_accepts_and_rejects(enforced):
         ctx.execute("INSERT INTO child VALUES (5, 1, 1.0), (5, 1, 1.0)")  # intra-batch
     with pytest.raises(ConstraintViolation, match="CHECK"):
         ctx.execute("INSERT INTO child VALUES (2, 2, -1.0)")
+    with pytest.raises(ConstraintViolation, match="CHECK"):  # comment first: still routed here
+        ctx.execute("-- load\nINSERT INTO child VALUES (2, 2, -1.0)")
     with pytest.raises(ConstraintViolation, match="FOREIGN KEY"):
         ctx.execute("INSERT INTO child VALUES (3, 9, 1.0)")
     with pytest.raises(ConstraintViolation, match="NOT NULL"):
@@ -762,6 +774,19 @@ def test_unique_allows_multiple_nulls(ctx):
     with pytest.raises(ConstraintViolation, match="UNIQUE"):
         ctx.execute("INSERT INTO uq VALUES (4, 'x')")
     assert ctx.execute("SELECT count(*) AS n FROM uq").collect()[0]["n"] == 3
+
+
+def test_check_constraint_body_with_quoted_paren(ctx):
+    """A CHECK body is cut at its closing paren in code, not at a ')'
+    inside a string literal."""
+    from mesin_spark.dml import ConstraintViolation
+
+    ctx.execute("CREATE TABLE ckq (k INT, s STRING, CHECK (s <> ')'))")
+    ctx.execute("ALTER TABLE ckq SET PROPERTIES ('enforce_constraints' = 'true')")
+    ctx.execute("INSERT INTO ckq VALUES (1, 'ok')")
+    with pytest.raises(ConstraintViolation, match="CHECK"):
+        ctx.execute("INSERT INTO ckq VALUES (2, ')')")
+    assert [tuple(r) for r in ctx.execute("SELECT k, s FROM ckq").collect()] == [(1, "ok")]
 
 
 def test_show_create_table_roundtrips(ctx):

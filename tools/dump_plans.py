@@ -7,9 +7,11 @@ Usage: python tools/dump_plans.py
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 from mesin_spark.session import get_session  # noqa: E402
 
@@ -83,7 +85,7 @@ def main() -> None:
         out.append(plan.strip()[:4000])
         out.append("```")
         out.append("")
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO_ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md ({len(out)} lines)")
 

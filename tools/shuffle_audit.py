@@ -35,7 +35,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 _UNITS = {"B": 1, "KIB": 1024, "MIB": 1024**2, "GIB": 1024**3, "TIB": 1024**4}
 
@@ -356,13 +357,13 @@ def main() -> int:
     # survives regeneration (the round-8 scale sections live there)
     tail = ""
     try:
-        prev = open("/root/repo/SHUFFLE.md").read()
+        prev = open(os.path.join(REPO_ROOT, "SHUFFLE.md")).read()
         idx = prev.find(MANUAL_MARKER)
         if idx != -1:
             tail = prev[idx:]
     except OSError:
         pass
-    with open("/root/repo/SHUFFLE.md", "w") as f:
+    with open(os.path.join(REPO_ROOT, "SHUFFLE.md"), "w") as f:
         f.write("\n".join(out))
         if tail:
             f.write("\n" + tail)

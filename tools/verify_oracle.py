@@ -22,13 +22,15 @@ value-equality compare hides.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import traceback
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO_ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings".split()
