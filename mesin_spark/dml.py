@@ -5,12 +5,16 @@ Reference parity: SURVEY.md §2.12 — statement dispatcher
 (:223-279), DELETE (:480-504), CREATE TABLE (:281-310), CREATE INDEX
 (:312-347), DROP TABLE (:349-371), DROP INDEX (:372-383).
 
-Spark has no in-place mutation for plain Parquet, so UPDATE/DELETE are
-read → transform → atomic-swap overwrite (write to a sibling temp dir,
-rename into place). That is exactly the copy-on-write strategy Delta Lake /
-Iceberg use per-file; at 100 TB you'd adopt one of them for transactional
-metadata, but the operator shape (rewrite only what changed, swap atomically)
-is the same. Predicate/assignment expressions are parsed by Spark's own
+Spark has no in-place mutation for plain Parquet, so every table the engine
+creates is versioned from CREATE on: a directory of immutable version dirs
+(v00001, v00002, ...) plus a ``_VERSION`` pointer naming the current one. A
+write builds the next version dir completely, then swaps the pointer (one
+atomic os.replace). INSERT hard-links the current files into the new version
+and writes only its own rows; UPDATE, DELETE, MERGE and ALTER rewrite the
+WHOLE table into it (Delta Lake / Iceberg rewrite only the files holding
+changed rows). Old versions stay readable (time travel) until VACUUM. A path
+without a pointer (a registered user file or directory) is read as before and
+never written. Predicate/assignment expressions are parsed by Spark's own
 expression parser via ``F.expr`` — no hand-rolled SQL expression grammar.
 
 CREATE INDEX is metadata-only in the reference (never executed); here it is
@@ -124,29 +128,46 @@ class ManagedTable:
         self.catalog = catalog
 
     # -- versioned layout --------------------------------------------------
-    # Optional Delta/Iceberg-style commit protocol: the table directory
-    # holds immutable version dirs (v00001, v00002, ...) plus a _VERSION
-    # pointer file naming the current one. A commit writes the new version
-    # dir COMPLETELY, then swaps the pointer with os.replace — a genuinely
+    # Delta/Iceberg-style commit protocol: the table directory holds
+    # immutable version dirs (v00001, v00002, ...) plus a _VERSION pointer
+    # file naming the current one. A commit writes the new version dir
+    # COMPLETELY, then swaps the pointer with os.replace — a genuinely
     # atomic single commit point on POSIX, so a concurrent reader always
-    # resolves either the old or the new version, never a half state (this
-    # replaces the rename-pair swap whose gap a reader could observe).
-    # Old versions stay readable (time travel) until vacuum().
+    # resolves either the old or the new version, never a half state.
+    # Old versions stay readable (time travel) until vacuum(). A path
+    # without a pointer is not the engine's: it reads as plain parquet and
+    # every write to it is refused (_owned_version).
     _VERSION_FILE = "_VERSION"
 
     def _version_path(self) -> str:
         return os.path.join(self.path, self._VERSION_FILE)
 
     def current_version(self) -> int | None:
-        """Current committed version, or None for the legacy flat layout."""
+        """Current committed version, or None for a path the engine does
+        not own (no pointer)."""
         try:
             with open(self._version_path()) as f:
                 return int(f.read().strip())
         except (FileNotFoundError, NotADirectoryError):
             # NotADirectoryError: the table path is a single parquet FILE
             # (register_parquet of testdata) — open('<file>/_VERSION')
-            # raises errno 20, not 2; both mean "flat, unversioned"
+            # raises errno 20, not 2; both mean "no pointer"
             return None
+
+    def _owned_version(self) -> int:
+        """The current version of a table the engine owns. A path without
+        a pointer — a registered user file or directory, or a flat table
+        written by an older build — is external: rewriting it would
+        destroy files the engine does not own, so it is refused before
+        anything on disk is touched."""
+        v = self.current_version()
+        if v is None:
+            raise CatalogError(
+                f"table {self.name!r} is external, not versioned: {self.path} "
+                f"has no {self._VERSION_FILE} pointer and is read-only; "
+                "import it into the warehouse first (import_parquet)"
+            )
+        return v
 
     def _data_dir(self, version: int | None = None) -> str:
         v = self.current_version() if version is None else version
@@ -170,11 +191,59 @@ class ManagedTable:
         self._log_commit(version, op, extra)
         self._refresh_view()
 
+    def _commit_version(
+        self,
+        op: str,
+        fill=None,
+        link_from: str | None = None,
+        extra: dict | None = None,
+    ) -> int:
+        """The one path that opens a version dir: hard-link the data files
+        of ``link_from`` into the next version dir (an append keeps the
+        current files, a restore an old version's — metadata-only, the
+        Delta 'add file' analog), let ``fill(dir)`` write the new files,
+        copy the ``_``-sidecars (e.g. ``_MV_STATE.json``) of ``link_from``,
+        else of the current version, that ``fill`` did not write, then
+        commit. Returns the new version. Callers hold the writer lock,
+        except a new table's first commit, which nobody can see yet."""
+        cur = self.current_version() or 0  # 0: a new table's first commit
+        nxt = self._data_dir(cur + 1)
+        if os.path.isdir(nxt):
+            # orphan from a writer that crashed between writing the
+            # version dir and the pointer commit. We hold the writer
+            # lock and the pointer does not reference nxt, so the dir is
+            # provably garbage — clear it instead of bricking every
+            # future write with FileExistsError
+            shutil.rmtree(nxt)
+        if link_from is not None:
+            os.makedirs(nxt)
+            # link RECURSIVELY: a hive-partitioned layout keeps its data
+            # under key=value subdirectories — linking only top-level
+            # files would silently drop every pre-existing row
+            for root, _dirs, files in os.walk(link_from):
+                rel = os.path.relpath(root, link_from)
+                for fname in files:
+                    if fname.endswith(".parquet") or fname.startswith("part-"):
+                        dst_dir = os.path.normpath(os.path.join(nxt, rel))
+                        os.makedirs(dst_dir, exist_ok=True)
+                        os.link(os.path.join(root, fname), os.path.join(dst_dir, fname))
+        if fill is not None:
+            fill(nxt)
+        # top-level sidecars the writer did not put there: a Spark write
+        # emits only data files + _SUCCESS, and without this a compacted or
+        # updated materialized view would lose its refresh state
+        src = link_from or (cur and self._data_dir(cur))
+        for fname in os.listdir(src) if src else ():
+            s, d = os.path.join(src, fname), os.path.join(nxt, fname)
+            if fname.startswith("_") and fname != "_SUCCESS" and os.path.isfile(s):
+                if not os.path.exists(d):
+                    shutil.copy2(s, d)
+        self._commit(cur + 1, op=op, extra=extra)
+        return cur + 1
+
     def _log_commit(self, version: int, op: str, extra: dict | None = None) -> None:
-        """One JSONL audit line per commit (versioned layout only — the
-        flat layout's whole-dir swap has no stable root to keep a log
-        in, and no version identity to describe). Appends run inside
-        the writer lock like every commit, so lines never interleave.
+        """One JSONL audit line per commit. Appends run inside the writer
+        lock like every commit, so lines never interleave.
 
         Best-effort: the pointer swap has already decided visibility, so
         a failed audit append must not surface a successfully-committed
@@ -205,10 +274,7 @@ class ManagedTable:
         records. Driver-side file read, bounded by commit count (commit
         logs are metadata-scale by construction; a 100 TB table has
         thousands of commits, not billions)."""
-        if self.current_version() is None:
-            raise CatalogError(
-                f"table {self.name!r} is not versioned — no commit history"
-            )
+        self._owned_version()
         p = os.path.join(self.path, self._COMMITS_FILE)
         recs = []
         if os.path.exists(p):
@@ -242,28 +308,9 @@ class ManagedTable:
             self.spark, rows, "version BIGINT, op STRING, ts DOUBLE, details STRING"
         )
 
-    def enable_versioning(self) -> int:
-        """Convert a flat table directory to the versioned layout (the
-        current contents become v00001). Idempotent; takes the writer
-        lock (the conversion races appends like any other rewrite)."""
-        with self._writer_lock():
-            cur = self.current_version()
-            if cur is not None:
-                return cur
-            v1 = os.path.join(self.path, "v00001")
-            os.makedirs(v1)
-            for entry in os.listdir(self.path):
-                if entry != "v00001":
-                    os.rename(
-                        os.path.join(self.path, entry), os.path.join(v1, entry)
-                    )
-            self._commit(1, op="CONVERT")
-            return 1
-
     def time_travel(self, version: int) -> DataFrame:
-        """Read a past committed version (versioned tables only)."""
-        if self.current_version() is None:
-            raise CatalogError(f"table {self.name!r} is not versioned")
+        """Read a past committed version."""
+        self._owned_version()
         d = self._data_dir(version)
         if not os.path.isdir(d):
             raise CatalogError(f"version {version} of {self.name!r} does not exist (vacuumed?)")
@@ -336,8 +383,6 @@ class ManagedTable:
         its base files from."""
         with self._writer_lock():
             cur = self.current_version()
-            if cur is None:
-                return []
             removed = []
             for entry in sorted(os.listdir(self.path)):
                 if entry.startswith("v") and entry[1:].isdigit():
@@ -360,67 +405,14 @@ class ManagedTable:
         hard-link into the new version dir, no data copy, no Spark job.
         Returns the new version number."""
         with self._writer_lock():
-            cur = self.current_version()
-            if cur is None:
-                raise CatalogError(
-                    f"table {self.name!r} is not versioned — nothing to restore"
-                )
             src = self._data_dir(version)
             if not os.path.isdir(src):
                 raise CatalogError(
                     f"version {version} of {self.name!r} does not exist (vacuumed?)"
                 )
-            nxt = cur + 1
-            nxt_dir = os.path.join(self.path, f"v{nxt:05d}")
-            if os.path.isdir(nxt_dir):
-                shutil.rmtree(nxt_dir)  # crashed-writer orphan (see _append_locked)
-            os.makedirs(nxt_dir)
-            for root, _dirs, files in os.walk(src):
-                rel = os.path.relpath(root, src)
-                for fname in files:
-                    # data files PLUS underscore-metadata sidecars
-                    # (_MV_STATE.json rides the version dir — dropping it
-                    # would break every subsequent matview refresh)
-                    if (
-                        fname.endswith(".parquet")
-                        or fname.startswith("part-")
-                        or (fname.startswith("_") and not fname.startswith("._"))
-                    ):
-                        dst_dir = (
-                            nxt_dir if rel == "." else os.path.join(nxt_dir, rel)
-                        )
-                        os.makedirs(dst_dir, exist_ok=True)
-                        os.link(
-                            os.path.join(root, fname), os.path.join(dst_dir, fname)
-                        )
-            self._commit(nxt, op="RESTORE", extra={"restored_from": version})
-            return nxt
-
-    def _carry_metadata(self, src: str, dst: str) -> None:
-        """Copy top-level underscore-metadata sidecars (e.g.
-        ``_MV_STATE.json``) from the source data dir into a rewritten one.
-        OPTIMIZE rewrites the version dir from a Spark write, which only
-        emits data files + _SUCCESS — without this, compacting a
-        materialized-view table silently drops its refresh state and
-        every later refresh fails. Commit-protocol files are excluded
-        (they live at the table root, never inside a version dir, but
-        the flat layout shares the root so filter defensively)."""
-        skip = {self._VERSION_FILE, self._COMMITS_FILE, "_SUCCESS"}
-        try:
-            entries = os.listdir(src)
-        except OSError:
-            return
-        for fname in entries:
-            if (
-                not fname.startswith("_")
-                or fname in skip
-                or fname.startswith("._")
-            ):
-                continue
-            s = os.path.join(src, fname)
-            d = os.path.join(dst, fname)
-            if os.path.isfile(s) and not os.path.exists(d):
-                shutil.copy2(s, d)
+            return self._commit_version(
+                "RESTORE", link_from=src, extra={"restored_from": version}
+            )
 
     def compact(
         self, target_file_mb: int = 256, sort_by: list[str] | None = None
@@ -450,18 +442,15 @@ class ManagedTable:
           avoid the shuffle but collapse read parallelism to n tasks,
           the wrong trade when n is small — compaction IS the read).
 
-        Versioned layout: the rewrite lands as a NEW version dir + atomic
-        pointer commit — time travel to pre-compaction versions keeps
-        working until vacuum(). Flat layout: sibling temp dir + rename
-        pair (same copy-on-write discipline as _swap_in). Serialized
-        against other writers via the writer lock."""
+        The rewrite lands as a NEW version dir + atomic pointer commit —
+        time travel to pre-compaction versions keeps working until
+        vacuum(). Serialized against other writers via the writer lock."""
         from mesin_spark.sources import read_parquet
 
         if target_file_mb <= 0:
             raise ValueError(f"compact: target_file_mb must be positive, got {target_file_mb}")
         with self._writer_lock():
-            cur = self.current_version()
-            src = self._data_dir(cur)
+            src = self._data_dir()
             total = 0
             for root, _dirs, files in os.walk(src):
                 for fname in files:
@@ -492,25 +481,10 @@ class ManagedTable:
             writer = df.write.mode("overwrite")
             if pcols:
                 writer = writer.partitionBy(*pcols)
-            if cur is not None:
-                nxt = os.path.join(self.path, f"v{cur + 1:05d}")
-                writer.parquet(nxt)
-                self._carry_metadata(src, nxt)
-                self._commit(cur + 1, op="OPTIMIZE")
-                out_dir = nxt
-            else:
-                tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-                writer.parquet(tmp)
-                self._carry_metadata(src, tmp)
-                old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-                os.rename(self.path, old)
-                os.rename(tmp, self.path)
-                shutil.rmtree(old, ignore_errors=True)
-                self._refresh_view()
-                out_dir = self.path
+            self._commit_version("OPTIMIZE", writer.parquet)
             return sum(
                 1
-                for root, _dirs, files in os.walk(out_dir)
+                for root, _dirs, files in os.walk(self._data_dir())
                 for fname in files
                 if fname.endswith(".parquet")
             )
@@ -559,18 +533,17 @@ class ManagedTable:
     @contextlib.contextmanager
     def _writer_lock(self, timeout: float = 60.0):
         """Mutual exclusion between WRITERS (appends, rewrites, vacuum,
-        versioning conversion): an O_CREAT|O_EXCL lock file BESIDE the
-        table directory (``<path>._LOCK``), the portable local-fs
-        primitive. Without it two writers can both read version N and race
-        on v(N+1) — _append fails loudly (makedirs), but _swap_in's
-        overwrite silently LOSES one update. The lock lives outside the
-        table dir so the flat-layout directory swap (which renames the
-        whole dir away for a moment) can never make the held lock
-        disappear mid-critical-section. Readers never take it (the
-        pointer swap already serializes them against writers). A crashed
-        writer leaves a stale lock — surfaced after ``timeout`` with the
-        holder's pid in the error, matching the documented single-writer
-        contract rather than silently breaking it."""
+        restore): an O_CREAT|O_EXCL lock file BESIDE the table directory
+        (``<path>._LOCK``), the portable local-fs primitive. Without it
+        two writers can both read version N and race on v(N+1), and one
+        update is silently LOST. Every write passes here, so this is also
+        where the ownership rule runs (_owned_version): an external path
+        is refused before the lock file is made. Readers never take it
+        (the pointer swap already serializes them against writers). A
+        crashed writer leaves a stale lock — surfaced after ``timeout``
+        with the holder's pid in the error, matching the documented
+        single-writer contract rather than silently breaking it."""
+        self._owned_version()
         lock = self.path.rstrip("/") + self._LOCK_SUFFIX
         deadline = time.monotonic() + timeout
         while True:
@@ -601,19 +574,8 @@ class ManagedTable:
     def _swap_in(
         self, df: DataFrame, op: str = "REWRITE", validate: bool = False
     ) -> None:
-        """Copy-on-write: write the new contents beside the table dir, then
-        swap directories.
-
-        Honest limitation: the rename pair is NOT one atomic commit point —
-        between the two renames the table path briefly does not exist, and
-        os.rename only works on a local POSIX filesystem. This managed-table
-        tier is a local-fs facility (the reference's CRUD is likewise
-        single-process, tmp/crud.txt:178-504); concurrent readers
-        or object-store backends need a table format with transactional
-        metadata (Delta/Iceberg), whose per-file copy-on-write strategy this
-        operator shape matches. ``enable_versioning()`` upgrades the table
-        to the versioned pointer-commit layout, which IS atomic (and keeps
-        history for time_travel). Writers serialize on _writer_lock, so the
+        """Copy-on-write: write the whole new contents as the next version
+        (_commit_version). Writers serialize on _writer_lock, so the
         read-version → write → commit sequence is a transaction and
         concurrent updates can't lose each other's commits."""
         with self._writer_lock():
@@ -627,27 +589,12 @@ class ManagedTable:
                 # concurrent writer (same TOCTOU argument as _append)
                 df = df.transform(ckpt, eager=True)
                 self.validate_constraints(candidate=df)
-            cur = self.current_version()
-            if cur is not None:
-                nxt = os.path.join(self.path, f"v{cur + 1:05d}")
-                df.write.mode("overwrite").parquet(nxt)
-                self._carry_metadata(self._data_dir(cur), nxt)
-                self._commit(cur + 1, op=op)
-                return
-            tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-            df.write.mode("overwrite").parquet(tmp)
-            old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-            os.rename(self.path, old)
-            os.rename(tmp, self.path)
-            shutil.rmtree(old, ignore_errors=True)
-            self._refresh_view()
+            self._commit_version(op, df.write.mode("overwrite").parquet)
 
     def _append(self, writer_df: DataFrame, op: str = "INSERT") -> None:
-        """Append files to the table. Versioned layout: hard-link the
-        current version's files into a new version dir (metadata-only — no
-        data copy, the Delta 'add file' analog), write the new files there,
-        then pointer-commit; writers serialize on _writer_lock (see
-        _swap_in). Flat layout: plain parquet append.
+        """Append files to the table: the current version's files are
+        hard-linked into the new version dir and the new rows written
+        beside them (_commit_version).
 
         Enforcement runs HERE, inside the lock: a batch-vs-table key
         check outside the critical section is a TOCTOU race (two
@@ -656,50 +603,15 @@ class ManagedTable:
         with self._writer_lock():
             if self._enforcing():
                 self.validate_constraints(batch=writer_df)
-            self._append_locked(writer_df, op)
-
-    def _append_locked(self, writer_df: DataFrame, op: str = "INSERT") -> None:
-        cur = self.current_version()
-        if cur is None:
-            pcols = self._partition_cols(self.path)
+            src = self._data_dir()
             w = writer_df.write.mode("append")
+            pcols = self._partition_cols(src)
             if pcols:
+                # the existing layout is hive-partitioned: the appended rows
+                # must land under the same key=value directories — a flat
+                # file next to partition dirs is an unreadable mixed layout
                 w = w.partitionBy(*pcols)
-            w.parquet(self.path)
-            self._refresh_view()
-            return
-        src, nxt_v = self._data_dir(cur), cur + 1
-        nxt = os.path.join(self.path, f"v{nxt_v:05d}")
-        if os.path.isdir(nxt):
-            # orphan from a writer that crashed between writing the
-            # version dir and the pointer commit. We hold the writer
-            # lock and the pointer does not reference nxt, so the dir is
-            # provably garbage — clear it instead of bricking every
-            # future append with FileExistsError
-            shutil.rmtree(nxt)
-        os.makedirs(nxt)
-        # link RECURSIVELY: a hive-partitioned layout keeps its data under
-        # key=value subdirectories — linking only top-level files would
-        # silently drop every pre-existing row from the new version
-        for root, _dirs, files in os.walk(src):
-            rel = os.path.relpath(root, src)
-            for fname in files:
-                if fname.endswith(".parquet") or fname.startswith("part-"):
-                    dst_dir = nxt if rel == "." else os.path.join(nxt, rel)
-                    os.makedirs(dst_dir, exist_ok=True)
-                    os.link(
-                        os.path.join(root, fname), os.path.join(dst_dir, fname)
-                    )
-        self._carry_metadata(src, nxt)
-        pcols = self._partition_cols(src)
-        w = writer_df.write.mode("append")
-        if pcols:
-            # the existing layout is hive-partitioned: the appended rows
-            # must land under the same key=value directories — a flat
-            # file next to partition dirs is an unreadable mixed layout
-            w = w.partitionBy(*pcols)
-        w.parquet(nxt)
-        self._commit(nxt_v, op=op)
+            self._commit_version(op, w.parquet, link_from=src)
 
     @staticmethod
     def _partition_cols(data_dir: str) -> list[str]:
@@ -1135,11 +1047,8 @@ class DdlSession:
                 return self.table(name)
             raise CatalogError(f"Table '{name}' already exists")
         schema = Ty.StructType([c.to_field() for c in columns])
-        path = os.path.join(self.base_dir, name)
-        local_frame(self.spark, [], schema).write.mode("overwrite").parquet(path)
-        mt = ManagedTable(self.spark, name, path, self.catalog)
-        # mt.df() seeds Catalog.frames, so the first statement reads once
-        self.catalog.register_dataframe(name, mt.df(), path=path)
+        empty = local_frame(self.spark, [], schema)
+        mt = self._new_table(name, "CREATE", empty.write.mode("overwrite").parquet)
         meta = self.catalog.tables[name]
         meta.constraints = constraints or []
         meta.properties["columns"] = [
@@ -1152,6 +1061,20 @@ class DdlSession:
             }
             for c in columns
         ]
+        return mt
+
+    def _new_table(self, name: str, op: str, fill) -> ManagedTable:
+        """Every table is born versioned: ``fill(dir)`` writes version 1,
+        committed under ``op``. A dropped table's directory stays on
+        disk, so a leftover one at the path is cleared first."""
+        path = os.path.join(self.base_dir, name)
+        shutil.rmtree(path, ignore_errors=True)
+        os.makedirs(path)
+        mt = ManagedTable(self.spark, name, path, self.catalog)
+        mt._commit_version(op, fill)
+        # the commit's df() seeded Catalog.frames, so this reads nothing
+        # and the first statement reads the table once
+        self.catalog.register_dataframe(name, mt.df(), path=path)
         return mt
 
     def table(self, name: str) -> ManagedTable:
@@ -1168,30 +1091,32 @@ class DdlSession:
             if if_not_exists:
                 return self.table(name)
             raise CatalogError(f"Table '{name}' already exists")
-        path = os.path.join(self.base_dir, name)
-        source.write.mode("overwrite").parquet(path)
-        mt = ManagedTable(self.spark, name, path, self.catalog)
-        df = self.catalog.register_dataframe(name, mt.df(), path=path)
-        meta = self.catalog.tables[name]
-        meta.properties["columns"] = [
+        mt = self._new_table(name, "CREATE", source.write.mode("overwrite").parquet)
+        self.catalog.tables[name].properties["columns"] = [
             {"name": f.name, "data_type": f.dataType.simpleString(), "nullable": f.nullable}
-            for f in df.schema.fields
+            for f in mt.df().schema.fields
         ]
         return mt
 
     def import_parquet(self, name: str, src_path: str) -> ManagedTable:
-        """Copy an existing parquet file/dir into a managed (mutable) table."""
+        """Bring an existing parquet file/dir in as version 1 of a managed
+        (mutable) table, committed as CONVERT (the CONVERT TO DELTA
+        analog). The files are copied; a flat table directory written by
+        an older build, imported under its own name, is moved in place."""
         path = os.path.join(self.base_dir, name)
-        if os.path.isdir(src_path):
-            shutil.copytree(src_path, path, dirs_exist_ok=True)
-        else:
-            os.makedirs(path, exist_ok=True)
-            shutil.copy(src_path, os.path.join(path, "part-00000.parquet"))
-        from mesin_spark.sources import read_parquet
+        if os.path.realpath(src_path) == os.path.realpath(path):
+            src_path = f"{path}.tmp-{uuid.uuid4().hex[:8]}"
+            os.rename(path, src_path)
+            return self._new_table(name, "CONVERT", lambda d: os.rename(src_path, d))
 
-        df = read_parquet(self.spark, path)
-        self.catalog.register_dataframe(name, df, path=path)
-        return ManagedTable(self.spark, name, path, self.catalog)
+        def fill(d: str) -> None:
+            if os.path.isdir(src_path):
+                shutil.copytree(src_path, d)
+            else:
+                os.makedirs(d)
+                shutil.copy(src_path, os.path.join(d, "part-00000.parquet"))
+
+        return self._new_table(name, "CONVERT", fill)
 
     # -- CREATE INDEX ------------------------------------------------------
     def create_index(
@@ -1211,22 +1136,14 @@ class DdlSession:
         iname = name or f"idx_{table}_{'_'.join(columns)}"
         if iname in self.catalog.indexes:
             raise CatalogError(f"Index '{iname}' already exists")
-        meta = IndexMeta(name=iname, table=table, columns=list(columns), unique=unique)
-        self.catalog.indexes[iname] = meta
         if apply_layout:
+            # an external table is refused by the writer lock, before the
+            # index is recorded
             mt = self.table(table)
-            managed_root = os.path.abspath(self.base_dir)
-            if not os.path.abspath(mt.path).startswith(managed_root + os.sep):
-                # the table points at EXTERNAL data (register_parquet of a
-                # user path): rewriting it in place would destroy files
-                # the engine doesn't own — layout advice is metadata-only
-                # for external tables
-                raise CatalogError(
-                    f"Index layout rewrite refused: '{table}' is external "
-                    f"({mt.path}); import it into the warehouse first"
-                )
             clustered = mt.df().repartition(F.col(columns[0])).sortWithinPartitions(*columns)
             mt._swap_in(clustered, op="CLUSTER")
+        meta = IndexMeta(name=iname, table=table, columns=list(columns), unique=unique)
+        self.catalog.indexes[iname] = meta
         return meta
 
     # -- DROP --------------------------------------------------------------

@@ -65,24 +65,10 @@ from mesin_spark.ext.ckpt import ckpt
 from mesin_spark.dml import CatalogError, DdlSession, ManagedTable
 
 _STATE_FILE = "_MV_STATE.json"
-_STATE_SUFFIX = "._MV_STATE.json"  # legacy sidecar location (pre-versioned)
 
 
-def _state_path(mv: ManagedTable) -> str:
-    if mv.current_version() is not None:
-        # inside the CURRENT version dir: activated by the same pointer
-        # commit as the view data (crash atomicity), travels with
-        # time_travel/vacuum like any other version content
-        return os.path.join(mv._data_dir(), _STATE_FILE)
-    return mv.path.rstrip("/") + _STATE_SUFFIX
-
-
-def _write_state(dir_or_path: str, state: dict) -> None:
-    path = (
-        os.path.join(dir_or_path, _STATE_FILE)
-        if os.path.isdir(dir_or_path)
-        else dir_or_path
-    )
+def _write_state(version_dir: str, state: dict) -> None:
+    path = os.path.join(version_dir, _STATE_FILE)
     tmp = path + ".tmp"
     with open(tmp, "w") as f:
         json.dump(state, f)
@@ -90,10 +76,13 @@ def _write_state(dir_or_path: str, state: dict) -> None:
 
 
 def _load_state(mv: ManagedTable) -> dict:
+    # inside the CURRENT version dir: activated by the same pointer
+    # commit as the view data (crash atomicity), travels with
+    # time_travel/vacuum like any other version content
     try:
-        with open(_state_path(mv)) as f:
+        with open(os.path.join(mv._data_dir(), _STATE_FILE)) as f:
             return json.load(f)
-    except FileNotFoundError:
+    except (FileNotFoundError, NotADirectoryError):
         raise CatalogError(
             f"table {mv.name!r} is not a materialized view "
             "(no _MV_STATE found)"
@@ -149,20 +138,15 @@ class AggView:
         }
 
     def _commit_view(self, new_mv: DataFrame, synced: int) -> None:
-        """One atomic commit point for view data AND sync state: write
-        both into the next version dir, then pointer-swap (the versioned
-        _swap_in shape, plus the state file riding the same commit)."""
+        """One atomic commit point for view data AND sync state: both
+        land in the next version dir before the pointer swap."""
+
+        def fill(d: str) -> None:
+            new_mv.write.mode("overwrite").parquet(d)
+            _write_state(d, self._state_dict(synced))
+
         with self.mv._writer_lock():
-            cur = self.mv.current_version()
-            if cur is None:  # defensive: create_agg_view always versions
-                raise CatalogError(
-                    f"materialized view {self.mv.name!r} lost its "
-                    "versioned layout"
-                )
-            nxt = os.path.join(self.mv.path, f"v{cur + 1:05d}")
-            new_mv.write.mode("overwrite").parquet(nxt)
-            _write_state(nxt, self._state_dict(synced))
-            self.mv._commit(cur + 1, op="REFRESH_MV")
+            self.mv._commit_version("REFRESH_MV", fill)
 
     def refresh(self) -> RefreshStats:
         """Fold base-table changes since the last sync into the view.
@@ -172,9 +156,7 @@ class AggView:
         merge keys null-safely on the group columns (the NULL group is
         one group, as in GROUP BY); untouched groups pass through with
         null deltas. A no-op when the base hasn't advanced."""
-        cur = self.base.current_version()
-        if cur is None:
-            raise CatalogError("AggView requires a versioned base table")
+        cur = self.base._owned_version()
         synced = self.synced_version()
         if cur <= synced:
             return RefreshStats(synced, synced, 0, 0)
@@ -254,9 +236,7 @@ class AggView:
         Delta CDF gap). refresh() raises CatalogError in that case and
         this is the documented answer; it is the ONE operation whose
         cost scales with the base."""
-        cur = self.base.current_version()
-        if cur is None:
-            raise CatalogError("AggView requires a versioned base table")
+        cur = self.base._owned_version()
         synced = self.synced_version()
         agg = self.base.df().groupBy(*self.group_cols).agg(
             F.count(F.lit(1)).alias("_rows"),
@@ -323,15 +303,9 @@ def create_agg_view(
     managed table (each sum column also materializes its ``_nn_<c>``
     non-null count — the companion that keeps NULL-sum semantics exact
     under deletes) and record the base version it reflects inside the
-    committed version. The base must be versioned
-    (``enable_versioning``) — the refresh contract is defined in terms
-    of its commit history."""
-    cur = base.current_version()
-    if cur is None:
-        raise CatalogError(
-            f"base table {base.name!r} must be versioned for an AggView "
-            "(call enable_versioning() first)"
-        )
+    committed version. The refresh contract is defined in terms of the
+    base's commit history, so an external base is refused."""
+    cur = base._owned_version()
     bad = [c for c in sum_cols if c in group_cols]
     if bad:
         raise CatalogError(f"sum_cols overlap group_cols: {bad}")
@@ -359,7 +333,6 @@ def create_agg_view(
         ],
     )
     mv = sess.create_table_as(name, agg)
-    mv.enable_versioning()
     view = AggView(base, mv, key_cols, group_cols, sum_cols)
     _write_state(mv._data_dir(), view._state_dict(cur))
     return view

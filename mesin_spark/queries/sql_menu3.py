@@ -58,13 +58,12 @@ def q_merge(spark, sf_dir):
     """,
 )
 def q_time_travel(spark, sf_dir):
-    """Snapshot time travel: version the scratch table (v1 = import), v2 =
+    """Snapshot time travel on the scratch table: v1 = import, v2 =
     insert, v3 = update-all, then read version 2 — the pre-update snapshot
     (base + the inserted row, names untouched). Each commit is one atomic
     pointer swap (os.replace), appends hard-link prior files instead of
     copying — see ManagedTable versioned layout."""
     _, mt = _scratch(spark, sf_dir, "nation")
-    mt.enable_versioning()
     mt.insert_values([(500, "LEMURIA", 2)], columns=["n_nationkey", "n_name", "n_regionkey"])
     mt.update({"n_name": "concat('LATER-', n_name)"})
     return mt.time_travel(2).select("n_nationkey", "n_name", "n_regionkey")

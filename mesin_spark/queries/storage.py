@@ -32,13 +32,12 @@ from mesin_spark.queries.dml import _scratch
     """,
 )
 def q_table_changes(spark, sf_dir):
-    """CDC change feed (Delta readChangeFeed analog): version the scratch
+    """CDC change feed (Delta readChangeFeed analog): on the scratch
     table, apply an insert + an update + a delete, then diff v1 → v4 into
     typed change rows with pre AND post images for updates. One full-outer
     key join over the two snapshots, classified in a single array-build +
     explode projection (ManagedTable.changes)."""
     _, mt = _scratch(spark, sf_dir, "nation")
-    mt.enable_versioning()
     mt.insert_values(
         [(500, "LEMURIA", 2)],
         columns=["n_nationkey", "n_name", "n_regionkey"],
@@ -193,7 +192,6 @@ def q_incremental_mv(spark, sf_dir):
         F.floor(F.col("value") * 1000000.0 + 0.5).cast("bigint").alias("value_u"),
     )
     mt = sess.create_table_as("mv_base", ev)
-    mt.enable_versioning()
     view = create_agg_view(
         sess,
         "mv_by_type",
@@ -324,7 +322,7 @@ def q_optimize_stmt(spark, sf_dir):
     """OPTIMIZE + VACUUM as driver-certified statements (Delta OPTIMIZE
     analog; the reference dispatcher src/planner/mod.rs:21-38 has no
     storage-maintenance arm): materialize lineitem as a deliberately
-    fragmented managed table (48 small files), version it, compact it
+    fragmented managed table (48 small files), compact it
     through ``OPTIMIZE ... TARGET 256 MB SORT BY l_orderkey`` (range-
     clustered rewrite committed as a new version), drop the fragmented
     version with ``VACUUM ... KEEP 1``, and aggregate the surviving
@@ -337,7 +335,6 @@ def q_optimize_stmt(spark, sf_dir):
     ctx = ExecutionContext(spark=spark)
     ctx.ddl.base_dir = scratch_dir(prefix="mesin_optimize_")
     ctx.ddl.create_table_as("opt_li", T(spark, sf_dir, "lineitem").repartition(48))
-    ctx.ddl.table("opt_li").enable_versioning()
     ctx.execute("OPTIMIZE opt_li TARGET 256 MB SORT BY l_orderkey")
     ctx.execute("VACUUM opt_li KEEP 1")
     return (
@@ -374,7 +371,6 @@ def q_describe_history(spark, sf_dir):
     ctx = ExecutionContext(spark=spark)
     ctx.ddl.base_dir = scratch_dir(prefix="mesin_history_")
     ctx.ddl.import_parquet("hist_nation", os.path.join(sf_dir, "nation.parquet"))
-    ctx.ddl.table("hist_nation").enable_versioning()
     ctx.execute("INSERT INTO hist_nation VALUES (900, 'LEMURIA', 2)")
     ctx.execute("UPDATE hist_nation SET n_name = 'ZEALANDIA' WHERE n_nationkey = 3")
     ctx.execute("DELETE FROM hist_nation WHERE n_nationkey = 10")
@@ -487,7 +483,6 @@ def q_restore_table(spark, sf_dir):
     ctx = ExecutionContext(spark=spark)
     ctx.ddl.base_dir = scratch_dir(prefix="mesin_restore_")
     ctx.ddl.import_parquet("rst_nation", os.path.join(sf_dir, "nation.parquet"))
-    ctx.ddl.table("rst_nation").enable_versioning()
     ctx.execute("DELETE FROM rst_nation WHERE n_regionkey = 0")
     ctx.execute("INSERT INTO rst_nation VALUES (999, 'JUNK', 4)")
     ctx.execute("RESTORE rst_nation TO VERSION 1")

@@ -223,9 +223,10 @@ def _analyze(sess: DdlSession, sql: str) -> DataFrame:
     statement face of the ext/stats tier (the reference dispatcher has
     no ANALYZE arm; Spark's own ANALYZE writes to a Hive metastore this
     engine does not run). Builds summaries + equi-width histograms for
-    the named (default: all numeric) columns, persists the artifact
-    next to the table data (<table>/_stats — versioned with the table,
-    vacuumed with it), records the pointer in the catalog entry's
+    the named (default: all numeric) columns, persists the artifact at
+    the table root (<table>/_stats, beside the version dirs: it describes
+    the version it was built from, later commits keep it, and VACUUM does
+    not remove it), records the pointer in the catalog entry's
     properties, and returns the summary rows. Estimators and the
     stats-driven join planner then load_stats() from the catalog
     pointer."""
@@ -457,9 +458,8 @@ def _create_matview(sess: DdlSession, sql: str, m: "re.Match") -> DataFrame:
     bare-identifier group columns, COUNT(*) (required — it is the view's
     maintenance anchor), SUM of bare columns. Aliases are accepted and
     ignored; the materialized schema is canonical (_rows / sum_<col>),
-    exactly what REFRESH maintains. The base is auto-upgraded to the
-    versioned layout (idempotent) since the refresh contract is defined
-    over its commit history."""
+    exactly what REFRESH maintains. The refresh contract is defined over
+    the base's commit history, so an external base is refused."""
     from mesin_spark.ext.matview import create_agg_view
 
     name = m.group(1)
@@ -507,17 +507,6 @@ def _create_matview(sess: DdlSession, sql: str, m: "re.Match") -> DataFrame:
             f"columns {group_cols}"
         )
     base = sess.table(sm.group(2))
-    managed_root = os.path.abspath(sess.base_dir)
-    if not os.path.abspath(base.path).startswith(managed_root + os.sep):
-        # same refusal as create_index(apply_layout=True): versioning an
-        # EXTERNAL path would physically restructure (or crash on) data
-        # the engine doesn't own
-        raise ValueError(
-            f"CREATE MATERIALIZED VIEW refused: base table "
-            f"{sm.group(2)!r} is external ({base.path}); import it into "
-            "the warehouse first"
-        )
-    base.enable_versioning()
     view = create_agg_view(
         sess, name, base,
         key_cols=key_cols, group_cols=group_cols, sum_cols=sum_cols,
@@ -555,8 +544,8 @@ def _optimize(sess: DdlSession, sql: str) -> DataFrame:
     reference plans no storage-maintenance statements at all). Routes to
     ManagedTable.compact(): contents unchanged, physical layout rewritten
     to ~target-sized files, range-clustered on the SORT BY prefix when
-    given. On a versioned table the rewrite is a new commit, so it is
-    time-travel-safe until VACUUM. rows_affected = new data-file count."""
+    given. The rewrite is a new commit, so it is time-travel-safe until
+    VACUUM. rows_affected = new data-file count."""
     m = re.match(
         rf"OPTIMIZE\s+({_IDENT})"
         rf"(?:\s+TARGET\s+(\d+)\s*MB)?"

@@ -115,10 +115,14 @@ def test_insert_values_typo_column_errors(spark, tmp_path):
 
 
 def test_external_table_layout_rewrite_refused(spark, tmp_path):
-    """create_index(apply_layout=True) must never rewrite data the engine
-    doesn't own (externally registered parquet)."""
+    """No write rewrites data the engine doesn't own (externally
+    registered parquet, a single file or a directory): each is refused
+    with CatalogError before anything on disk is touched."""
+    import shutil
+
     import pytest
 
+    from mesin_spark.context import ExecutionContext
     from mesin_spark.dml import CatalogError, DdlSession
 
     ext = str(tmp_path / "external_data")
@@ -128,6 +132,62 @@ def test_external_table_layout_rewrite_refused(spark, tmp_path):
     with pytest.raises(CatalogError, match="external"):
         sess.create_index("ext_t", ["k"], apply_layout=True)
     assert spark.read.parquet(ext).count() == 100  # untouched
+
+    def tree(root):
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), root), os.path.getsize(os.path.join(d, f)))
+            for d, _dirs, fs in os.walk(root)
+            for f in fs
+        )
+
+    ext_file = str(tmp_path / "ext_file" / "nation.parquet")
+    os.makedirs(os.path.dirname(ext_file))
+    shutil.copy(os.path.join(SF_DIR, "nation.parquet"), ext_file)
+    ext_dir = str(tmp_path / "ext_dir" / "nation")
+    spark.read.parquet(ext_file).repartition(2).write.parquet(ext_dir)
+    ctx = ExecutionContext(spark=spark)
+    ctx.ddl.base_dir = str(tmp_path / "warehouse2")
+    for name, path in (("ext_nf", ext_file), ("ext_nd", ext_dir)):
+        ctx.register_parquet(name, path)
+        # the parent holds only the table path, so its tree also shows any
+        # sibling a write would leave behind: a swapped-out copy, a temp
+        # dir or the writer lock
+        parent = os.path.dirname(path)
+        before, n = tree(parent), spark.read.parquet(path).count()
+        for sql in (
+            f"UPDATE {name} SET n_name = 'X' WHERE n_nationkey = 1",
+            f"DELETE FROM {name} WHERE n_nationkey = 1",
+            f"INSERT INTO {name} VALUES (99, 'X', 0)",
+            f"MERGE INTO {name} USING (SELECT n_nationkey, 'X' AS n_name, n_regionkey"
+            f" FROM {name} WHERE n_nationkey = 1) AS s ON {name}.n_nationkey = s.n_nationkey"
+            " WHEN MATCHED THEN UPDATE SET n_name = s.n_name",
+            f"TRUNCATE TABLE {name}",
+            f"ALTER TABLE {name} ADD COLUMN note STRING",
+            f"OPTIMIZE {name}",
+        ):
+            with pytest.raises(CatalogError, match="external"):
+                ctx.execute(sql)
+            assert tree(parent) == before, sql
+        assert os.listdir(parent) == [os.path.basename(path)]
+        assert spark.read.parquet(path).count() == n
+
+
+def test_older_flat_table_is_read_only_until_imported(spark, tmp_path):
+    """A flat table directory of an older build (no _VERSION pointer)
+    reads as before and refuses writes; import_parquet under its own name
+    converts it in place into version 1."""
+    sess = DdlSession(spark, base_dir=str(tmp_path))
+    path = str(tmp_path / "old_t")
+    spark.range(0, 10).selectExpr("id AS k").write.parquet(path)
+    sess.catalog.register_parquet("old_t", path)
+    assert sess.table("old_t").df().count() == 10
+    with pytest.raises(CatalogError, match="external"):
+        sess.table("old_t").delete("k < 5")
+    mt = sess.import_parquet("old_t", path)
+    assert [(r.version, r.op) for r in mt.history().collect()] == [(1, "CONVERT")]
+    mt.delete("k < 5")
+    assert mt.df().count() == 5 and mt.time_travel(1).count() == 10
+    assert os.listdir(tmp_path) == ["old_t"]
 
 
 def test_versioned_append_keeps_partitioned_data(spark, tmp_path):
@@ -141,7 +201,6 @@ def test_versioned_append_keeps_partitioned_data(spark, tmp_path):
     ).parquet(src)
     sess = DdlSession(spark, base_dir=str(tmp_path / "wh"))
     t = sess.import_parquet("vp_t", src)
-    t.enable_versioning()
     t.insert_values([(1000, 9)], columns=["k", "p"])
     assert t.df().count() == 101
 

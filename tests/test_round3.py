@@ -250,9 +250,7 @@ def test_versioned_commits_and_time_travel(spark):
     sess = DdlSession(spark, base_dir=base)
     mt = sess.import_parquet("tt_nation", os.path.join(SF_DIR, "nation.parquet"))
     n0 = mt.df().count()
-    assert mt.current_version() is None  # legacy flat layout
-    assert mt.enable_versioning() == 1
-    assert mt.enable_versioning() == 1  # idempotent
+    assert mt.current_version() == 1  # import commits v1
     mt.insert_values([(700, "A", 0), (701, "B", 1)],
                      columns=["n_nationkey", "n_name", "n_regionkey"])
     assert mt.current_version() == 2
@@ -280,7 +278,6 @@ def test_versioned_vacuum_and_missing_version(spark):
     base = tempfile.mkdtemp(prefix="mesin_vac_")
     sess = DdlSession(spark, base_dir=base)
     mt = sess.import_parquet("vac_nation", os.path.join(SF_DIR, "nation.parquet"))
-    mt.enable_versioning()
     mt.update({"n_name": "upper(n_name)"})
     mt.update({"n_name": "lower(n_name)"})
     assert mt.current_version() == 3
@@ -296,7 +293,8 @@ def test_unversioned_time_travel_rejected(spark):
 
     base = tempfile.mkdtemp(prefix="mesin_fl_")
     sess = DdlSession(spark, base_dir=base)
-    mt = sess.import_parquet("fl_nation", os.path.join(SF_DIR, "nation.parquet"))
+    sess.catalog.register_parquet("fl_nation", os.path.join(SF_DIR, "nation.parquet"))
+    mt = sess.table("fl_nation")
     with pytest.raises(CatalogError, match="not versioned"):
         mt.time_travel(1)
 

@@ -503,14 +503,14 @@ def test_refresh_table_stays_native(ctx):
 
 def test_materialized_view_refuses_external_base(ctx, tmp_path):
     """CREATE MATERIALIZED VIEW must refuse a register_parquet'd external
-    path — enable_versioning would physically restructure user data."""
+    path — the engine never writes data it does not own."""
     import tempfile
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    # genuinely outside the session's managed base_dir (tmp_path IS the
-    # base_dir in this fixture, so a file under it would count as managed)
+    # outside the session's managed base_dir (tmp_path IS the base_dir
+    # in this fixture)
     ext = os.path.join(tempfile.mkdtemp(prefix="mesin_ext_"), "external_events.parquet")
     pq.write_table(pa.table({"id": [1, 2], "g": ["a", "b"], "v": [1, 2]}), ext)
     ctx.register_parquet("ext_ev", ext)
@@ -551,7 +551,6 @@ def _frag_table(ctx, spark, name, n_files=12):
 
 def test_optimize_statement_compacts_and_versions(ctx, spark):
     mt = _frag_table(ctx, spark, "opt1")
-    mt.enable_versioning()
     before = _data_files(mt._data_dir())
     assert len(before) >= 12
     st = ctx.execute("OPTIMIZE opt1 TARGET 256 MB").collect()[0]
@@ -570,7 +569,6 @@ def test_optimize_sort_by_range_clusters_files(ctx, spark):
     from pyspark.sql import functions as F
 
     mt = _frag_table(ctx, spark, "opt2", n_files=16)
-    mt.enable_versioning()
     ctx.execute("OPTIMIZE opt2 SORT BY k")
     assert len(_data_files(mt._data_dir())) == 1  # tiny table -> one sorted file
     # force a multi-file range layout to check the clustering invariant
@@ -592,7 +590,6 @@ def test_optimize_sort_by_range_clusters_files(ctx, spark):
 
 def test_vacuum_statement_drops_old_versions(ctx, spark):
     mt = _frag_table(ctx, spark, "opt3")
-    mt.enable_versioning()
     ctx.execute("OPTIMIZE opt3")
     st = ctx.execute("VACUUM opt3 KEEP 1").collect()[0]
     assert (st["statement"], st["rows_affected"]) == ("VACUUM", 1)
@@ -607,36 +604,34 @@ def test_vacuum_statement_drops_old_versions(ctx, spark):
 
 def test_compact_flat_layout_preserves_contents(ctx, spark):
     mt = _frag_table(ctx, spark, "opt4", n_files=10)
-    assert mt.current_version() is None  # flat, unversioned
-    before = len(_data_files(mt.path))
+    assert mt.current_version() == 1  # versioned from CREATE
+    before = len(_data_files(mt._data_dir()))
     n = mt.compact(target_file_mb=256)
     assert n == 1 and before >= 10
+    assert len(_data_files(mt._data_dir())) == 1
     got = mt.df().agg({"k": "sum"}).collect()[0][0]
     assert got == 5000 * 4999 // 2
 
 
 def test_compact_partitioned_layout_one_file_per_partition(ctx, spark):
     df = spark.range(0, 2000).selectExpr("id AS k", "id % 4 AS part", "id * 2 AS v")
-    path = os.path.join(ctx.ddl.base_dir, "opt5")
-    df.repartition(8).write.partitionBy("part").mode("overwrite").parquet(path)
-    from mesin_spark.dml import ManagedTable
-
-    mt = ManagedTable(spark, "opt5", path)
-    assert len(_data_files(path)) > 4
+    src = os.path.join(ctx.ddl.base_dir, "opt5_src")
+    df.repartition(8).write.partitionBy("part").mode("overwrite").parquet(src)
+    mt = ctx.ddl.import_parquet("opt5", src)
+    assert len(_data_files(mt._data_dir())) > 4
     mt.compact(target_file_mb=256)
-    files = _data_files(mt.path)
+    files = _data_files(mt._data_dir())
     by_part = {}
     for f in files:
         part = [p for p in f.split(os.sep) if p.startswith("part=")][0]
         by_part.setdefault(part, []).append(f)
     assert len(by_part) == 4
     assert all(len(v) == 1 for v in by_part.values())
-    assert spark.read.parquet(path).count() == 2000
+    assert spark.read.parquet(mt._data_dir()).count() == 2000
 
 
 def test_describe_history_records_commit_lifecycle(ctx, spark):
     mt = _frag_table(ctx, spark, "hist1", n_files=4)
-    mt.enable_versioning()
     ctx.execute("INSERT INTO hist1 VALUES (99999, 3, 1.0)")
     ctx.execute("UPDATE hist1 SET v = 0.0 WHERE k = 1")
     ctx.execute("DELETE FROM hist1 WHERE k = 2")
@@ -645,7 +640,7 @@ def test_describe_history_records_commit_lifecycle(ctx, spark):
     hist = ctx.execute("DESCRIBE HISTORY hist1").collect()
     seq = [(r["version"], r["op"]) for r in hist]
     assert seq == [
-        (1, "CONVERT"), (2, "INSERT"), (3, "UPDATE"),
+        (1, "CREATE"), (2, "INSERT"), (3, "UPDATE"),
         (4, "DELETE"), (5, "OPTIMIZE"), (5, "VACUUM"),
     ]
     # ts monotone non-decreasing; VACUUM details carry the removed list
@@ -657,8 +652,10 @@ def test_describe_history_records_commit_lifecycle(ctx, spark):
     assert details["removed"] == [1, 2, 3]
 
 
-def test_describe_history_requires_versioned_table(ctx, spark):
-    _frag_table(ctx, spark, "hist2", n_files=2)
+def test_describe_history_requires_versioned_table(ctx, spark, tmp_path):
+    ext = str(tmp_path / "ext" / "hist2")
+    spark.range(0, 100).selectExpr("id AS k").repartition(2).write.parquet(ext)
+    ctx.register_parquet("hist2", ext)
     from mesin_spark.catalog import CatalogError
 
     with pytest.raises(CatalogError):
@@ -858,14 +855,12 @@ def test_set_properties_parse_errors(ctx):
 def test_compact_partitioned_with_sort_keeps_one_file_per_partition(ctx, spark):
     from pyspark.sql import functions as F
 
-    from mesin_spark.dml import ManagedTable
-
     df = spark.range(0, 2000).selectExpr("id AS k", "id % 3 AS part", "id * 7 % 11 AS v")
-    path = os.path.join(ctx.ddl.base_dir, "opt6")
-    df.repartition(8).write.partitionBy("part").mode("overwrite").parquet(path)
-    mt = ManagedTable(spark, "opt6", path)
+    src = os.path.join(ctx.ddl.base_dir, "opt6_src")
+    df.repartition(8).write.partitionBy("part").mode("overwrite").parquet(src)
+    mt = ctx.ddl.import_parquet("opt6", src)
     mt.compact(target_file_mb=256, sort_by=["v"])
-    files = _data_files(path)
+    files = _data_files(mt._data_dir())
     by_part = {}
     for f in files:
         p = [x for x in f.split(os.sep) if x.startswith("part=")][0]
@@ -875,14 +870,13 @@ def test_compact_partitioned_with_sort_keeps_one_file_per_partition(ctx, spark):
     for flist in by_part.values():
         vs = [r["v"] for r in spark.read.parquet(flist[0]).select("v").collect()]
         assert vs == sorted(vs)
-    assert spark.read.parquet(path).count() == 2000
+    assert spark.read.parquet(mt._data_dir()).count() == 2000
 
 
 def test_restore_statement_rolls_back_preserving_history(ctx, spark):
     import json as _json
 
     mt = _frag_table(ctx, spark, "rst", n_files=2)
-    mt.enable_versioning()
     ctx.execute("DELETE FROM rst WHERE k >= 2500")          # v2
     ctx.execute("INSERT INTO rst VALUES (99999, 0, 0.0)")   # v3
     st = ctx.execute("RESTORE rst TO VERSION 1").collect()[0]
@@ -905,7 +899,6 @@ def test_restore_statement_rolls_back_preserving_history(ctx, spark):
 
 def test_orphan_version_dir_from_crashed_writer_is_cleared(ctx, spark):
     mt = _frag_table(ctx, spark, "orph", n_files=2)
-    mt.enable_versioning()
     # simulate a writer that crashed after creating v00002 but before the
     # pointer commit: the orphan must not brick subsequent writes
     orphan = os.path.join(mt.path, "v00002")
@@ -1039,8 +1032,7 @@ def _contents(ctx):
     return sorted(tuple(r) for r in ctx.execute("SELECT * FROM t").collect())
 
 
-@pytest.mark.parametrize("layout", ["flat", "versioned"])
-def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch, layout):
+def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch):
     """Statements whose source reads the target itself: the same
     rows_affected and contents as reading the table afresh, and each
     statement, the first after CREATE TABLE included, reads the table
@@ -1050,8 +1042,6 @@ def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch, layout):
     ctx.execute("INSERT INTO t VALUES (1, 10), (2, 20), (3, 30)")
     assert len(calls) == 1
     mt = ctx.ddl.table("t")
-    if layout == "versioned":
-        mt.enable_versioning()
     cases = [
         ("INSERT INTO t SELECT * FROM t", 3,
          [(1, 10), (1, 10), (2, 20), (2, 20), (3, 30), (3, 30)]),
@@ -1069,7 +1059,7 @@ def test_self_referencing_dml_reuses_committed_frame(ctx, monkeypatch, layout):
         assert len(calls) - before == 1, sql
         assert _contents(ctx) == rows, sql
         assert sorted(tuple(r) for r in mt.df().collect()) == rows, sql
-    assert (mt.current_version() is None) == (layout == "flat")
+    assert mt.current_version() == 6  # CREATE, INSERT and the four cases
 
 
 @pytest.mark.parametrize("how", ["ctas", "reopen"])
@@ -1093,8 +1083,7 @@ def test_first_statement_after_ctas_or_reopen_reads_once(ctx, spark, monkeypatch
     assert len(calls) == 1
 
 
-@pytest.mark.parametrize("layout", ["flat", "versioned"])
-def test_frame_reuse_sees_outside_writes(ctx, spark, layout):
+def test_frame_reuse_sees_outside_writes(ctx, spark):
     """A write through a second DdlSession on the same base dir, or a file
     dropped into the table dir, is seen by the next statement; and
     save_catalog + DdlSession.open round-trips the catalog unchanged."""
@@ -1106,8 +1095,6 @@ def test_frame_reuse_sees_outside_writes(ctx, spark, layout):
     ctx.execute("CREATE TABLE t (k BIGINT, v BIGINT)")
     ctx.execute("INSERT INTO t VALUES (1, 10), (2, 20)")
     mt = ctx.ddl.table("t")
-    if layout == "versioned":
-        mt.enable_versioning()
     assert mt.df().count() == 2
     saved = ctx.ddl.save_catalog()
     with open(saved) as f:

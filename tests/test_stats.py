@@ -753,8 +753,8 @@ def test_measured_conjunction_corrects_correlation(spark):
 
 def test_analyze_table_statement(spark, tmp_path):
     """ANALYZE TABLE through the SQL surface: builds + persists the
-    artifact next to the table data, records the catalog pointer, and
-    the estimator loads straight from it."""
+    artifact at the table root, records the catalog pointer, and the
+    estimator loads straight from it — also after an UPDATE."""
     from mesin_spark.context import ExecutionContext
     from mesin_spark.ext.stats import estimate_selectivity, load_stats
 
@@ -773,6 +773,9 @@ def test_analyze_table_statement(spark, tmp_path):
     stats = load_stats(spark, meta.properties["stats_path"])
     est = estimate_selectivity(stats, "v", "<", 25.0)
     assert abs(est - 0.5) < 0.05
+    # a later commit keeps the artifact the catalog points at
+    ctx.execute("UPDATE an_t SET v = v + 1 WHERE k < 10")
+    assert load_stats(spark, meta.properties["stats_path"]).summary["v"]["n"] == 5000
 
     # default column selection: all numeric (k and v)
     out2 = ctx.execute("ANALYZE TABLE an_t COMPUTE STATISTICS")

@@ -23,7 +23,6 @@ def scratch_nation(spark):
 
 def test_changes_noop_version_is_empty(spark, scratch_nation):
     mt = scratch_nation
-    mt.enable_versioning()
     mt.update({"n_name": "n_name"})  # rewrite with identical values -> v2
     assert mt.changes(1, 2, ["n_nationkey"]).count() == 0
 
@@ -32,7 +31,6 @@ def test_changes_requires_forward_range(spark, scratch_nation):
     from mesin_spark.catalog import CatalogError
 
     mt = scratch_nation
-    mt.enable_versioning()
     with pytest.raises(CatalogError):
         mt.changes(1, 1, ["n_nationkey"])
 
@@ -41,7 +39,6 @@ def test_changes_rejects_schema_drift(spark, scratch_nation):
     from mesin_spark.catalog import CatalogError
 
     mt = scratch_nation
-    mt.enable_versioning()
     mt.alter_add_column("note", "string", default="x")
     with pytest.raises(CatalogError):
         mt.changes(1, 2, ["n_nationkey"])
@@ -49,7 +46,6 @@ def test_changes_rejects_schema_drift(spark, scratch_nation):
 
 def test_changes_update_images_pair_up(spark, scratch_nation):
     mt = scratch_nation
-    mt.enable_versioning()
     mt.update({"n_name": "concat(n_name, '!')"}, where="n_regionkey = 2")
     rows = mt.changes(1, 2, ["n_nationkey"]).collect()
     pre = {r["n_nationkey"]: r for r in rows if r["change_type"] == "update_pre"}
@@ -177,7 +173,6 @@ def test_concurrent_appends_linear_and_lossless(spark, scratch_nation):
     import threading
 
     mt = scratch_nation
-    mt.enable_versioning()
     v0 = mt.current_version()
     base = mt.df().count()
     per_thread, n_threads = 4, 2
@@ -243,7 +238,6 @@ def test_stale_writer_lock_surfaces_clearly(spark, scratch_nation):
     from mesin_spark.catalog import CatalogError
 
     mt = scratch_nation
-    mt.enable_versioning()
     lock = mt.path.rstrip("/") + "._LOCK"
     with open(lock, "w") as f:
         f.write("424242")
@@ -272,7 +266,6 @@ def mv_setup(spark, tmp_path):
             "id long, grp string, amt long",
         ),
     )
-    base.enable_versioning()
     view = create_agg_view(
         sess, "ivm_view", base,
         key_cols=["id"], group_cols=["grp"], sum_cols=["amt"],
@@ -354,11 +347,13 @@ def test_aggview_reopen_and_guards(spark, mv_setup, tmp_path):
     other = sess.create_table_as(
         "ivm_other", base.df().limit(1)
     )
-    other.enable_versioning()
     with pytest.raises(CatalogError, match="was built over"):
         open_agg_view(sess, "ivm_view", other)
-    # unversioned base is refused at create
-    flat = sess.create_table_as("ivm_flat", base.df().limit(1))
+    # an external (unversioned) base is refused at create
+    ext = str(tmp_path / "ext" / "ivm_flat")
+    base.df().limit(1).write.parquet(ext)
+    sess.catalog.register_parquet("ivm_flat", ext)
+    flat = sess.table("ivm_flat")
     with pytest.raises(CatalogError, match="versioned"):
         create_agg_view(
             sess, "ivm_v2", flat,
@@ -369,7 +364,6 @@ def test_aggview_reopen_and_guards(spark, mv_setup, tmp_path):
     clash = sess.create_table_as(
         "ivm_clash", base.df().selectExpr("id", "grp", "amt AS rows")
     )
-    clash.enable_versioning()
     with pytest.raises(CatalogError, match="collide"):
         create_agg_view(
             sess, "ivm_v3", clash,
@@ -419,7 +413,6 @@ def test_aggview_null_group_and_null_sum_semantics(spark, tmp_path):
             "id long, grp string, amt long",
         ),
     )
-    base.enable_versioning()
     view = create_agg_view(
         sess, "nv_view", base,
         key_cols=["id"], group_cols=["grp"], sum_cols=["amt"],
@@ -503,7 +496,7 @@ def test_optimize_and_restore_preserve_matview_state(spark, mv_setup):
     assert st.applied
     assert _view_agg(view) == _full_agg(base)
 
-    # direct DML on the view's own table (INSERT via _append_locked,
+    # direct DML on the view's own table (INSERT via _append,
     # UPDATE via _swap_in) also rewrites the version dir — the state
     # sidecar must survive those too, not just OPTIMIZE/RESTORE
     view.mv.insert_values(
@@ -520,7 +513,6 @@ def test_describe_history_tolerates_torn_final_line(spark, scratch_nation):
     import os
 
     mt = scratch_nation
-    mt.enable_versioning()
     mt.insert_values([(9001, "A", 0)], ["n_nationkey", "n_name", "n_regionkey"])
     with open(os.path.join(mt.path, mt._COMMITS_FILE), "a") as f:
         f.write('{"version": 3, "op": "WRI')  # torn: no newline, no close
@@ -542,7 +534,6 @@ def test_concurrent_enforced_inserts_cannot_both_commit_dup_key(spark, tmp_path_
     mt = sess.create_table(
         "race", [ColumnDefinition("id", "BIGINT", primary_key=True)]
     )
-    mt.enable_versioning()
     mt.set_constraint_enforcement(True)
     n_threads = 4
     outcomes: list[str] = []
