@@ -1084,65 +1084,126 @@ def _rarest_first_prefix(flat: DataFrame, threshold: float) -> DataFrame:
     )
 
 
+#: all-pairs candidates per document (``measure.block_occupancy``,
+#: doubled for containment's directed pairs) past which the n-gram pair
+#: operators take the rarest-first prefix route instead of salted
+#: all-pairs; both routes return the same rows. Measured with each route
+#: forced through this constant (4 cores, one JVM, cold caches, the
+#: registry callers' inputs on tools/make_scale.py copies of sf0.1,
+#: seconds per call, all-pairs vs prefix):
+#:
+#:   cands/doc  input                                all-pairs   prefix
+#:       24     containment t=0.8, sf0.01            1.2-1.5     2.3-2.7
+#:      124.5   jaccard t=0.2, sf0.1                 3.1-3.4     4.3-7.0
+#:      249     containment t=0.8, sf0.1             3.1-3.9     4.0-6.4
+#:      249.5   jaccard t=0.1 doubled corpus, sf0.1  10.0-10.9   13.0-14.8
+#:      249.5   jaccard t=0.2, 2x                    10.5-12.8   8.6-19.2
+#:      374.5   jaccard t=0.2, 3x                    19.3-20.2   10.7-10.9
+#:      499     containment t=0.8, 2x                6.8-7.9     4.6-5.3
+#:      749.5   jaccard t=0.1 doubled corpus, 3x     76.4-78.8   33.8-34.1
+#:
+#: The crossover lies between 250 (a tie at 2x, all-pairs ahead at
+#: sf0.1) and 375; 300 sits between them.
+_PREFIX_PAIRS_PER_DOC = 300.0
+
+#: per-side byte cutoff of the verify join's gram-table broadcast (see
+#: _gram_verify_join)
+_GRAM_BROADCAST_MAX_BYTES = 256 * 2**20
+
 #: byte cutoff of the shuffle route's pair-broadcast (~96 B per candidate
 #: pair row): a candidate table is one broadcast, unlike the per-side
-#: gram-table cutoff (verify_broadcast_max_bytes), which prices two
-#: hashed gram relations
+#: gram-table cutoff above, which prices two hashed gram relations
 _PAIR_BROADCAST_MAX_BYTES = 256 * 2**20
 
 
-def _gram_verify_join(cands, ga, gb, base, verify_join, max_bytes):
-    """The pair-verify join shape shared by the ngram prefix routes:
-    attach both gram arrays to each surviving candidate pair.
-
-    ``verify_join`` routes the physical strategy:
-
-    - ``"shuffle"``: shuffle_hash pins on both gram sides — the
-      unconditional 100 TB path. Cost: the (cands ⋈ g_a) intermediate
-      re-exchanges by (blk, id_b) carrying one full gram array PER
-      CANDIDATE PAIR — measured as the dominant exchange of the whole
-      containment plan (1.7 GiB of a 2.0 GiB physical total at the 10x
-      probe; incompressible hashed longs).
-    - ``"broadcast"``: broadcast both gram sides; candidate pairs never
-      re-exchange, the per-pair array payload never crosses the network.
-    - ``"auto"``: MEASURED routing (the repo-wide discipline): one tiny
-      aggregate computes the gram table's ACTUAL bytes (Σ|g|·8 + rows·48)
-      and broadcasts only under ``max_bytes``. This is deliberately NOT
-      the optimizer's static estimate — the documented broadcast-OOM
-      class on this path came from the planner seeing only the pruned
-      scan width of a computed-array projection and routing a corpus-
-      sized table into a BroadcastExchange; routing on measured bytes is
-      immune to that. Past the cutoff the shuffle path runs unchanged
-      (a 100 TB gram table can never broadcast).
-
-    ``max_bytes`` is a PER-SIDE data-size cutoff: the broadcast route
-    ships BOTH gram sides (ga and gb are the same base projection under
-    different aliases, but each gets its own BroadcastExchange +
-    HashedRelation), and a JVM hashed relation costs ~2-3x its input
-    bytes (UnsafeRow copies + the open-addressing map). Peak driver +
-    per-executor memory on the broadcast route is therefore
-    ≈ 2 × max_bytes × 2..3 — the default 256 MiB cutoff budgets
-    ≈ 1-1.5 GiB of relation memory, sized against the 4-8 GiB executor
-    heaps a 100 TB deployment runs, not against the cutoff alone.
-
-    ``base`` is pinned (PinnedCache, keyed/bounded) before the measuring
-    aggregate so the measurement does not pay a full recompute of the
-    gram projection when the caller reached this join without pinning
-    (explicit ``prefix_filter=True`` skips the auto-route's pin) — and
-    the verify join that follows reuses the same cache."""
-    if verify_join not in ("auto", "broadcast", "shuffle"):
-        raise ValueError(
-            f"verify_join must be 'auto', 'broadcast', or 'shuffle' — "
-            f"got {verify_join!r}"
+def _gram_base(
+    df: DataFrame, id_col: str, text_col: str, n: int, block_col: str | None
+) -> DataFrame:
+    """The blocked gram projection both n-gram pair operators pair over:
+    (blk, _id, _g), where _g is the document's distinct word n-grams
+    folded to sorted xxhash64 longs BEFORE any pairing, so the per-pair
+    set ops compare longs instead of re-hashing ~g gram strings per pair
+    — measured 5× at sf0.1 (at 64 bits a cross-collision perturbing one
+    pair's value is ~1e-15 per pair). ``blk`` is ``block_col``, or one
+    global block; rows spread over the default parallelism by id."""
+    grams = F.array_sort(
+        F.transform(
+            F.array_distinct(shingles(F.col(text_col), n)), lambda s: F.xxhash64(s)
         )
-    if verify_join == "auto":
-        base = PINNED.pin(base)
-        st = base.agg(
-            F.sum(F.size("_g")).alias("_s"), F.count(F.lit(1)).alias("_n")
-        ).collect()[0]
-        est = float(st["_s"] or 0) * 8.0 + float(st["_n"] or 0) * 48.0
-        verify_join = "broadcast" if est <= max_bytes else "shuffle"
-    if verify_join == "broadcast":
+    )
+    return df.repartition(
+        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
+    ).select(
+        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
+        F.col(id_col).alias("_id"),
+        grams.alias("_g"),
+    )
+
+
+def _gram_sides(base: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (blk, id_a, g_a) and (blk, id_b, g_b) sides of a gram base."""
+    return (
+        base.select("blk", F.col("_id").alias("id_a"), F.col("_g").alias("g_a")),
+        base.select("blk", F.col("_id").alias("id_b"), F.col("_g").alias("g_b")),
+    )
+
+
+def _prefix_route(base: DataFrame, directed: bool) -> tuple[DataFrame, bool]:
+    """The route decision of the n-gram pair operators: one count-only
+    aggregate over the blocked projection (measure.block_occupancy)
+    gives the exact all-pairs candidates per document — doubled for
+    ``directed`` pairs, occ·(occ−1) instead of occ·(occ−1)/2 — and the
+    prefix route runs past ``_PREFIX_PAIRS_PER_DOC``. This is the 100 TB
+    guard: a corpus whose blocks outgrow the caller's blocking flips to
+    the rare-gram-collision path instead of going quadratic.
+
+    Returns (pinned base, take the prefix route). The probe runs on the
+    unpinned projection, so deciding never materializes it; the pin then
+    lets every join side of the chosen route share one shingle-hash
+    pass. persist, unlike localCheckpoint, keeps lineage, so an executor
+    loss recomputes the partition instead of killing the job (PINNED
+    bounds the cache's lifetime)."""
+    pairs_per_doc, _ = block_occupancy(base)
+    if directed:
+        pairs_per_doc *= 2
+    return PINNED.pin(base), pairs_per_doc > _PREFIX_PAIRS_PER_DOC
+
+
+def _gram_verify_join(cands: DataFrame, base: DataFrame) -> DataFrame:
+    """The pair-verify join of the n-gram prefix routes: attach both gram
+    arrays of the pinned gram ``base`` to each surviving candidate pair
+    (blk, id_a, id_b).
+
+    The physical strategy is MEASURED (the repo-wide discipline): one
+    tiny aggregate computes the gram table's ACTUAL bytes (Σ|g|·8 +
+    rows·48) and both gram sides broadcast only under
+    ``_GRAM_BROADCAST_MAX_BYTES``, so candidate pairs never re-exchange
+    and the per-pair array payload never crosses the network. This is
+    deliberately NOT the optimizer's static estimate — the documented
+    broadcast-OOM class on this path came from the planner seeing only
+    the pruned scan width of a computed-array projection and routing a
+    corpus-sized table into a BroadcastExchange. Past the cutoff the
+    shuffle route below runs (a 100 TB gram table can never broadcast).
+    Its cost was the reason for the broadcast route: the (cands ⋈ g_a)
+    intermediate re-exchanges by (blk, id_b) carrying one full gram
+    array PER CANDIDATE PAIR — measured as the dominant exchange of the
+    whole containment plan (1.7 GiB of a 2.0 GiB physical total at the
+    10x probe; incompressible hashed longs).
+
+    The cutoff is PER SIDE: the broadcast route ships both gram sides
+    (one projection under two aliases, each with its own
+    BroadcastExchange + HashedRelation), and a JVM hashed relation
+    costs ~2-3x its input bytes (UnsafeRow copies + the open-addressing
+    map). Peak driver + per-executor memory on the broadcast route is
+    therefore ≈ 2 × cutoff × 2..3 — 256 MiB budgets ≈ 1-1.5 GiB of
+    relation memory, sized against the 4-8 GiB executor heaps a 100 TB
+    deployment runs, not against the cutoff alone."""
+    ga, gb = _gram_sides(base)
+    st = base.agg(
+        F.sum(F.size("_g")).alias("_s"), F.count(F.lit(1)).alias("_n")
+    ).collect()[0]
+    est = float(st["_s"] or 0) * 8.0 + float(st["_n"] or 0) * 48.0
+    if est <= _GRAM_BROADCAST_MAX_BYTES:
         return cands.join(F.broadcast(ga), ["blk", "id_a"]).join(
             F.broadcast(gb), ["blk", "id_b"]
         )
@@ -1193,11 +1254,7 @@ def ngram_jaccard_pairs(
     n: int = 2,
     threshold: float = 0.5,
     n_salts: int = 16,
-    prefix_filter: bool | str = False,
     length_band: int | None = None,
-    auto_pairs_per_doc: float = 64.0,
-    verify_join: str = "auto",
-    verify_broadcast_max_bytes: float = 256 * 2**20,
 ) -> DataFrame:
     """Exact word-n-gram Jaccard over pairs within a blocking key.
     Returns (id_a, id_b, jaccard), id_a < id_b.
@@ -1212,100 +1269,44 @@ def ngram_jaccard_pairs(
     (block, band) key, a size-tolerance approximation across it. Any
     oracle must mirror the same integer arithmetic (`sz // W`).
 
-    Two candidate strategies, both producing IDENTICAL output:
+    Two candidate routes return IDENTICAL rows; the engine picks one per
+    call from the measured block occupancy (_prefix_route):
 
-    - ``prefix_filter=False`` (default): salted all-pairs join within the
-      block (ext.similarity.salted_all_pairs). Candidates grow with
-      block-occupancy² — the right trade while blocks stay bounded
-      (length bands, LSH bands) or the corpus is modest: measured 1.6s at
-      sf0.1 / time slope ≈3 for 3× data (pair-compare cost is cheap
-      against fixed per-stage overheads at these sizes).
-    - ``prefix_filter=True``: PPJoin-style prefix filtering inside each
-      block — grams rank by per-block document frequency (rarest first)
-      and two documents become a candidate only when they share a gram
-      inside their ``|g| - ceil(t·|g|) + 1`` prefixes; the pigeonhole
-      keeps every pair with Jaccard ≥ t (no recall loss, asserted in
-      pytest). Candidates scale with rare-gram collisions instead of
-      occupancy², the winning trade once blocks grow unbounded with the
-      corpus — but the freq-rank + candidate machinery costs ~5× the
-      all-pairs scan at sf0.1, and at LOW thresholds (t≤0.3, prefixes
-      ≈80% of grams) frequent grams keep candidate pruning weak. Flip it
-      on when block occupancy × gram overlap, not fixed overhead,
-      dominates.
-    - ``prefix_filter="auto"``: measure, then decide — one bounded
-      aggregate over the blocked projection counts Σ occ·(occ−1)/2
-      (the all-pairs candidate space) and routes to the prefix path
-      when it exceeds ``auto_pairs_per_doc`` candidates per document.
-      The default 64 sits well under the measured crossover (all-pairs
-      ≈1.3e-5 s/candidate at sf0.1 vs ~6s fixed prefix overhead →
-      break-even ≈50 candidates/doc at 10k docs, falling as the corpus
-      grows since prefix overhead amortizes); both paths return the
-      SAME rows, so the routing never changes results — only the
-      candidate-generation cost. This is the 100 TB guard: a corpus
-      whose blocks outgrow the band prefilter flips to the
-      rare-gram-collision path instead of going quadratic.
+    - salted all-pairs within the block (ext.similarity.salted_all_pairs).
+      Candidates grow with block-occupancy² — the right trade while
+      blocks stay bounded (length bands, LSH bands) or the corpus is
+      modest, where the pair compares are cheap against the prefix
+      route's fixed per-stage overheads.
+    - PPJoin-style prefix filtering inside each block — grams rank by
+      per-block document frequency (rarest first) and two documents
+      become a candidate only when they share a gram inside their
+      ``|g| - ceil(t·|g|) + 1`` prefixes; the pigeonhole keeps every pair
+      with Jaccard ≥ t (no recall loss, asserted in pytest). Candidates
+      scale with rare-gram collisions instead of occupancy², the winning
+      trade once blocks grow with the corpus — past
+      ``_PREFIX_PAIRS_PER_DOC`` all-pairs candidates per document.
 
-    Grams fold to sorted xxhash64 longs BEFORE any pairing, so the
-    per-pair set ops compare longs instead of re-hashing ~g gram strings
-    per pair — measured 5× at sf0.1 (same trick as the MinHash verify,
-    which uses an even smaller 31-bit space; at 64 bits a cross-collision
-    perturbing one pair's Jaccard is ~1e-15 per pair).
-
-    ``verify_join`` (round-10 payload fix, shared with the containment
-    form — see _gram_verify_join): the prefix route's verify used to
-    re-exchange one full gram array per candidate pair; the measured
-    route broadcasts the gram sides while their ACTUAL bytes fit under
-    ``verify_broadcast_max_bytes`` and pins shuffle_hash past it. The
-    candidate join also applies the size pigeonhole min ≥ t′·max
-    (jaccard ≥ t forces |A∩B| ≥ t·|A∪B| ≥ t·max) — exact integer
-    arithmetic, candidates drop before the distinct exchange."""
-    grams = F.array_sort(
-        F.transform(
-            F.array_distinct(shingles(F.col(text_col), n)), lambda s: F.xxhash64(s)
-        )
-    )
-    blk0 = F.col(block_col) if block_col else F.lit(1)
+    Both routes apply the size pigeonhole min ≥ t′·max (jaccard ≥ t
+    forces |A∩B| ≥ t·|A∪B| ≥ t·max) in exact integer arithmetic before
+    any per-pair set op; the prefix route verifies through
+    _gram_verify_join, which broadcasts the gram sides while their
+    measured bytes fit."""
+    base = _gram_base(df, id_col, text_col, n, block_col)
     if length_band is not None:
         # _g is already the distinct-gram hash array, so size(_g) is the
         # distinct gram count; `div` is integer-exact in any engine (no
         # float-log band boundaries)
         band = F.expr(f"size(_g) div {int(length_band)}")
-        blk_expr = F.concat_ws(
-            "#", F.col("_blk0").cast("string"), band.cast("string")
+        base = base.select(
+            F.concat_ws("#", F.col("blk").cast("string"), band.cast("string"))
+            .alias("blk"),
+            "_id",
+            "_g",
         )
-    else:
-        blk_expr = F.col("_blk0")
-    base = (
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism, F.col(id_col))
-        .select(blk0.alias("_blk0"), F.col(id_col).alias("_id"), grams.alias("_g"))
-        .select(blk_expr.alias("blk"), "_id", "_g")
-    )
-    if isinstance(prefix_filter, str) and prefix_filter != "auto":
-        raise ValueError(
-            f"prefix_filter must be True, False, or 'auto' — got "
-            f"{prefix_filter!r} (any other string would silently enable "
-            "the prefix path via truthiness)"
-        )
-    if prefix_filter == "auto":
-        # one extra (linear, metadata-result) pass: block occupancies →
-        # the exact all-pairs candidate count, on a count-only projection,
-        # so deciding the route never pays for a full materialization of
-        # the blocked-gram projection. The chosen path then persist()s
-        # base below — unlike localCheckpoint, persist keeps lineage, so
-        # an executor loss recomputes the partition instead of killing
-        # the job (the 100 TB requirement).
-        pairs_per_doc, _ = block_occupancy(base)
-        prefix_filter = pairs_per_doc > auto_pairs_per_doc
-        # cache the blocked-gram projection for the chosen path: both join
-        # sides (3 uses on the prefix path) share one shingle-hash pass.
-        # Single-slot lifecycle: the result frame is lazy, so there is no
-        # point at which THIS call can unpersist its own cache — instead
-        # each auto call evicts the PREVIOUS call's (by then consumed)
-        # cache, so repeated invocations pin at most one stale copy
-        # instead of accumulating for the application lifetime.
-        base = PINNED.pin(base)
+    base, prefix = _prefix_route(base, directed=False)
     jac = F.size(F.array_intersect("g_a", "g_b")) / F.size(F.array_union("g_a", "g_b"))
-    if prefix_filter:
+    sz_num = _threshold_num(threshold)
+    if prefix:
         # every frame on this path (exploded grams, per-block gram
         # frequencies, prefix postings) is corpus-sized — none may
         # broadcast. They all descend from the lazily-persisted `base`,
@@ -1329,13 +1330,10 @@ def ngram_jaccard_pairs(
         # carry blk all the way through: ids need not be globally unique
         # across blocks, and joining back by id alone would multiply rows
         # / form cross-block pairs the all-pairs path can never produce.
-        # Size pigeonhole INSIDE the candidate join: jaccard ≥ t ⟹
-        # |A∩B| ≥ t·|A∪B| ⟹ min(|A|,|B|) ≥ t′·max(|A|,|B|) — same
-        # floor-quantized t′ as the prefix length, exact integers, so
-        # only provably-sub-threshold pairs drop (boundary pairs that
-        # round up to t are kept) before the distinct exchange and the
-        # array verify.
-        sz_num = _threshold_num(threshold)
+        # Size pigeonhole INSIDE the candidate join: same floor-quantized
+        # t′ as the prefix length, exact integers, so only provably-sub-
+        # threshold pairs drop (boundary pairs that round up to t are
+        # kept) before the distinct exchange and the array verify.
         cands = (
             prefix.select(
                 "blk", "_tok",
@@ -1358,30 +1356,11 @@ def ngram_jaccard_pairs(
             .select("blk", "id_a", "id_b")
             .distinct()
         )
-        # the gram-array sides must never STATICALLY broadcast: _g is a
-        # computed column, so the optimizer's size estimate sees only the
-        # pruned scan width and can route a corpus-sized array table
-        # (measured ~1 GB at 100x — a driver OOM at any heap) into a
-        # BroadcastExchange (first observed executing the prefix path at
-        # the 100x scale point). _gram_verify_join routes on MEASURED
-        # bytes instead: broadcast under the cutoff (the per-pair array
-        # payload never re-exchanges — the dominant exchange of this
-        # plan), shuffle_hash pins past it (bounded per-partition builds
-        # at any corpus size).
-        ga = base.select("blk", F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
-        gb = base.select("blk", F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
-        pairs = _gram_verify_join(
-            cands, ga, gb, base, verify_join, verify_broadcast_max_bytes
-        )
+        pairs = _gram_verify_join(cands, base)
     else:
         from mesin_spark.ext.similarity import salted_all_pairs
 
-        a = base.select(
-            F.col("blk"), F.col("_id").alias("id_a"), F.col("_g").alias("g_a")
-        )
-        b = base.select(
-            F.col("blk"), F.col("_id").alias("id_b"), F.col("_g").alias("g_b")
-        )
+        a, b = _gram_sides(base)
         # the same exact size pigeonhole as the prefix route, applied
         # BEFORE the per-pair set ops: F.size is O(1) against the
         # array_intersect/array_union passes it culls
@@ -1389,8 +1368,7 @@ def ngram_jaccard_pairs(
             (F.col("id_a") < F.col("id_b"))
             & F.expr(
                 f"1000000 * cast(least(size(g_a), size(g_b)) as bigint) >= "
-                f"{_threshold_num(threshold)} * "
-                f"cast(greatest(size(g_a), size(g_b)) as bigint)"
+                f"{sz_num} * cast(greatest(size(g_a), size(g_b)) as bigint)"
             )
         )
     return (
@@ -1437,6 +1415,11 @@ def suppress_lower_quality(
     )
 
 
+#: duplication ratio (rows / approx distinct gram sets) past which
+#: ngram_containment_pairs collapses verbatim duplicates before pairing
+_DUP_COLLAPSE_RATIO = 1.25
+
+
 def ngram_containment_pairs(
     df: DataFrame,
     id_col: str,
@@ -1445,12 +1428,6 @@ def ngram_containment_pairs(
     n: int = 2,
     threshold: float = 0.8,
     n_salts: int = 16,
-    prefix_filter: bool | str = False,
-    auto_pairs_per_doc: float = 64.0,
-    collapse_dups: bool | str = "auto",
-    dup_ratio: float = 1.25,
-    verify_join: str = "auto",
-    verify_broadcast_max_bytes: float = 256 * 2**20,
 ) -> DataFrame:
     """Exact word-n-gram CONTAINMENT over pairs within a blocking key:
     containment(a ⊆ b) = |grams(a) ∩ grams(b)| / |grams(a)| — the
@@ -1459,7 +1436,7 @@ def ngram_containment_pairs(
     inclusion), where Jaccard collapses toward |a|/|b| and misses it.
     Emitted per DIRECTED pair (id_a is the contained candidate), both
     directions considered. Grams fold to sorted hashed longs before any
-    pairing.
+    pairing (_gram_base).
 
     Containment CANNOT reuse the Jaccard form's length band (a short
     document contained in a much longer one is exactly the target, and
@@ -1468,49 +1445,28 @@ def ngram_containment_pairs(
     at most ⌊(1−t)·|a|⌋ of a's grams, so b must contain at least one of
     ANY ⌊(1−t)·|a|⌋+1 grams of a — candidates are (rarest-first prefix
     of a) ⋈ (FULL gram postings, the container side needs them all),
-    no recall loss (pytest-asserted against the all-pairs path). At
+    no recall loss (pytest-asserted against the all-pairs route). At
     t=0.8 the prefix is ~20% of each contained candidate's grams and
     candidates scale with rare-gram collisions instead of block
     occupancy².
 
-    - ``prefix_filter=False``: salted all-pairs within the block — the
-      right trade at bench scales (the prefix machinery's fixed cost
-      dominates small blocks).
-    - ``prefix_filter=True``: the pigeonhole prefix route.
-    - ``prefix_filter="auto"``: the same measured occupancy probe as
-      ngram_jaccard_pairs — one count-only aggregate routes to the
-      prefix path past ``auto_pairs_per_doc`` all-pairs candidates per
-      document. This is the 100 TB guard: the 100x scale sweep caught
-      the unguarded all-pairs form at 2.5e10 directed pairs (5-value
-      block key × 100k docs/block) — quadratic-unbounded, exactly the
-      class the auto-router exists to prevent.
+    The engine picks the route per call (_prefix_route, directed):
+    salted all-pairs within the block while the measured all-pairs
+    candidates per document stay under ``_PREFIX_PAIRS_PER_DOC`` (the
+    prefix machinery's fixed cost dominates small blocks), the prefix
+    route past it. This is the 100 TB guard: the 100x scale sweep caught
+    the unguarded all-pairs form at 2.5e10 directed pairs (5-value block
+    key × 100k docs/block). Both routes return the same rows.
 
-    ``verify_join`` (round-10 payload fix): the prefix route's array
-    verify used to re-exchange one full gram array PER CANDIDATE PAIR —
-    measured as 1.7 GiB of the plan's 2.0 GiB physical shuffle at the
-    10x probe (per-node SQLMetrics attribution: the hashpartitioning
-    (blk, id_b) exchange between the two verify joins). The measured
-    broadcast route (_gram_verify_join) eliminates that exchange while
-    the gram table's ACTUAL bytes fit under
-    ``verify_broadcast_max_bytes``; past the cutoff the shuffle_hash
-    path runs unchanged. Additionally the candidate join applies the
-    asymmetric size pigeonhole |B| ≥ t′·|A| (a container smaller than
-    t·|A| can never contain a at threshold t) — exact, integer-
-    arithmetic, before the distinct exchange."""
+    The prefix route verifies through _gram_verify_join (measured
+    broadcast of the gram sides — the per-pair array exchange it removes
+    was 1.7 GiB of the plan's 2.0 GiB physical shuffle at the 10x
+    probe). Both routes apply the asymmetric size pigeonhole
+    |B| ≥ t′·|A| (a container smaller than t·|A| can never contain a at
+    threshold t) — exact, integer arithmetic, before any array verify."""
     from mesin_spark.ext.similarity import salted_all_pairs
 
-    grams = F.array_sort(
-        F.transform(
-            F.array_distinct(shingles(F.col(text_col), n)), lambda s: F.xxhash64(s)
-        )
-    )
-    base = df.repartition(
-        df.sparkSession.sparkContext.defaultParallelism, F.col(id_col)
-    ).select(
-        (F.col(block_col) if block_col else F.lit(1)).alias("blk"),
-        F.col(id_col).alias("_id"),
-        grams.alias("_g"),
-    )
+    base = _gram_base(df, id_col, text_col, n, block_col)
     # DUPLICATE COLLAPSE (the fuzzy-join lesson generalized to the set
     # tier): containment depends only on the gram SETS, so on a corpus
     # with verbatim duplicates (real crawls repeat boilerplate; a group
@@ -1521,44 +1477,28 @@ def ngram_containment_pairs(
     # equi-self-join; verified rep pairs expand back through two keyed
     # joins — both linear in their TRUE output. MEASURED, not
     # unconditional (the routing discipline of every tier here): one
-    # count + HLL aggregate estimates the duplication ratio, and an
-    # all-distinct corpus SKIPS the collapse — running it anyway was
-    # measured at +56 GiB / +95 s at the 100x probe, because the
-    # group-min window's shuffled output feeds every downstream consumer
-    # (when the collapse IS taken, `members` persists once for the same
-    # reason — the fuzzy/ngram single-slot lifecycle).
-    if isinstance(collapse_dups, str) and collapse_dups != "auto":
-        raise ValueError(
-            f"collapse_dups must be True, False, or 'auto' — got "
-            f"{collapse_dups!r}"
-        )
-    if collapse_dups == "auto":
-        st = base.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.approx_count_distinct("_g").alias("d"),
-        ).collect()[0]
-        collapse_dups = (st["n"] or 0) / max(st["d"] or 1, 1) > dup_ratio
+    # count + HLL aggregate estimates the duplication ratio, and a corpus
+    # under _DUP_COLLAPSE_RATIO SKIPS the collapse — running it anyway
+    # on an all-distinct corpus was measured at +56 GiB / +95 s at the
+    # 100x probe, because the group-min window's shuffled output feeds
+    # every downstream consumer (when the collapse IS taken, `members`
+    # persists once for the same reason). Both choices return the same
+    # rows.
+    st = base.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.approx_count_distinct("_g").alias("d"),
+    ).collect()[0]
     members = None
-    if collapse_dups:
+    if (st["n"] or 0) / max(st["d"] or 1, 1) > _DUP_COLLAPSE_RATIO:
         gw = Window.partitionBy("blk", "_g")
         members = PINNED.pin(base.withColumn("_gid", F.min("_id").over(gw)))
         base = members.filter(F.col("_id") == F.col("_gid")).select(
             "blk", "_id", "_g"
         )
-    if isinstance(prefix_filter, str) and prefix_filter != "auto":
-        raise ValueError(
-            f"prefix_filter must be True, False, or 'auto' — got "
-            f"{prefix_filter!r} (any other string would silently enable "
-            "the prefix path via truthiness)"
-        )
-    if prefix_filter == "auto":
-        # same measured routing as ngram_jaccard_pairs, doubled for
-        # directed pairs: occ·(occ−1), not /2
-        undirected, _ = block_occupancy(base)
-        prefix_filter = 2 * undirected > auto_pairs_per_doc
-        base = PINNED.pin(base)
+    base, prefix = _prefix_route(base, directed=True)
     cont = F.size(F.array_intersect("g_a", "g_b")) / F.size("g_a")
-    if prefix_filter:
+    sz_num = _threshold_num(threshold)
+    if prefix:
         flat = base.select(
             "blk", "_id", F.size("_g").alias("_sz"), F.explode("_g").alias("_tok")
         )
@@ -1579,7 +1519,6 @@ def ngram_containment_pairs(
         # (boundary pairs that ROUND up to t are kept; exact integer
         # arithmetic, no float ceil traps). Kills size-mismatched
         # candidates before the distinct exchange and the array verify.
-        sz_num = _threshold_num(threshold)
         cands = (
             prefix_a.join(post_b.hint("shuffle_hash"), ["blk", "_tok"])
             .filter(
@@ -1592,18 +1531,9 @@ def ngram_containment_pairs(
             .select("blk", "id_a", "id_b")
             .distinct()
         )
-        ga = base.select("blk", F.col("_id").alias("id_a"), F.col("_g").alias("g_a"))
-        gb = base.select("blk", F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
-        pairs = _gram_verify_join(
-            cands, ga, gb, base, verify_join, verify_broadcast_max_bytes
-        ).filter(F.size("g_a") > 0)
+        pairs = _gram_verify_join(cands, base).filter(F.size("g_a") > 0)
     else:
-        a = base.select(
-            F.col("blk"), F.col("_id").alias("id_a"), F.col("_g").alias("g_a")
-        )
-        b = base.select(
-            F.col("blk"), F.col("_id").alias("id_b"), F.col("_g").alias("g_b")
-        )
+        a, b = _gram_sides(base)
         # asymmetric size pigeonhole pre-verify (the prefix route's
         # filter applied to the salted path): culls |B| < t'|A| pairs
         # before the per-pair array_intersect
@@ -1612,7 +1542,7 @@ def ngram_containment_pairs(
             & (F.size("g_a") > 0)
             & F.expr(
                 f"1000000 * cast(size(g_b) as bigint) >= "
-                f"{_threshold_num(threshold)} * cast(size(g_a) as bigint)"
+                f"{sz_num} * cast(size(g_a) as bigint)"
             )
         )
     if members is None:
@@ -1927,7 +1857,7 @@ def run_dedup_plan(
         elif tier == "embedding":
             raise ValueError(
                 "embedding tier needs vectors: run ext.similarity."
-                "embedding_near_dup_pairs + dedup_clusters on the embeddings "
+                "embedding_neardup_pairs + dedup_clusters on the embeddings "
                 "table, then anti-join the losers here"
             )
         else:
@@ -1940,20 +1870,20 @@ def trigram_blocked_pairs(
     id_col: str,
     text_col: str,
     max_dist: int = 1,
-    min_block: int = 2,
     max_block: int = 64,
 ) -> DataFrame:
     """Edit-distance pairs WITHOUT a natural blocking key: candidates
-    share at least one RARE character trigram (document frequency in
-    [min_block, max_block]), then verify with codegen'd levenshtein.
+    share at least one RARE character trigram (held by at most
+    ``max_block`` documents), then verify with codegen'd levenshtein.
     The gram-frequency cap is the scale guard — ubiquitous grams
     ("the", "000") would otherwise rebuild the quadratic pair space;
     rare grams bound each block the way LSH bands bound MinHash
-    buckets. Candidate generation is explode + self-join on the gram;
-    every stage is keyed and capped, nothing all-pairs. (Blocking
-    recall: a pair sharing ONLY ubiquitous grams is missed — the
-    documented tradeoff; lower max_block = faster/less recall.)
-    Returns (id_a, id_b, dist), id_a < id_b."""
+    buckets. Candidate generation is the LSH banding kernel
+    (_band_pairs) with one band keyed by the gram itself: every stage
+    is keyed and capped, nothing all-pairs. (Blocking recall: a pair
+    sharing ONLY ubiquitous grams is missed — the documented tradeoff;
+    lower max_block = faster/less recall.) Returns (id_a, id_b, dist),
+    id_a < id_b."""
     s = F.col(text_col)
     grams_arr = F.array_distinct(
         F.transform(
@@ -1961,27 +1891,15 @@ def trigram_blocked_pairs(
             lambda i: s.substr(i, F.lit(3)),
         )
     )
-    grams = df.select(
-        F.col(id_col).alias("_id"), F.col(text_col).alias("_t"),
-        F.explode(grams_arr).alias("g"),
-    )
-    rare = (
-        grams.groupBy("g")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .filter((F.col("_n") >= min_block) & (F.col("_n") <= max_block))
-        .select("g")
-    )
-    blocked = grams.join(rare, "g")
-    a = blocked.select("g", F.col("_id").alias("id_a"), F.col("_t").alias("t_a"))
-    b = blocked.select("g", F.col("_id").alias("id_b"), F.col("_t").alias("t_b"))
-    cands = (
-        a.join(b, "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "t_a", "t_b")
-        .distinct()
-    )
+    # one row per (document, distinct gram); the gram is the bucket key
+    grams = df.select(F.col(id_col).alias("_id"), F.explode(grams_arr).alias("_sig"))
+    cands = _band_pairs(grams, 1, 1, max_block, band_key=lambda j, rows: F.col("_sig"))
+    ta = df.select(F.col(id_col).alias("id_a"), F.col(text_col).alias("t_a"))
+    tb = df.select(F.col(id_col).alias("id_b"), F.col(text_col).alias("t_b"))
     return (
-        cands.withColumn("dist", F.levenshtein("t_a", "t_b"))
+        cands.join(ta, "id_a")
+        .join(tb, "id_b")
+        .withColumn("dist", F.levenshtein("t_a", "t_b"))
         .filter(F.col("dist") <= max_dist)
         .select("id_a", "id_b", "dist")
     )
@@ -2035,7 +1953,10 @@ def prefix_jaccard_pairs(
 
 # -- Edit-distance pairs (PassJoin segment pigeonhole) ---------------------
 
-#: the previous auto-routed levenshtein call's persisted name projection
+#: all-pairs candidates per distinct name (``measure.block_occupancy``)
+#: past which levenshtein_pairs takes the segment route; both routes
+#: return the same rows
+_SEGMENT_PAIRS_PER_NAME = 64.0
 
 
 def levenshtein_pairs(
@@ -2045,8 +1966,6 @@ def levenshtein_pairs(
     block_col: str | None = None,
     k: int = 2,
     n_salts: int = 16,
-    segment_filter: bool | str = False,
-    auto_pairs_per_doc: float = 64.0,
 ) -> DataFrame:
     """Exact edit-distance self-join: all pairs within a blocking key at
     Levenshtein distance <= k. Returns (id_a, id_b, name_a, name_b,
@@ -2064,13 +1983,14 @@ def levenshtein_pairs(
     candidate pairs as a verify-then-expand — both keyed, both linear
     in their TRUE output (which is the answer, not overhead).
 
-    Candidate strategies over the distinct-name table, IDENTICAL output:
+    Two candidate routes over the distinct-name table, IDENTICAL output;
+    the engine picks one per call:
 
-    - ``segment_filter=False``: salted all-pairs join within the block
+    - salted all-pairs join within the block
       (ext.similarity.salted_all_pairs) + codegen'd levenshtein verify —
       candidates grow with distinct-name-occupancy², the right trade
       while blocks stay bounded.
-    - ``segment_filter=True``: PassJoin-style segment pigeonhole (Li,
+    - PassJoin-style segment pigeonhole (Li,
       Deng, Feng 2011 — public VLDB work): every string is partitioned
       into k+1 contiguous segments (even split, integer boundaries
       ``start_i = (i·L) div (k+1)``); if ed(s, t) <= k then in an
@@ -2089,14 +2009,14 @@ def levenshtein_pairs(
       verify keeps the output exactly equal to the all-pairs path — a
       pigeonhole, not an approximation (no recall loss,
       pytest-asserted).
-    - ``segment_filter="auto"``: measure-then-route (the
-      ngram_jaccard_pairs discipline): one count-only aggregate over
-      the distinct-name projection computes the all-pairs candidate
-      space and flips to the segment path past ``auto_pairs_per_doc``
-      candidates per distinct name — the 100 TB guard that keeps a
-      low-cardinality canopy key (brand, first token, soundex) off the
-      occupancy² cliff while small corpora keep the cheaper all-pairs
-      plan.
+
+    The route is measured (the ngram_jaccard_pairs discipline): one
+    count-only aggregate over the distinct-name projection computes the
+    all-pairs candidate space and flips to the segment route past
+    ``_SEGMENT_PAIRS_PER_NAME`` candidates per distinct name — the
+    100 TB guard that keeps a low-cardinality canopy key (brand, first
+    token, soundex) off the occupancy² cliff while small corpora keep
+    the cheaper all-pairs plan.
 
     Empty segments (strings shorter than k+1) are kept on both sides:
     for a string with |s| <= k every within-k partner may align all
@@ -2108,12 +2028,6 @@ def levenshtein_pairs(
     from computed projections whose static size estimates undercount,
     the same broadcast-OOM class the 100x sweep caught on the ngram
     prefix path."""
-    if isinstance(segment_filter, str) and segment_filter != "auto":
-        raise ValueError(
-            f"segment_filter must be True, False, or 'auto' — got "
-            f"{segment_filter!r} (any other string would silently enable "
-            "the segment path via truthiness)"
-        )
     if k < 0:
         raise ValueError(f"levenshtein_pairs: k must be >= 0, got {k}")
     kp1 = k + 1
@@ -2138,13 +2052,11 @@ def levenshtein_pairs(
             F.lit(0).alias("dist"),
         )
     )
-    if segment_filter == "auto":
-        # count-only occupancy probe over DISTINCT names (the candidate
-        # universe)
-        pairs_per_doc, _ = block_occupancy(names)
-        segment_filter = pairs_per_doc > auto_pairs_per_doc
-        names = PINNED.pin(names)
-    if segment_filter:
+    # count-only occupancy probe over DISTINCT names (the candidate
+    # universe); the pin shares one distinct pass with the chosen route
+    pairs_per_name, _ = block_occupancy(names)
+    names = PINNED.pin(names)
+    if pairs_per_name > _SEGMENT_PAIRS_PER_NAME:
         # index side: k+1 even segments per distinct name
         idx = names.select(
             "blk",

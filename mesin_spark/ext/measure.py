@@ -7,8 +7,9 @@ report only their pruned scan width to the planner, which then routes
 corpus-sized tables into BroadcastExchanges (a driver OOM) or leaves a
 static multi-GiB frame re-exchanging every iterative round.
 
-Shared by ext/dedup (_gram_verify_join, dedup_clusters, the ngram and
-levenshtein "auto" routes), ext/similarity (embedding_neardup_pairs) and
+Shared by ext/dedup (_gram_verify_join, dedup_clusters, the route
+decisions of the ngram and levenshtein pair operators), ext/similarity
+(embedding_neardup_pairs) and
 ext/graph (hits edge prepartition); see SHUFFLE.md's round-10/11 manual
 sections for the measured routings.
 """

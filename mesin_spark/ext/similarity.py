@@ -676,11 +676,12 @@ def embedding_neardup_pairs(
       sizes ``lsh_rows`` as ⌈log2(max_occ / lsh_target_occupancy)⌉
       (clamped to [4, 16]) so expected bucket occupancy lands near the
       target however big the fattest block grows. Below the cliff the
-      exact all-pairs plan runs unchanged. UNLIKE every other "auto"
-      route in this repo (prefix_filter, segment_filter, collapse_dups,
-      verify_join — all exact-equivalent strategy switches), crossing
-      the cliff here changes SEMANTICS (exact → ~98%-recall
-      approximate), so it additionally requires the explicit
+      exact all-pairs plan runs unchanged. UNLIKE the routes of the
+      exact pair operators (ngram_jaccard_pairs, ngram_containment_pairs,
+      levenshtein_pairs), which the engine picks alone because every
+      route returns the same rows, crossing the cliff here changes
+      SEMANTICS (exact → ~98%-recall approximate), so it stays a caller
+      choice and additionally requires the explicit
       ``approx_ok=True``; without it a past-the-cliff corpus raises
       (naming both escape hatches) instead of silently dropping
       non-identical near-dups or silently going occupancy-quadratic.

@@ -302,14 +302,14 @@ def q_dedup_ngram(spark, sf_dir):
     # cardinality ~50x, so parallelism comes from the blocks themselves
     # and heavy salting only replicates the gram-array side's shuffle
     # payload (measured: 16 salts cost +20% at both scale points)
-    # prefix_filter="auto": measured occupancy routing (identical output
-    # either way) — at bench scales the banded blocks stay far under the
-    # 64-candidates/doc crossover so the salted all-pairs path runs; a
-    # corpus whose blocks outgrow the band prefilter flips to the
-    # PPJoin prefix path instead of going quadratic
+    # the engine routes on measured block occupancy (identical output
+    # either way): at bench scales the banded blocks stay far under the
+    # prefix cutoff so the salted all-pairs path runs; a corpus whose
+    # blocks outgrow the band prefilter flips to the PPJoin prefix path
+    # instead of going quadratic
     return D.ngram_jaccard_pairs(
         docs, "doc_id", block_col="source", n=2, threshold=0.9,
-        length_band=2, n_salts=4, prefix_filter="auto",
+        length_band=2, n_salts=4,
     ).orderBy("id_a", "id_b")
 
 

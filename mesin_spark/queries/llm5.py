@@ -441,8 +441,8 @@ def q_weighted_sample(spark, sf_dir):
 def q_fuzzy_join(spark, sf_dir):
     """Fuzzy (edit-distance) self-join — entity resolution within a
     blocking key: part-name pairs within the same brand at Levenshtein
-    distance <= 2 (ext/dedup.levenshtein_pairs). segment_filter="auto"
-    is the measured-occupancy routing the ngram/containment tiers use:
+    distance <= 2 (ext/dedup.levenshtein_pairs). The engine routes on
+    measured occupancy, as the ngram/containment tiers do:
     small blocks keep the salted all-pairs join + codegen'd
     levenshtein verify; blocks past 64 candidates/row flip to the
     PassJoin segment pigeonhole (ed <= k ⇒ the two names share one of
@@ -454,9 +454,9 @@ def q_fuzzy_join(spark, sf_dir):
     from mesin_spark.ext.dedup import levenshtein_pairs
 
     p = T(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand")
-    return levenshtein_pairs(
-        p, "p_partkey", "p_name", "p_brand", k=2, segment_filter="auto"
-    ).orderBy("id_a", "id_b")
+    return levenshtein_pairs(p, "p_partkey", "p_name", "p_brand", k=2).orderBy(
+        "id_a", "id_b"
+    )
 
 
 @query(
@@ -498,9 +498,7 @@ def q_fuzzy_clusters(spark, sf_dir):
     from mesin_spark.ext.dedup import dedup_clusters, levenshtein_pairs
 
     p = T(spark, sf_dir, "part").select("p_partkey", "p_name", "p_brand")
-    pairs = levenshtein_pairs(
-        p, "p_partkey", "p_name", "p_brand", k=2, segment_filter="auto"
-    )
+    pairs = levenshtein_pairs(p, "p_partkey", "p_name", "p_brand", k=2)
     return dedup_clusters(pairs).orderBy("node")
 
 
@@ -689,8 +687,8 @@ def q_dedup_containment(spark, sf_dir):
     (near-)embedded in b — quote and boilerplate inclusion that Jaccard
     misses when |b| >> |a| (Jaccard ≈ |a|/|b| → below any threshold).
     The asymmetric complement of q_dedup_ngram
-    (ext/dedup.ngram_containment_pairs). prefix_filter="auto" routes by
-    measured block occupancy exactly like q_dedup_ngram: salted
+    (ext/dedup.ngram_containment_pairs). The engine routes on measured
+    block occupancy exactly as for q_dedup_ngram: salted
     all-pairs at bench scales, the asymmetric pigeonhole-prefix route
     (a's ⌊0.2·|a|⌋+1 rarest grams ⋈ full container postings — a length
     band can't guard containment, short-in-long is the target) once
@@ -703,7 +701,6 @@ def q_dedup_containment(spark, sf_dir):
     docs = T(spark, sf_dir, "documents").filter(TX.token_count("text") >= 2)
     return D.ngram_containment_pairs(
         docs, "doc_id", block_col="source", n=2, threshold=0.8,
-        prefix_filter="auto",
     ).orderBy("id_a", "id_b")
 
 

@@ -226,7 +226,9 @@ def _analyze(sess: DdlSession, sql: str) -> DataFrame:
     the named (default: all numeric) columns, persists the artifact at
     the table root (<table>/_stats, beside the version dirs: it describes
     the version it was built from, later commits keep it, and VACUUM does
-    not remove it), records the pointer in the catalog entry's
+    not remove it) — or, for an external table, in the session warehouse
+    (<base_dir>/<table>._stats), since a user path is never written —
+    records the pointer in the catalog entry's
     properties, and returns the summary rows. Estimators and the
     stats-driven join planner then load_stats() from the catalog
     pointer."""
@@ -253,10 +255,10 @@ def _analyze(sess: DdlSession, sql: str) -> DataFrame:
     from mesin_spark.ext.stats import build_stats, write_stats
 
     stats = build_stats(df, cols)
-    if os.path.isfile(mt.path):
-        # table registered from a single parquet FILE: _stats can't nest
-        # under it — keep the artifact beside the file (same dir, suffixed)
-        stats_path = mt.path + "._stats"
+    if mt.current_version() is None:
+        # an external path is read-only (ManagedTable._owned_version): its
+        # artifact lives in the warehouse, under a name no table dir takes
+        stats_path = os.path.join(sess.base_dir, f"{name}._stats")
     else:
         stats_path = os.path.join(mt.path, "_stats")
     write_stats(stats, sess.spark, stats_path)

@@ -707,10 +707,18 @@ def test_hits_overflow_guard_is_live_and_rounds_validated(spark, monkeypatch):
         G.hits_portable(edges, rounds=1).collect()
 
 
-def test_containment_prefix_filter_exact_equivalence(spark):
+def _force_prefix(monkeypatch, on: bool) -> None:
+    """Force the n-gram pair operators onto the prefix route (``on``) or
+    salted all-pairs through their route cutoff."""
+    import mesin_spark.ext.dedup as D
+
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", -1.0 if on else float("inf"))
+
+
+def test_containment_prefix_filter_exact_equivalence(spark, monkeypatch):
     """The asymmetric pigeonhole prefix (a's floor((1-t)|a|)+1 rarest
     grams joined against FULL container postings) is candidate pruning,
-    never recall loss: both strategies must return the identical
+    never recall loss: both routes must return the identical
     DIRECTED pair set with identical containment values — including the
     short-doc-embedded-in-long-doc case a length band would drop (the
     reason containment can't reuse the Jaccard band guard)."""
@@ -728,46 +736,45 @@ def test_containment_prefix_filter_exact_equivalence(spark):
             )
     df = spark.createDataFrame(rows, "doc_id long, src string, text string")
     for t in (0.5, 0.8):
-        a = sorted(
-            tuple(r)
-            for r in ngram_containment_pairs(
-                df, "doc_id", block_col="src", threshold=t, prefix_filter=False
-            ).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in ngram_containment_pairs(
-                df, "doc_id", block_col="src", threshold=t, prefix_filter=True
-            ).collect()
-        )
+        got = []
+        for pf in (False, True):
+            _force_prefix(monkeypatch, pf)
+            got.append(sorted(
+                tuple(r)
+                for r in ngram_containment_pairs(
+                    df, "doc_id", block_col="src", threshold=t
+                ).collect()
+            ))
+        a, b = got
         assert a == b and len(a) > 0, (t, len(a), len(b))
         # the planted short-in-long directed pairs must be present
         assert any(ia < 2000 <= ib for ia, ib, _ in a), a[:5]
 
 
-def test_containment_auto_routing_by_occupancy(spark):
-    """prefix_filter='auto' on the containment form: small blocks stay
+def test_containment_auto_routing_by_occupancy(spark, monkeypatch):
+    """The measured route of the containment form: small blocks stay
     all-pairs, one fat block flips to the prefix route (recognizable by
     its row_number window), results identical either way — the routing
     that keeps q_dedup_containment off the occupancy-squared cliff the
     100x sweep measured (2.5e10 directed pairs on a 5-value block key)."""
+    import mesin_spark.ext.dedup as D
     from mesin_spark.ext.dedup import ngram_containment_pairs
+
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", 4.0)
 
     fat = spark.createDataFrame(
         [(i, "one", f"alpha beta gamma delta epsilon doc{i % 3} w{i}")
          for i in range(40)],
         "doc_id long, src string, text string",
     )
-    routed = ngram_containment_pairs(
-        fat, "doc_id", block_col="src", threshold=0.5,
-        prefix_filter="auto", auto_pairs_per_doc=4.0,
-    )
+    routed = ngram_containment_pairs(fat, "doc_id", block_col="src", threshold=0.5)
     assert "Window" in routed._jdf.queryExecution().optimizedPlan().toString()
     got = sorted(tuple(r) for r in routed.collect())
+    _force_prefix(monkeypatch, False)
     want = sorted(
         tuple(r)
         for r in ngram_containment_pairs(
-            fat, "doc_id", block_col="src", threshold=0.5, prefix_filter=False
+            fat, "doc_id", block_col="src", threshold=0.5
         ).collect()
     )
     assert got == want and len(got) > 0
@@ -816,7 +823,7 @@ def test_hits_float_agreement_and_unbounded_envelope(spark):
     assert out.count() == 51
 
 
-def test_prefix_pigeonhole_exact_threshold_boundaries(spark):
+def test_prefix_pigeonhole_exact_threshold_boundaries(spark, monkeypatch):
     """Pairs sitting EXACTLY at the threshold when t·|grams| lands on an
     integer — the case float prefix arithmetic silently drops
     (ceil(0.8·5) = 5 in doubles because 0.8·5 = 4.0000000000000004, so
@@ -837,10 +844,11 @@ def test_prefix_pigeonhole_exact_threshold_boundaries(spark):
         "doc_id long, src string, text string",
     )
     for pf in (False, True):
+        _force_prefix(monkeypatch, pf)
         got = {
             (r["id_a"], r["id_b"]): r["containment"]
             for r in ngram_containment_pairs(
-                docs_c, "doc_id", block_col="src", threshold=0.8, prefix_filter=pf
+                docs_c, "doc_id", block_col="src", threshold=0.8
             ).collect()
         }
         assert got.get((1, 2)) == 0.8, (pf, got)
@@ -856,10 +864,11 @@ def test_prefix_pigeonhole_exact_threshold_boundaries(spark):
         "doc_id long, src string, text string",
     )
     for pf in (False, True):
+        _force_prefix(monkeypatch, pf)
         got = {
             (r["id_a"], r["id_b"]): r["jaccard"]
             for r in ngram_jaccard_pairs(
-                docs_j, "doc_id", block_col="src", threshold=0.3, prefix_filter=pf
+                docs_j, "doc_id", block_col="src", threshold=0.3
             ).collect()
         }
         assert got.get((1, 2)) == 0.3, (pf, got)
@@ -922,7 +931,7 @@ def test_pigeonhole_prefix_len_int64_and_odd_thresholds(spark):
     assert whole[0]["p"] == 3000
 
 
-def test_ngram_prefix_route_long_document_no_overflow(spark):
+def test_ngram_prefix_route_long_document_no_overflow(spark, monkeypatch):
     """End-to-end repro of the review finding: a >3000-distinct-gram
     document through the PPJoin prefix route at t=0.8 — the identical
     pair must come back at jaccard 1.0 with no arithmetic overflow."""
@@ -933,19 +942,20 @@ def test_ngram_prefix_route_long_document_no_overflow(spark):
         [(1, "A", text), (2, "A", text), (3, "A", "tiny doc here")],
         "doc_id long, src string, text string",
     )
-    got = ngram_jaccard_pairs(
-        df, "doc_id", block_col="src", threshold=0.8, prefix_filter=True
-    ).collect()
+    _force_prefix(monkeypatch, True)
+    got = ngram_jaccard_pairs(df, "doc_id", block_col="src", threshold=0.8).collect()
     assert [(r["id_a"], r["id_b"], r["jaccard"]) for r in got] == [(1, 2, 1.0)]
 
 
-def test_levenshtein_segment_filter_exact_equivalence(spark):
+def test_levenshtein_segment_filter_exact_equivalence(spark, monkeypatch):
     """The PassJoin segment pigeonhole is candidate PRUNING, never
-    recall loss: both strategies must return the identical pair set
+    recall loss: both routes (forced through the route cutoff) must
+    return the identical pair set
     with identical distances — including planted near-dups (one char
     substituted / inserted / deleted), verbatim duplicates, and the
     short-string regime where only an EMPTY segment aligns edit-free
     (|s| <= k; dropping empty segments would lose those pairs)."""
+    import mesin_spark.ext.dedup as D
     from mesin_spark.ext.dedup import levenshtein_pairs
 
     rows = []
@@ -965,64 +975,54 @@ def test_levenshtein_segment_filter_exact_equivalence(spark):
             rows.append((400 + i, blk, "x" + nm[1:]))  # substitution
     df = spark.createDataFrame(rows, "id long, brand string, name string")
     for k in (1, 2):
-        a = sorted(
-            tuple(r)
-            for r in levenshtein_pairs(
-                df, "id", "name", "brand", k=k, segment_filter=False
-            ).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in levenshtein_pairs(
-                df, "id", "name", "brand", k=k, segment_filter=True
-            ).collect()
-        )
+        got = []
+        for cut in (float("inf"), -1.0):  # all-pairs, then segments
+            monkeypatch.setattr(D, "_SEGMENT_PAIRS_PER_NAME", cut)
+            got.append(sorted(
+                tuple(r)
+                for r in levenshtein_pairs(df, "id", "name", "brand", k=k).collect()
+            ))
+        a, b = got
         assert a == b and len(a) > 0, (k, len(a), len(b))
         # the planted families must be present
         assert any(d == 0 for *_, d in a)
         assert any(d == 1 for *_, d in a)
-    with pytest.raises(ValueError, match="segment_filter must be"):
-        levenshtein_pairs(df, "id", "name", "brand", segment_filter="yes")
 
 
-def test_levenshtein_auto_routing_by_occupancy(spark):
-    """segment_filter='auto' measures the all-pairs candidate space and
-    routes: small blocks keep the salted all-pairs plan, one fat block
+def test_levenshtein_auto_routing_by_occupancy(spark, monkeypatch):
+    """The engine measures the all-pairs candidate space and routes:
+    small blocks keep the salted all-pairs plan, one fat block
     flips to the segment-pigeonhole path (recognizable by its
     least/greatest pair canonicalization), results identical either
     way — the routing that keeps q_fuzzy_join off the occupancy² cliff
     its 25-value brand canopy hit at the 100x scale point."""
+    import mesin_spark.ext.dedup as D
     from mesin_spark.ext.dedup import levenshtein_pairs
 
+    monkeypatch.setattr(D, "_SEGMENT_PAIRS_PER_NAME", 4.0)
     fat = spark.createDataFrame(
         [(i, "one", f"alpha beta gamma doc{i}") for i in range(40)],
         "id long, brand string, name string",
     )
-    routed = levenshtein_pairs(
-        fat, "id", "name", "brand", k=2,
-        segment_filter="auto", auto_pairs_per_doc=4.0,
-    )
+    routed = levenshtein_pairs(fat, "id", "name", "brand", k=2)
     # the all-pairs route is recognizable by its salt column; the
     # segment route never salts (bucket keys carry the parallelism)
     plan = routed._jdf.queryExecution().optimizedPlan().toString()
     assert "_salt" not in plan, plan[:500]
     got = sorted(tuple(r) for r in routed.collect())
+    monkeypatch.setattr(D, "_SEGMENT_PAIRS_PER_NAME", float("inf"))
     want = sorted(
         tuple(r)
-        for r in levenshtein_pairs(
-            fat, "id", "name", "brand", k=2, segment_filter=False
-        ).collect()
+        for r in levenshtein_pairs(fat, "id", "name", "brand", k=2).collect()
     )
     assert got == want and len(got) > 0
+    monkeypatch.setattr(D, "_SEGMENT_PAIRS_PER_NAME", 4.0)
 
     thin = spark.createDataFrame(
         [(i, f"b{i % 20}", f"gamma delta doc{i}") for i in range(40)],
         "id long, brand string, name string",
     )
-    unrouted = levenshtein_pairs(
-        thin, "id", "name", "brand", k=2,
-        segment_filter="auto", auto_pairs_per_doc=4.0,
-    )
+    unrouted = levenshtein_pairs(thin, "id", "name", "brand", k=2)
     plan2 = unrouted._jdf.queryExecution().optimizedPlan().toString()
     assert "_salt" in plan2, plan2[:500]
 
@@ -1055,13 +1055,14 @@ def test_ppr_portable_seed_frame_matches_seed_mod(spark):
         ppr_portable(df, rounds=2, seeds=empty)
 
 
-def test_containment_duplicate_collapse_expansion(spark):
+def test_containment_duplicate_collapse_expansion(spark, monkeypatch):
     """The duplicate-collapse path must reproduce EXACT directed
     semantics on a verbatim-duplicate-heavy corpus: every ordered pair
     within a copy family surfaces at containment exactly 1.0, family×
     family cross pairs expand from one verified rep pair, and both
     candidate routes agree — the copies²→1 cut that candidate machinery
     never sees a duplicate."""
+    import mesin_spark.ext.dedup as D
     from mesin_spark.ext.dedup import ngram_containment_pairs
 
     rows = []
@@ -1074,10 +1075,11 @@ def test_containment_duplicate_collapse_expansion(spark):
     rows.append((200, "A", "one two three four five six seven"))
     df = spark.createDataFrame(rows, "doc_id long, src string, text string")
     for pf in (False, True):
+        _force_prefix(monkeypatch, pf)
         got = {
             (r["id_a"], r["id_b"]): r["containment"]
             for r in ngram_containment_pairs(
-                df, "doc_id", block_col="src", threshold=0.8, prefix_filter=pf
+                df, "doc_id", block_col="src", threshold=0.8
             ).collect()
         }
         # all 12 ordered within-family pairs at exactly 1.0
@@ -1088,45 +1090,41 @@ def test_containment_duplicate_collapse_expansion(spark):
         assert all((c, 100) in got and got[(c, 100)] == 1.0 for c in range(4))
         assert not any((100, c) in got for c in range(4))
         assert not any(200 in p for p in got)
-    a = sorted(
-        tuple(r) for r in ngram_containment_pairs(
-            df, "doc_id", block_col="src", threshold=0.8, prefix_filter=False
-        ).collect()
-    )
-    b = sorted(
-        tuple(r) for r in ngram_containment_pairs(
-            df, "doc_id", block_col="src", threshold=0.8, prefix_filter=True
-        ).collect()
-    )
-    assert a == b
-    # the collapse is a routing decision, never a semantics change:
-    # forcing it on or off must give the identical directed pair set
-    for forced in (True, False):
-        c = sorted(
+    def pairs():
+        return sorted(
             tuple(r) for r in ngram_containment_pairs(
-                df, "doc_id", block_col="src", threshold=0.8,
-                prefix_filter=False, collapse_dups=forced,
+                df, "doc_id", block_col="src", threshold=0.8
             ).collect()
         )
-        assert c == a, forced
-    with pytest.raises(ValueError, match="collapse_dups must be"):
-        ngram_containment_pairs(
-            df, "doc_id", block_col="src", collapse_dups="yes"
-        )
+
+    _force_prefix(monkeypatch, False)
+    a = pairs()
+    _force_prefix(monkeypatch, True)
+    assert pairs() == a
+    # the collapse is a routing decision, never a semantics change:
+    # forcing it on or off must give the identical directed pair set
+    _force_prefix(monkeypatch, False)
+    for forced, ratio in ((True, 0.0), (False, float("inf"))):
+        monkeypatch.setattr(D, "_DUP_COLLAPSE_RATIO", ratio)
+        assert pairs() == a, forced
 
 
-def test_gram_verify_join_routes_identical(spark):
-    """The verify-route knob (round-10 payload fix) is a PHYSICAL
+def test_gram_verify_join_routes_identical(spark, monkeypatch):
+    """The verify route (round-10 payload fix) is a PHYSICAL
     strategy choice only: broadcast (per-pair arrays never re-exchange)
     and shuffle (the 100 TB pinned path) must return identical pair
     sets with identical values on BOTH prefix forms, and the size
     pigeonholes inside the candidate joins must keep boundary pairs
     that 6-dp-round up to the threshold (the crafted corpus plants
     short-in-long containment pairs exactly at |A∩B|/|A| = 4/5)."""
+    import mesin_spark.ext.dedup as D
     from mesin_spark.ext.dedup import (
         ngram_containment_pairs,
         ngram_jaccard_pairs,
     )
+
+    _force_prefix(monkeypatch, True)
+    monkeypatch.setattr(D, "_DUP_COLLAPSE_RATIO", float("inf"))
 
     rows = []
     for i in range(24):
@@ -1138,23 +1136,13 @@ def test_gram_verify_join_routes_identical(spark):
                  base + " " + " ".join(f"pad{i}y{j}" for j in range(25)))
             )
     df = spark.createDataFrame(rows, "doc_id long, src string, text string")
-    for fn, kw in (
-        (ngram_containment_pairs, dict(threshold=0.8, collapse_dups=False)),
-        (ngram_jaccard_pairs, dict(threshold=0.5)),
-    ):
+    for fn, t in ((ngram_containment_pairs, 0.8), (ngram_jaccard_pairs, 0.5)):
         got = {}
-        for route in ("broadcast", "shuffle"):
+        for route, cut in (("broadcast", float("inf")), ("shuffle", -1.0)):
+            monkeypatch.setattr(D, "_GRAM_BROADCAST_MAX_BYTES", cut)
             got[route] = sorted(
                 tuple(r)
-                for r in fn(
-                    df, "doc_id", block_col="src", prefix_filter=True,
-                    verify_join=route, **kw
-                ).collect()
+                for r in fn(df, "doc_id", block_col="src", threshold=t).collect()
             )
         assert got["broadcast"] == got["shuffle"] and len(got["shuffle"]) > 0, (
             fn.__name__, len(got["broadcast"]), len(got["shuffle"]))
-    with pytest.raises(ValueError, match="verify_join must be"):
-        ngram_containment_pairs(
-            df, "doc_id", block_col="src", prefix_filter=True,
-            verify_join="bcast", collapse_dups=False,
-        ).collect()

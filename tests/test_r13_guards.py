@@ -201,20 +201,21 @@ def test_gram_verify_shuffle_routes_identical(spark, monkeypatch):
         return real(cands, *args)
 
     monkeypatch.setattr(D, "_gram_verify_join", spy)
+    # the prefix route without the duplicate collapse
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", -1.0)
+    monkeypatch.setattr(D, "_DUP_COLLAPSE_RATIO", float("inf"))
 
-    def run(verify_join):
-        out = D.ngram_containment_pairs(
-            df, "doc_id", block_col="src", prefix_filter=True,
-            threshold=0.8, collapse_dups=False, verify_join=verify_join,
-        )
+    def run(gram_cut):
+        monkeypatch.setattr(D, "_GRAM_BROADCAST_MAX_BYTES", gram_cut)
+        out = D.ngram_containment_pairs(df, "doc_id", block_col="src", threshold=0.8)
         plan = out._jdf.queryExecution().executedPlan().toString()
         return sorted(tuple(r) for r in out.collect()), plan
 
-    got = {"broadcast": run("broadcast")[0]}
+    got = {"broadcast": run(float("inf"))[0]}
     n = counts[0]
     for label, cut in (("shuffle_new", 96 * n), ("shuffle_fallback", 96 * n - 1)):
         monkeypatch.setattr(D, "_PAIR_BROADCAST_MAX_BYTES", cut)
-        got[label], plan = run("shuffle")
+        got[label], plan = run(-1.0)
         assert ("LeftSemi" in plan) == (label == "shuffle_new"), label
     assert got["broadcast"] == got["shuffle_new"] == got["shuffle_fallback"]
     assert len(got["broadcast"]) > 0

@@ -380,11 +380,12 @@ def test_salted_all_pairs_block_col_param(spark):
         salted_all_pairs(a, b, "id_a")
 
 
-def test_ngram_prefix_filter_exact_equivalence(spark):
+def test_ngram_prefix_filter_exact_equivalence(spark, monkeypatch):
     """PPJoin prefix filtering is candidate PRUNING, never recall loss:
-    both strategies must return the identical pair set with identical
-    jaccard values, on a corpus with planted near-dups across blocks."""
-    from mesin_spark.ext.dedup import ngram_jaccard_pairs
+    both routes (forced through the route cutoff) must return the
+    identical pair set with identical jaccard values, on a corpus with
+    planted near-dups across blocks."""
+    import mesin_spark.ext.dedup as D
 
     rows = []
     for i in range(40):
@@ -395,28 +396,29 @@ def test_ngram_prefix_filter_exact_equivalence(spark):
             rows.append((1000 + i, "A" if i % 2 else "B", base.replace("zeta", "zz")))
     df = spark.createDataFrame(rows, "doc_id long, src string, text string")
     for t in (0.3, 0.6):
-        a = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", block_col="src", threshold=t, prefix_filter=False
-            ).collect()
-        )
-        b = sorted(
-            tuple(r)
-            for r in ngram_jaccard_pairs(
-                df, "doc_id", block_col="src", threshold=t, prefix_filter=True
-            ).collect()
-        )
+        got = []
+        for cut in (float("inf"), -1.0):  # all-pairs, then prefix
+            monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", cut)
+            got.append(sorted(
+                tuple(r)
+                for r in D.ngram_jaccard_pairs(
+                    df, "doc_id", block_col="src", threshold=t
+                ).collect()
+            ))
+        a, b = got
         assert a == b and len(a) > 0, (t, len(a), len(b))
 
 
-def test_ngram_auto_routing_by_occupancy(spark):
-    """prefix_filter='auto' measures the all-pairs candidate space and
-    routes: a corpus of small blocks stays on the all-pairs path, one
-    whose single fat block exceeds auto_pairs_per_doc flips to the
-    prefix path — and either way the RESULT equals both explicit paths
-    (routing is a cost decision, never a semantics one)."""
-    from mesin_spark.ext.dedup import ngram_jaccard_pairs
+def test_ngram_auto_routing_by_occupancy(spark, monkeypatch):
+    """The engine measures the all-pairs candidate space and routes: a
+    corpus of small blocks stays on the all-pairs path, one whose single
+    fat block exceeds the prefix cutoff flips to the prefix path — and
+    either way the RESULT equals the forced route (routing is a cost
+    decision, never a semantics one)."""
+    import mesin_spark.ext.dedup as D
+
+    ngram_jaccard_pairs = D.ngram_jaccard_pairs
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", 4.0)
 
     rows = [
         (i, f"blk{i % 20}", f"alpha beta gamma delta epsilon doc{i % 3} w{i}")
@@ -424,36 +426,34 @@ def test_ngram_auto_routing_by_occupancy(spark):
     ]
     spread = spark.createDataFrame(rows, "doc_id long, src string, text string")
     # 20 blocks of 3 docs -> 3 candidate pairs per block = 1 per doc
-    routed = ngram_jaccard_pairs(
-        spread, "doc_id", block_col="src", threshold=0.3,
-        prefix_filter="auto", auto_pairs_per_doc=4.0,
-    )
+    routed = ngram_jaccard_pairs(spread, "doc_id", block_col="src", threshold=0.3)
     # the prefix path is recognizable by its row_number window
     assert "Window" not in routed._jdf.queryExecution().optimizedPlan().toString()
     got = sorted(tuple(r) for r in routed.collect())
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", float("inf"))
     want = sorted(
         tuple(r)
         for r in ngram_jaccard_pairs(
-            spread, "doc_id", block_col="src", threshold=0.3, prefix_filter=False
+            spread, "doc_id", block_col="src", threshold=0.3
         ).collect()
     )
     assert got == want and len(got) > 0
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", 4.0)
 
     fat = spark.createDataFrame(
         [(i, "one", f"alpha beta gamma delta epsilon doc{i % 3} w{i}") for i in range(40)],
         "doc_id long, src string, text string",
     )
-    # one 40-doc block -> 780 pairs = 19.5 per doc > threshold 4 -> prefix
-    routed = ngram_jaccard_pairs(
-        fat, "doc_id", block_col="src", threshold=0.3,
-        prefix_filter="auto", auto_pairs_per_doc=4.0,
-    )
+    # one 40-doc block -> 780 pairs = 19.5 per doc > cutoff 4 -> prefix,
+    # with no route argument from the caller
+    routed = ngram_jaccard_pairs(fat, "doc_id", block_col="src", threshold=0.3)
     assert "Window" in routed._jdf.queryExecution().optimizedPlan().toString()
     got = sorted(tuple(r) for r in routed.collect())
+    monkeypatch.setattr(D, "_PREFIX_PAIRS_PER_DOC", float("inf"))
     want = sorted(
         tuple(r)
         for r in ngram_jaccard_pairs(
-            fat, "doc_id", block_col="src", threshold=0.3, prefix_filter=True
+            fat, "doc_id", block_col="src", threshold=0.3
         ).collect()
     )
     assert got == want and len(got) > 0

@@ -754,7 +754,9 @@ def test_measured_conjunction_corrects_correlation(spark):
 def test_analyze_table_statement(spark, tmp_path):
     """ANALYZE TABLE through the SQL surface: builds + persists the
     artifact at the table root, records the catalog pointer, and the
-    estimator loads straight from it — also after an UPDATE."""
+    estimator loads straight from it — also after an UPDATE. An external
+    table's artifact lands in the session warehouse, never in the user's
+    file or directory."""
     from mesin_spark.context import ExecutionContext
     from mesin_spark.ext.stats import estimate_selectivity, load_stats
 
@@ -780,6 +782,36 @@ def test_analyze_table_statement(spark, tmp_path):
     # default column selection: all numeric (k and v)
     out2 = ctx.execute("ANALYZE TABLE an_t COMPUTE STATISTICS")
     assert {r["col"] for r in out2.collect()} == {"k", "v"}
+
+    # an external table (a registered parquet file or directory) is never
+    # written: its artifact goes to the session warehouse
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    user = tmp_path / "user"
+    (user / "ext_d").mkdir(parents=True)
+    data = pa.table({"k": list(range(100)), "v": [float(i % 10) for i in range(100)]})
+    pq.write_table(data, user / "ext_f.parquet")
+    pq.write_table(data, user / "ext_d" / "part-00000.parquet")
+
+    def listing():
+        return sorted(
+            (os.path.relpath(os.path.join(d, f), user), os.path.getsize(os.path.join(d, f)))
+            for d, _, fs in os.walk(user) for f in fs
+        )
+
+    before = listing()
+    ctx.register_parquet("ext_f", str(user / "ext_f.parquet"))
+    ctx.register_parquet("ext_d", str(user / "ext_d"))
+    for t in ("ext_f", "ext_d"):
+        out = ctx.execute(f"ANALYZE TABLE {t} COMPUTE STATISTICS FOR COLUMNS v")
+        assert [(r["col"], r["n"]) for r in out.collect()] == [("v", 100)]
+        path = ctx.ddl.catalog.tables[t].properties["stats_path"]
+        assert not os.path.realpath(path).startswith(os.path.realpath(user)), path
+        assert load_stats(spark, path).summary["v"]["n"] == 100
+    assert listing() == before
 
 
 def test_kmv_union_accuracy(spark):

@@ -62,7 +62,6 @@ def main() -> int:
     gb = base.select("blk", F.col("_id").alias("id_b"), F.col("_g").alias("g_b"))
     full = D.ngram_containment_pairs(
         d, "doc_id", block_col="source", n=2, threshold=0.8,
-        prefix_filter="auto",
     )
 
     def noop(df):
