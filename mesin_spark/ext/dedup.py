@@ -717,8 +717,8 @@ def simhash_dedup(
 
 
 # shared measured-routing helpers (ext/measure): the same dtype-aware
-# byte measure + width sizing the graph tier's edge prepartition uses
-from mesin_spark.ext.measure import block_occupancy, partition_width, row_bytes_expr
+# byte measure and edge route the graph tier uses
+from mesin_spark.ext.measure import block_occupancy, edge_route, row_bytes_expr
 
 _row_bytes_expr = row_bytes_expr  # local alias, same discipline
 
@@ -728,10 +728,6 @@ def dedup_clusters(
     id_a: str = "id_a",
     id_b: str = "id_b",
     max_iter: int = 20,
-    prepartition: bool | str = "auto",
-    prepartition_min_bytes: float = 192 * 2**20,
-    target_partition_bytes: float = 64 * 2**20,
-    broadcast_max_nodes: int = 8_000_000,
 ) -> DataFrame:
     """Connected components over near-dup pairs → (node, canonical_id):
     every document in a duplicate cluster maps to the cluster's minimum id
@@ -752,104 +748,48 @@ def dedup_clusters(
     identical data); with it every round replans the same tiny plan shape
     against leaf RDDs, hitting the generated-code cache.
 
-    ``prepartition`` decides whether the STATIC edge table is exchanged
-    once or every round. A checkpoint leaf surfaces UnknownPartitioning
-    (the AQE caveat at ext/graph.py pagerank), so by default every
-    round's edges⋈labels join re-exchanges the full edge table — fine
-    while edges are small (AQE coalesces the tiny per-round stages;
-    a fixed-width repartition is EXEMPT from coalescing and measured
-    2x slower at bench scale), but at the 100x probe the per-round
-    edge exchange was the repo's heaviest remaining shuffle consumer
-    (5.2 GiB physical across ~8 rounds of a ~650 MiB edge frame).
-    Routing is MEASURED, same discipline as _gram_verify_join:
+    The STATIC edge table takes the graph tier's one measured route
+    (ext/measure.edge_route, on the checkpointed directed pairs, bytes x2
+    for symmetrization). A checkpoint leaf surfaces UnknownPartitioning
+    (the AQE caveat at ext/graph.py pagerank), so below
+    EDGE_PIN_MIN_BYTES every round's edges⋈labels join re-exchanges the
+    edge table — fine while edges are small (AQE coalesces the tiny
+    per-round stages); at the 100x probe that per-round exchange was the
+    repo's heaviest shuffle consumer (5.2 GiB physical across ~8 rounds
+    of a ~650 MiB edge frame). Past the cutoff the symmetrized edges
+    exchange by the round's key ONCE, the distinct riding that exchange,
+    and pin:
 
-    - ``"auto"`` (default): the directed pair projection checkpoints
-      first (one materialization of the possibly-expensive upstream),
-      then one bounded aggregate on that leaf computes actual edge
-      bytes (dtype-aware per-row widths, x2 for symmetrization); at or
-      past ``prepartition_min_bytes`` the symmetrized edges exchange by
-      the round join key ONCE — the distinct's own exchange IS the
-      prepartition (repartition-then-dedup: hash partitioning on one
-      key satisfies the two-key dedup's clustering, so no second
-      exchange), width sized to the data (bytes /
-      ``target_partition_bytes``, floored at the default parallelism) —
-      and pin (PinnedCache). Below the cutoff the AQE-coalesced round
-      is kept.
-    - ``True`` / ``False`` force either route; both return identical
-      rows (route-equality pytested) — the knob moves exchanges, not
-      semantics.
+    - |V| ≤ BROADCAST_MAX_NODES: edges partition by ``src`` and every
+      round BROADCASTS the |V|-row label map into the edge scan — the
+      join needs no exchange on either side, and the per-src minimum
+      aggregates IN PLACE, so the round's only shuffles are the |V|-row
+      hop/jump/convergence frames (this kills the per-round
+      partial-aggregate exchange of edge-order bytes, measured ~266
+      MiB/round at the 100x probe).
+    - past the ceiling (the label map must never broadcast): edges
+      partition by ``dst``, rounds exchange the label side + the per-src
+      aggregate — the two keyed exchanges that ARE Pregel at web scale.
 
-    The prepartitioned tier itself routes on the MEASURED node count
-    (one map-side approx_count_distinct on the pair leaf), mirroring
-    pagerank's broadcast-rank auto-route (ext/graph.py):
-
-    - |V| ≤ ``broadcast_max_nodes`` (default 8M ≈ 128 MB of (node, lbl)
-      pairs — Spark's practical broadcast ceiling): edges partition by
-      ``src`` and every round BROADCASTS the |V|-row label map into the
-      edge scan — the join needs no exchange on either side, and the
-      per-src minimum aggregates IN PLACE (the cached src partitioning
-      satisfies the groupBy), so the round's only shuffles are the
-      |V|-row hop/jump/convergence frames. This kills the per-round
-      partial-aggregate exchange that survived dst-partitioning (the
-      combine output is per-partition-distinct src — edge-order bytes,
-      measured ~266 MiB/round at the 100x probe).
-    - |V| past the ceiling (label map must never broadcast): edges
-      partition by ``dst``, rounds exchange the label side + the
-      per-src aggregate — the two keyed exchanges that ARE Pregel at
-      web scale."""
-    if prepartition not in (True, False, "auto"):
-        raise ValueError(
-            f"prepartition must be True, False, or 'auto' — got {prepartition!r}"
-        )
-    directed = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-    broadcast_labels = False
-    if prepartition is False:
-        edges = (
-            directed.union(
-                directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            .distinct()
-            .transform(ckpt, eager=True)
-        )
-    else:
-        # checkpoint the DIRECTED pairs (half the symmetrized bytes) so
-        # the measuring aggregates and both union branches read a leaf
-        directed = directed.transform(ckpt, eager=True)
-        st = directed.agg(
-            F.sum(_row_bytes_expr(directed, ["src", "dst"])).alias("_b"),
-            F.approx_count_distinct("src").alias("_ns"),
-            F.approx_count_distinct("dst").alias("_nd"),
-        ).collect()[0]
-        est_bytes = 2.0 * float(st["_b"] or 0)
-        # undirected node count: bounded by |distinct src| + |distinct
-        # dst| (exact enough for a broadcast-ceiling route)
-        est_nodes = int(st["_ns"] or 0) + int(st["_nd"] or 0)
-        if prepartition == "auto":
-            prepartition = est_bytes >= prepartition_min_bytes
-        sym = directed.union(
-            directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-        )
-        if prepartition:
-            broadcast_labels = est_nodes <= broadcast_max_nodes
-            key = "src" if broadcast_labels else "dst"
-            width = partition_width(directed, est_bytes, target_partition_bytes)
-            # repartition-then-dedup: HashPartitioning(key) satisfies the
-            # (src, dst) dedup's clustering, so the prepartition exchange
-            # replaces (not adds to) the distinct's exchange; the sort
-            # lets each round's merge join skip the edge-side sort too
-            edges = PINNED.pin(
-                sym.repartition(width, F.col(key))
-                .dropDuplicates()
-                .sortWithinPartitions(key)
-            )
-        else:
-            edges = sym.distinct().transform(ckpt, eager=True)
+    Every route returns identical rows (route-equality pytested)."""
+    directed = (
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .transform(ckpt, eager=True)
+    )
+    route = edge_route(directed, copies=2)
+    sym = directed.union(
+        directed.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    )
+    broadcast_labels = bool(route.width) and route.broadcast
     # node frame: symmetrized edges hold every node in BOTH columns — read
-    # the one the cache is partitioned by, so the distinct is exchange-free
-    # on the prepartitioned routes
-    node_src = "dst" if (prepartition and not broadcast_labels) else "src"
+    # the one the pin is partitioned by, so its distinct is exchange-free
+    key = "dst" if route.width and not route.broadcast else "src"
+    if route.width:
+        edges = route.pin(sym, key)
+    else:
+        edges = sym.distinct().transform(ckpt, eager=True)
     labels = (
-        edges.select(F.col(node_src).alias("node"))
+        edges.select(F.col(key).alias("node"))
         .distinct()
         .withColumn("lbl", F.col("node"))
         .transform(ckpt, eager=True)

@@ -16,48 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from mesin_spark.ext import measure
 from mesin_spark.ext.ckpt import ckpt
 
 
-def _measured_edge_pin(
-    e: DataFrame,
-    key: str,
-    prepartition: bool | str = "auto",
-    prepartition_min_bytes: float = 192 * 2**20,
-    target_partition_bytes: float = 64 * 2**20,
-) -> DataFrame:
-    """Measured prepartition for a STATIC edge frame consumed by every
-    round of an iterative loop (the dedup_clusters round-11 discipline,
-    shared by the graph tier): checkpoint leaves surface
-    UnknownPartitioning, so each round's aggregate otherwise re-emits
-    per-partition-distinct keys through a partial-combine exchange —
-    edge-order bytes PER ROUND at the 100x probe (hits 3.2 GiB, ppr
-    1.3 GiB, pagerank 0.7 GiB). Past the measured cutoff the frame
-    exchanges ONCE by the loop's grouping (broadcast-score path) or
-    join (keyed-shuffle path) key and pins (PinnedCache); rounds then
-    aggregate/join in place. Below it the AQE-coalesced rounds are kept
-    (a fixed-width repartition is exempt from coalescing — measured 2x
-    slower on bench-scale data). Integer-arithmetic loops are
-    value-identical across routes; float loops may move final ulps
-    (summation grouping), the caveat their rows-only certification
-    already carries — and the auto cutoff never flips at oracle-sweep
-    scales."""
-    if prepartition not in (True, False, "auto"):
-        raise ValueError(
-            f"prepartition must be True, False, or 'auto' — got {prepartition!r}"
-        )
-    if prepartition is False:
-        return e
-    from mesin_spark.ext.measure import partition_width, row_bytes_expr
-
-    st = e.agg(F.sum(row_bytes_expr(e, list(e.columns))).alias("_b")).collect()[0]
-    est_bytes = float(st["_b"] or 0)
-    if prepartition == "auto" and est_bytes < prepartition_min_bytes:
-        return e
-    from mesin_spark.ext.pin import PINNED
-
-    width = partition_width(e, est_bytes, target_partition_bytes)
-    return PINNED.pin(e.repartition(width, F.col(key)))
+def _edge_frame(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """The (src, dst) projection every ranking loop starts from: an edge
+    with a NULL endpoint names no node and is dropped (a NULL node would
+    otherwise rank, or collide with pagerank's NULL-keyed sentinel)."""
+    return edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
 
 
 def pagerank_setup(
@@ -194,7 +161,6 @@ def pagerank(
     checkpoint_every: int = 2,
     tol: float | None = None,
     broadcast_ranks: bool | None = None,
-    broadcast_max_nodes: int = 8_000_000,
     final_checkpoint: bool = True,
 ) -> DataFrame:
     """PageRank over a directed edge list (duplicate edges collapse; an
@@ -239,11 +205,11 @@ def pagerank(
     min at sf0.1). On a cluster-sized edge list the trade inverts.
 
     ``broadcast_ranks`` (None = auto by node count): the state is one row
-    per VERTEX, so when |V| ≤ broadcast_max_nodes it broadcasts into the
-    edge scan like a small dimension into a fact join (see
-    pagerank_round). The 8M default is ~128 MB of (int64 node, double
-    rank) pairs — where Spark's own broadcast guidance tops out; a
-    larger graph falls back to the keyed exchanges that ARE Pregel.
+    per VERTEX, so when |V| ≤ measure.BROADCAST_MAX_NODES it broadcasts
+    into the edge scan like a small dimension into a fact join (see
+    pagerank_round); a larger graph falls back to the keyed exchanges
+    that ARE Pregel. A caller that knows its graph is small passes True
+    and skips the measuring pre-pass (q_pagerank does).
 
     Setup has two shapes keyed off the same knob, resolved BEFORE setup
     (one map-side approx_count_distinct pre-pass over the raw edges when
@@ -258,7 +224,7 @@ def pagerank(
 
     if max_iter < 1:
         raise ValueError("pagerank: max_iter must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).dropna()
+    e = _edge_frame(edges, src, dst)
     if broadcast_ranks is None:
         # Resolve the auto route BEFORE the setup branch: the two setup
         # shapes differ too (window outdeg buffers a hub's whole edge
@@ -273,7 +239,7 @@ def pagerank(
                 F.approx_count_distinct(src) + F.approx_count_distinct(dst)
             ).alias("n")
         ).head()["n"]
-        broadcast_ranks = est_nodes <= broadcast_max_nodes
+        broadcast_ranks = est_nodes <= measure.BROADCAST_MAX_NODES
     if broadcast_ranks is False:
         e = e.distinct().transform(ckpt, eager=True)
         outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
@@ -300,7 +266,7 @@ def pagerank(
             .transform(ckpt, eager=True)
         )
         salts = 1
-    # edge prepartition MEASURED AND REJECTED here (round 11): unlike
+    # edge pin MEASURED AND REJECTED here (round 11): unlike
     # hits (whose 12 half-round combines emitted edge-order bytes —
     # 3.2 GiB at 100x), pagerank's per-round combine output is |V|-small
     # (~40 MiB/round at 100x), so pinning e_norm by the group key ADDED
@@ -618,13 +584,6 @@ def random_walks(
 
 PR_SCALE = 10**12  # fixed-point unit for the portable pagerank
 
-# The portable pagerank/ppr loops broadcast the full |V|-row rank vector
-# every round (integer sums are order-independent, so the join strategy
-# cannot perturb the fixed-point values). Same ceiling as pagerank()'s
-# broadcast_max_nodes: ~128 MB of (int64, int64) pairs — past it, fail
-# with a clear remedy instead of an opaque broadcast OOM.
-PR_BROADCAST_MAX = 8_000_000
-
 
 def pagerank_portable(
     edges: DataFrame,
@@ -641,341 +600,17 @@ def pagerank_portable(
     Truncation leaks mass (~1e-12/node/round — far below any ranking
     decision); damping 0.85 becomes *85 div 100.
 
-    Same plan strategy as pagerank()'s small-vertex-set route: the
-    ≤|V|-row rank vector broadcasts into the static edge scan (integer
-    sums are order-independent, so the join strategy cannot perturb the
-    fixed-point values), leaving one partial-combined groupBy(dst)
-    exchange per round, dangling mass as a broadcast 1-row aggregate,
-    eager checkpoints. A graph whose rank vector outgrows broadcast
-    range belongs on pagerank()'s shuffle path — this portable tier's
-    job is cross-engine proof at certification scale.
+    The round is ppr_portable's with every node a seed (s = n), where
+    each term reduces to the uniform teleport and dangling share:
+    rank'(v) = (15·SCALE)//(100·n) + (85·(c(v) + dg//n))//100. Same plan
+    strategy as pagerank()'s small-vertex-set route (see _portable_rank);
+    a graph whose rank vector outgrows broadcast range belongs on
+    pagerank()'s shuffle path — this portable tier's job is cross-engine
+    proof at certification scale.
     Returns (node, rank_fp) with rank_fp ≈ rank * 1e12."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.transform(ckpt, eager=True)
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .join(outdeg.select(F.col("src").alias("node"), "od"), "node", "left")
-        .transform(ckpt, eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank_portable: empty edge list")
-    if n > PR_BROADCAST_MAX:
-        raise ValueError(
-            f"pagerank_portable: {n} nodes — the rank vector exceeds "
-            f"broadcast range (PR_BROADCAST_MAX={PR_BROADCAST_MAX}); use "
-            "pagerank()'s shuffle path (broadcast_ranks=False) for graphs "
-            "this size"
-        )
-    base = (15 * PR_SCALE) // (100 * n)
-    # no edge pin: measured and rejected for the pagerank loop shape
-    # (|V|-small per-round combine output — see pagerank()'s note)
-    r = nodes.withColumn("rank", F.lit(PR_SCALE // n))
-    for it in range(rounds):
-        rr = r.filter(F.col("od").isNotNull())
-        contrib = (
-            e.join(F.broadcast(rr), rr["node"] == e["src"])
-            .groupBy("dst")
-            .agg(F.sum(F.expr("rank div od")).alias("c"))
-        )
-        dang = r.filter(F.col("od").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).alias("_dg")
-        )
-        r = (
-            nodes.join(contrib, nodes["node"] == contrib["dst"], "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "node",
-                "od",
-                (
-                    F.lit(base)
-                    + F.expr(f"(85 * (coalesce(c, 0) + (_dg div {n}))) div 100")
-                ).alias("rank"),
-            )
-        )
-        if (it + 1) % 2 == 0 or it == rounds - 1:
-            r = r.transform(ckpt, eager=True)
-    return r.select("node", F.col("rank").alias("rank_fp"))
-
-
-HITS_SCALE = 10**6  # fixed-point unit for portable HITS (see overflow note)
-
-
-def hits_portable(
-    edges: DataFrame,
-    rounds: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
-    """HITS (Kleinberg hubs & authorities) in integer fixed-point
-    arithmetic — the portable-proof strategy applied to the second
-    classic iterative ranking: authority(v) = Σ_{u→v} hub(u), hub(u) =
-    Σ_{u→v} authority(v), each vector L1-normalized to HITS_SCALE per
-    half-round via truncating integer division, so the full hub AND
-    authority vectors are bit-reproducible cross-engine. On a bipartite
-    graph (the customer→supplier purchase edges) HITS is the natural
-    ranking: hubs = buyers, authorities = suppliers.
-
-    Overflow bound: after normalization Σ scores = ~HITS_SCALE (1e6),
-    so a raw half-round sum ≤ HITS_SCALE·max_degree and the
-    normalization multiply raw·HITS_SCALE needs
-    max_degree < 2^63 / HITS_SCALE² ≈ 9.2e6 — runtime-guarded by
-    folding the check INTO the consumed norm column (a CASE that
-    raise_error()s on overflow); a detached assert_true column would be
-    removed by ColumnPruning and never evaluate (a graph with hotter
-    hubs than that needs a wider unit split, the mul_mod32 lesson).
-
-    Per round: the score vector (≤ n ≤ HITS_SCALE = 1e6 rows by the
-    guard below, so ALWAYS broadcast-sized — no auto knob needed,
-    unlike pagerank's unbounded |V|) broadcasts into the static edge
-    scan, leaving one partial-combined aggregate exchange per
-    half-round plus two broadcast 1-row norms; integer sums are
-    order-independent, so the join strategy cannot perturb the
-    fixed-point values. Each HALF-round is eagerly checkpointed, and that cadence
-    is structural, not tunable: the norm reads the raw half-round twice
-    (the normalization crossJoin references the raw frame once for
-    values and once for the norm), so an un-truncated chain doubles the
-    logical plan per half-round. Measured two-scale slope 1.48 at 3×
-    data. Returns (node, hub_fp, auth_fp) with absent sides as 0."""
-    if rounds < 1:
-        # rounds=0 would leave the authority frame unbuilt and crash at
-        # the final join with an opaque TypeError — refuse up front.
-        raise ValueError("hits_portable: rounds must be >= 1")
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.transform(ckpt, eager=True)
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .union(e.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(ckpt, eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("hits_portable: empty edge list")
-    if n > HITS_SCALE:
-        # HITS_SCALE // n would floor every initial hub score to 0 and
-        # poison round 1 (NULL authorities behind a misleading overflow
-        # assert). The 1e6-unit scale caps the node count the same way
-        # it caps max degree — fail loudly with the actual remedy.
-        raise ValueError(
-            f"hits_portable: {n} nodes exceeds HITS_SCALE={HITS_SCALE} — "
-            "initial scores would floor to 0; use hits() (engine-native "
-            "doubles, any |V|) for graphs this size, or raise HITS_SCALE "
-            "and re-derive the max-degree overflow bound in the docstring"
-        )
-    lim = (2**63 - 1) // HITS_SCALE
-    # scores always broadcast here (the HITS_SCALE guard caps |V|), so
-    # pin one edge copy per GROUP key — both half-round aggregates then
-    # run exchange-free (measured routing; integer sums route-identical)
-    e_auth = _measured_edge_pin(e, "dst")
-    e_hub = _measured_edge_pin(e, "src")
-    h = nodes.withColumn("h", F.lit(HITS_SCALE // n))
-    a = None
-    for it in range(rounds):
-        a_raw = (
-            e_auth.join(F.broadcast(h), e_auth["src"] == h["node"])
-            .groupBy("dst")
-            .agg(F.sum("h").alias("raw"))
-        )
-        # The overflow guard is folded INTO the consumed `nm` column: a
-        # standalone assert_true("_chk") column is never referenced
-        # downstream, so ColumnPruning deletes it and the guard never
-        # runs (verified empirically on Spark 4.1.2).
-        na = a_raw.agg(
-            F.when(F.sum("raw") <= F.lit(lim), F.sum("raw"))
-            .otherwise(
-                F.raise_error(F.lit("hits_portable: authority norm overflow"))
-            )
-            .alias("nm"),
-        )
-        a = (
-            a_raw.crossJoin(F.broadcast(na))
-            .select(
-                F.col("dst").alias("node"),
-                F.expr(f"(raw * {HITS_SCALE}) div nm").alias("a"),
-            )
-            .transform(ckpt, eager=True)
-        )
-        h_raw = (
-            e_hub.join(F.broadcast(a), e_hub["dst"] == a["node"])
-            .groupBy("src")
-            .agg(F.sum("a").alias("raw"))
-        )
-        nh = h_raw.agg(
-            F.when(F.sum("raw") <= F.lit(lim), F.sum("raw"))
-            .otherwise(F.raise_error(F.lit("hits_portable: hub norm overflow")))
-            .alias("nm"),
-        )
-        h = (
-            h_raw.crossJoin(F.broadcast(nh))
-            .select(
-                F.col("src").alias("node"),
-                F.expr(f"(raw * {HITS_SCALE}) div nm").alias("h"),
-            )
-            .transform(ckpt, eager=True)
-        )
-    return (
-        nodes.join(h, "node", "left")
-        .join(a, "node", "left")
-        .select(
-            "node",
-            F.coalesce("h", F.lit(0)).alias("hub_fp"),
-            F.coalesce("a", F.lit(0)).alias("auth_fp"),
-        )
-    )
-
-
-def hits(
-    edges: DataFrame,
-    rounds: int = 6,
-    src: str = "src",
-    dst: str = "dst",
-    broadcast_scores: bool | None = None,
-    broadcast_max_nodes: int = 8_000_000,
-    prepartition: bool | str = "auto",
-    prepartition_min_bytes: float = 192 * 2**20,
-    target_partition_bytes: float = 64 * 2**20,
-) -> DataFrame:
-    """HITS in engine-native doubles — the UNBOUNDED-graph sibling of
-    hits_portable, exactly as pagerank() pairs with pagerank_portable:
-    the portable form is the cross-engine arithmetic proof but its
-    1e6-unit fixed-point scale caps both node count and max degree
-    (found live: the 100x scale sweep's 1.5M-node purchase graph trips
-    its envelope guard), while this form runs any |V|. Float summation
-    order is engine- and partitioning-specific, so results certify
-    rows-only + structural pytests (agreement with hits_portable within
-    fixed-point quantization on in-envelope graphs, L1 norms, bipartite
-    star dominance) — the same division of labor as q_pagerank vs
-    q_pagerank_portable.
-
-    Per half-round: authority(v) = Σ_{u→v} hub(u), then L1-normalize
-    (scores sum to 1 — no overflow bound needed in doubles); hubs
-    mirror it. ``broadcast_scores`` None auto-routes like pagerank():
-    ≤ broadcast_max_nodes broadcasts the score vector into the static
-    edge scan (one partial-combined ≤|V|-row exchange + one 1-row norm
-    broadcast per half-round), larger graphs fall back to keyed-shuffle
-    Pregel half-rounds. Each half-round materializes eagerly — the norm
-    reads the raw half-round twice (values + norm), so an un-truncated
-    chain doubles the logical plan per half-round (structural, not
-    tunable). Returns
-    (node, hub, auth) with absent sides as 0.0.
-
-    ``prepartition`` (measured, default auto at ≥192 MiB edge bytes —
-    the dedup_clusters discipline): the STATIC edge list otherwise
-    re-exchanges every half-round THROUGH THE AGGREGATE — the checkpoint
-    leaf surfaces UnknownPartitioning, so the half-round's partial
-    combine emits per-partition-distinct keys (edge-order bytes, ~270
-    MiB × 12 half-rounds = 3.2 GiB physical at the 100x probe, the
-    heaviest graph-tier entry). HITS alternates its grouping key, so the
-    route pins TWO copies of the edge frame: one partitioned by dst
-    (authority halves) and one by src (hub halves) — on the
-    broadcast-scores path each half's groupBy aggregates IN PLACE (zero
-    exchange); on the keyed-shuffle path the copies co-partition the
-    JOIN side instead (the aggregate exchange is then the Pregel
-    minimum). One extra cached copy is the price. Routes may differ in
-    final float ulps (summation grouping changes with partitioning —
-    the exact engine-partitioning caveat this operator's rows-only
-    certification already carries; the integer hits_portable is the
-    bit-exact tier)."""
-    if rounds < 1:
-        raise ValueError("hits: rounds must be >= 1")
-    if prepartition not in (True, False, "auto"):
-        raise ValueError(
-            f"prepartition must be True, False, or 'auto' — got {prepartition!r}"
-        )
-    raw = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    if prepartition is False:
-        e_auth = e_hub = base = raw.distinct().transform(ckpt, eager=True)
-    else:
-        # checkpoint the RAW projection (block store, no shuffle) so the
-        # measuring aggregate and both routes read a leaf
-        raw = raw.transform(ckpt, eager=True)
-        from mesin_spark.ext.measure import partition_width, row_bytes_expr
-
-        # ONE bounded aggregate measures bytes AND estimates |V| (the
-        # pagerank pre-pass: |distinct src| + |distinct dst| is an upper
-        # bound — conservative in the safe, never-broadcast-too-big
-        # direction), so the score route resolves BEFORE the pin keys
-        # are chosen
-        st = raw.agg(
-            F.sum(row_bytes_expr(raw, ["src", "dst"])).alias("_b"),
-            (
-                F.approx_count_distinct("src") + F.approx_count_distinct("dst")
-            ).alias("_n"),
-        ).collect()[0]
-        est_bytes = float(st["_b"] or 0)
-        if broadcast_scores is None:
-            broadcast_scores = int(st["_n"] or 0) <= broadcast_max_nodes
-        if prepartition == "auto":
-            prepartition = est_bytes >= prepartition_min_bytes
-        if prepartition:
-            from mesin_spark.ext.pin import PINNED
-
-            width = partition_width(raw, est_bytes, target_partition_bytes)
-            # fused distinct-into-prepartition (the dedup_clusters
-            # shape): one-key hash partitioning satisfies the two-key
-            # dedup's clustering, so the FIRST pin's exchange is also
-            # the dedup pass — 3 edge-sized exchanges become 2. The
-            # second copy re-keys the already-deduped cache. Keys:
-            # broadcast path partitions by the GROUP key (aggregate in
-            # place); shuffle path by the JOIN key (co-partition the
-            # score join; the aggregate exchange is then irreducible).
-            k_auth = "dst" if broadcast_scores else "src"
-            k_hub = "src" if broadcast_scores else "dst"
-            e_auth = PINNED.pin(
-                raw.repartition(width, F.col(k_auth)).dropDuplicates()
-            )
-            e_hub = PINNED.pin(e_auth.repartition(width, F.col(k_hub)))
-            base = e_auth
-        else:
-            e_auth = e_hub = base = raw.distinct().transform(ckpt, eager=True)
-    nodes = (
-        base.select(F.col("src").alias("node"))
-        .union(base.select(F.col("dst").alias("node")))
-        .distinct()
-        .transform(ckpt, eager=True)
-    )
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("hits: empty edge list")
-    if broadcast_scores is None:
-        broadcast_scores = n <= broadcast_max_nodes
-
-    def _bc(frame):
-        return F.broadcast(frame) if broadcast_scores else frame
-
-    def _half(edge_frame, score_frame, score_col, join_key, out_key, out_col):
-        raw = (
-            edge_frame.join(_bc(score_frame), edge_frame[join_key] == score_frame["node"])
-            .groupBy(out_key)
-            .agg(F.sum(score_col).alias("raw"))
-        )
-        nm = raw.agg(F.sum("raw").alias("nm"))
-        return (
-            raw.crossJoin(F.broadcast(nm))
-            .select(
-                F.col(out_key).alias("node"),
-                (F.col("raw") / F.col("nm")).alias(out_col),
-            )
-            .transform(ckpt, eager=True)
-        )
-
-    h = nodes.withColumn("h", F.lit(1.0 / n))
-    a = None
-    for _ in range(rounds):
-        a = _half(e_auth, h, "h", "src", "dst", "a")
-        h = _half(e_hub, a, "a", "dst", "src", "h")
-    return (
-        nodes.join(h, "node", "left")
-        .join(a, "node", "left")
-        .select(
-            "node",
-            F.coalesce("h", F.lit(0.0)).alias("hub"),
-            F.coalesce("a", F.lit(0.0)).alias("auth"),
-        )
+    return _portable_rank(
+        edges, rounds, src, dst, "pagerank_portable",
+        lambda e, nodes: nodes.withColumn("is_seed", F.lit(True)),
     )
 
 
@@ -1007,14 +642,64 @@ def ppr_portable(
     rank'(v) = [v∈S]·(15·SCALE)//(100·s)
     + (85·(c(v) + [v∈S]·(dg//s)))//100 with c(v) = Σ_in rank//od, all
     truncating integer ops on non-negatives, so the full per-node rank
-    vector is bit-reproducible cross-engine. Plan shape identical to
-    pagerank_portable: broadcast rank vector into the edge scan, one
-    partial-combined groupBy(dst) exchange per round, dangling mass as
-    a broadcast 1-row aggregate, eager
-    checkpoints every 2 rounds — node-keyed shuffles, partitions
-    cleanly at 100 TB. Returns (node, rank_fp)."""
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
-    e = e.transform(ckpt, eager=True)
+    vector is bit-reproducible cross-engine (see _portable_rank for the
+    plan). Returns (node, rank_fp)."""
+
+    def seed_flag(e: DataFrame, nodes: DataFrame) -> DataFrame:
+        sd = seeds
+        if seed_top_degree is not None and sd is None:
+            sd = (
+                e.select(F.col("src").alias("node"))
+                .unionAll(e.select(F.col("dst").alias("node")))
+                .groupBy("node")
+                .agg(F.count(F.lit(1)).alias("_deg"))
+                .orderBy(F.desc("_deg"), F.asc("node"))
+                .limit(seed_top_degree)
+                .select("node")
+            )
+        if sd is None:
+            return nodes.withColumn("is_seed", F.col("node") % seed_mod == 0)
+        # a seed LIST (top-k hubs etc.) is k rows — broadcast the flag
+        sd = sd.select(F.col(sd.columns[0]).alias("node")).distinct()
+        return nodes.join(
+            F.broadcast(sd.withColumn("_s", F.lit(True))), "node", "left"
+        ).select("node", "od", F.coalesce(F.col("_s"), F.lit(False)).alias("is_seed"))
+
+    picked = seeds is not None or seed_top_degree is not None
+    return _portable_rank(
+        edges, rounds, src, dst, "ppr_portable", seed_flag,
+        "(seed frame matched nothing)" if picked else f"(node % {seed_mod} == 0)",
+    )
+
+
+def _portable_rank(
+    edges: DataFrame,
+    rounds: int,
+    src: str,
+    dst: str,
+    name: str,
+    seed_flag,
+    seed_desc: str = "",
+) -> DataFrame:
+    """The fixed-point power iteration of ppr_portable, and with every
+    node a seed of pagerank_portable. ``seed_flag(e, nodes)`` adds the
+    boolean ``is_seed`` to the (node, od) frame over the distinct
+    checkpointed edges ``e``; ``seed_desc`` names the seed predicate in
+    the no-seed error.
+
+    Plan: the ≤|V|-row rank vector broadcasts into the static edge scan
+    (integer sums are order-independent, so the join strategy cannot
+    perturb the fixed-point values), leaving one partial-combined
+    groupBy(dst) exchange per round, dangling mass as a broadcast 1-row
+    aggregate, eager checkpoints every 2 rounds — node-keyed shuffles,
+    partitions cleanly at 100 TB. Past BROADCAST_MAX_NODES nodes it
+    fails with a clear remedy instead of an opaque broadcast OOM.
+
+    No edge pin: measured and REJECTED (round 11) for this loop shape,
+    whose per-round combine output is |V|-small — the dst pin moved
+    ppr's 100x probe 1,331 → 1,681 MiB, an edge-sized exchange the
+    rounds never repay (hits is the shape where it pays)."""
+    e = _edge_frame(edges, src, dst).distinct().transform(ckpt, eager=True)
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
     nodes = (
         e.select(F.col("src").alias("node"))
@@ -1022,53 +707,27 @@ def ppr_portable(
         .distinct()
         .join(outdeg.select(F.col("src").alias("node"), "od"), "node", "left")
     )
-    if seed_top_degree is not None and seeds is None:
-        seeds = (
-            e.select(F.col("src").alias("node"))
-            .unionAll(e.select(F.col("dst").alias("node")))
-            .groupBy("node")
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .orderBy(F.desc("_deg"), F.asc("node"))
-            .limit(seed_top_degree)
-            .select("node")
-        )
-    if seeds is not None:
-        # a seed LIST (top-k hubs etc.) is k rows — broadcast the flag
-        sd = (
-            seeds.select(F.col(seeds.columns[0]).alias("node"))
-            .distinct()
-            .withColumn("_s", F.lit(True))
-        )
-        nodes = nodes.join(F.broadcast(sd), "node", "left").withColumn(
-            "is_seed", F.coalesce(F.col("_s"), F.lit(False))
-        ).drop("_s")
-    else:
-        nodes = nodes.withColumn("is_seed", F.col("node") % seed_mod == 0)
-    nodes = nodes.transform(ckpt, eager=True)
+    nodes = seed_flag(e, nodes).transform(ckpt, eager=True)
     counts = nodes.agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("is_seed").cast("long")).alias("s"),
     ).head()
     n, s = counts["n"], counts["s"] or 0
+    if n == 0:
+        raise ValueError(f"{name}: empty edge list")
     if s == 0:
         raise ValueError(
-            "ppr_portable: no seed nodes "
-            + ("(seed frame matched nothing)" if seeds is not None
-               else f"(node % {seed_mod} == 0)")
-            + " in the graph — personalized teleport has nowhere to restart"
+            f"{name}: no seed nodes {seed_desc} in the graph — personalized "
+            "teleport has nowhere to restart"
         )
-    if n > PR_BROADCAST_MAX:
+    if n > measure.BROADCAST_MAX_NODES:
         raise ValueError(
-            f"ppr_portable: {n} nodes — the rank vector exceeds broadcast "
-            f"range (PR_BROADCAST_MAX={PR_BROADCAST_MAX}); use pagerank()'s "
-            "shuffle path for graphs this size"
+            f"{name}: {n} nodes — the rank vector exceeds broadcast range "
+            f"(BROADCAST_MAX_NODES={measure.BROADCAST_MAX_NODES}); use "
+            "pagerank()'s shuffle path (broadcast_ranks=False) for graphs "
+            "this size"
         )
     base = (15 * PR_SCALE) // (100 * s)
-    # edge prepartition measured and REJECTED (round 11, same verdict as
-    # pagerank): this loop's per-round combine output is |V|-small, and
-    # the dst pin moved the 100x probe 1,331 → 1,681 MiB — the pin costs
-    # an edge-sized exchange the rounds never repay. hits() is the loop
-    # shape where it pays (edge-order combine output per half-round).
     r = nodes.withColumn(
         "rank",
         F.when(F.col("is_seed"), F.lit(PR_SCALE // s)).otherwise(F.lit(0)),
@@ -1103,6 +762,177 @@ def ppr_portable(
         if (it + 1) % 2 == 0 or it == rounds - 1:
             r = r.transform(ckpt, eager=True)
     return r.select("node", F.col("rank").alias("rank_fp"))
+
+
+HITS_SCALE = 10**6  # fixed-point unit for portable HITS (see overflow note)
+
+
+def hits_portable(
+    edges: DataFrame,
+    rounds: int = 6,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """HITS (Kleinberg hubs & authorities) in integer fixed-point
+    arithmetic — the portable-proof strategy applied to the second
+    classic iterative ranking: authority(v) = Σ_{u→v} hub(u), hub(u) =
+    Σ_{u→v} authority(v), each vector L1-normalized to HITS_SCALE per
+    half-round via truncating integer division, so the full hub AND
+    authority vectors are bit-reproducible cross-engine. On a bipartite
+    graph (the customer→supplier purchase edges) HITS is the natural
+    ranking: hubs = buyers, authorities = suppliers.
+
+    Overflow bound: after normalization Σ scores = ~HITS_SCALE (1e6),
+    so a raw half-round sum ≤ HITS_SCALE·max_degree and the
+    normalization multiply raw·HITS_SCALE needs
+    max_degree < 2^63 / HITS_SCALE² ≈ 9.2e6 — runtime-guarded by
+    folding the check INTO the consumed norm column (a CASE that
+    raise_error()s on overflow); a detached assert_true column would be
+    removed by ColumnPruning and never evaluate (a graph with hotter
+    hubs than that needs a wider unit split, the mul_mod32 lesson). The
+    same unit caps the node count: past HITS_SCALE nodes the initial
+    scores would floor to 0, so the call refuses.
+
+    Same loop, edge route and half-round as hits() (see there); integer
+    sums are order-independent, so every route gives the same values.
+    Returns (node, hub_fp, auth_fp) with absent sides as 0."""
+    return _hits(edges, rounds, src, dst, "hits_portable", HITS_SCALE).toDF(
+        "node", "hub_fp", "auth_fp"
+    )
+
+
+def hits(
+    edges: DataFrame,
+    rounds: int = 6,
+    src: str = "src",
+    dst: str = "dst",
+) -> DataFrame:
+    """HITS in engine-native doubles — the UNBOUNDED-graph sibling of
+    hits_portable, exactly as pagerank() pairs with pagerank_portable:
+    the portable form is the cross-engine arithmetic proof but its
+    1e6-unit fixed-point scale caps both node count and max degree
+    (found live: the 100x scale sweep's 1.5M-node purchase graph trips
+    its envelope guard), while this form runs any |V|. Float summation
+    order is engine- and partitioning-specific, so results certify
+    rows-only + structural pytests (agreement with hits_portable within
+    fixed-point quantization on in-envelope graphs, L1 norms, bipartite
+    star dominance) — the same division of labor as q_pagerank vs
+    q_pagerank_portable.
+
+    Per half-round: authority(v) = Σ_{u→v} hub(u), then L1-normalize
+    (scores sum to 1 — no overflow bound needed in doubles); hubs
+    mirror it. Each half-round materializes eagerly — the norm reads
+    the raw half-round twice (values + norm), so an un-truncated chain
+    doubles the logical plan per half-round (structural, not tunable).
+
+    The edge list takes the graph tier's one measured route
+    (ext/measure.edge_route, one aggregate on the checkpointed raw
+    projection). Up to BROADCAST_MAX_NODES the score vector broadcasts
+    into the static edge scan (one partial-combined ≤|V|-row exchange +
+    one 1-row norm broadcast per half-round); larger graphs run
+    keyed-shuffle Pregel half-rounds. Past EDGE_PIN_MIN_BYTES the edge
+    list pins instead of re-exchanging every half-round THROUGH THE
+    AGGREGATE (the checkpoint leaf surfaces UnknownPartitioning, so the
+    partial combine emits edge-order bytes — 3.2 GiB physical over 12
+    half-rounds at the 100x probe, the heaviest graph-tier entry). HITS
+    alternates its grouping key, so the pin holds TWO copies: by the
+    group keys when scores broadcast (each half aggregates IN PLACE),
+    by the join keys otherwise (the aggregate exchange is then the
+    Pregel minimum); the first copy's exchange is also the dedup pass.
+    Routes may differ in final float ulps (summation grouping changes
+    with partitioning — the caveat this operator's rows-only
+    certification already carries). Returns (node, hub, auth) with
+    absent sides as 0.0."""
+    return _hits(edges, rounds, src, dst, "hits")
+
+
+def _hits(
+    edges: DataFrame, rounds: int, src: str, dst: str, name: str, scale: int | None = None
+) -> DataFrame:
+    """(node, hub, auth) after ``rounds`` HITS rounds: doubles, or with
+    ``scale`` hits_portable's fixed point."""
+    if rounds < 1:
+        # rounds=0 would leave the authority frame unbuilt and crash at
+        # the final join with an opaque TypeError — refuse up front.
+        raise ValueError(f"{name}: rounds must be >= 1")
+    # checkpoint the RAW projection (block store, no shuffle) so the
+    # measuring aggregate and both routes read a leaf
+    raw = _edge_frame(edges, src, dst).transform(ckpt, eager=True)
+    route = measure.edge_route(raw)
+    if route.width:
+        k_auth, k_hub = ("dst", "src") if route.broadcast else ("src", "dst")
+        e_auth = route.pin(raw, k_auth)
+        e_hub = route.pin(e_auth, k_hub)
+    else:
+        e_auth = e_hub = raw.distinct().transform(ckpt, eager=True)
+    nodes = (
+        e_auth.select(F.col("src").alias("node"))
+        .union(e_auth.select(F.col("dst").alias("node")))
+        .distinct()
+        .transform(ckpt, eager=True)
+    )
+    n = nodes.count()
+    if n == 0:
+        raise ValueError(f"{name}: empty edge list")
+    if scale is not None and n > scale:
+        raise ValueError(
+            f"{name}: {n} nodes exceeds HITS_SCALE={scale} — initial "
+            "scores would floor to 0; use hits() (engine-native doubles, "
+            "any |V|) for graphs this size, or raise HITS_SCALE and "
+            "re-derive the max-degree overflow bound in the docstring"
+        )
+    h = nodes.withColumn("h", F.lit(1.0 / n if scale is None else scale // n))
+    for _ in range(rounds):
+        a = _hits_half(e_auth, h, "src", "dst", "a", route.broadcast, scale)
+        h = _hits_half(e_hub, a, "dst", "src", "h", route.broadcast, scale)
+    zero = F.lit(0.0 if scale is None else 0)
+    return (
+        nodes.join(h, "node", "left")
+        .join(a, "node", "left")
+        .select(
+            "node",
+            F.coalesce("h", zero).alias("hub"),
+            F.coalesce("a", zero).alias("auth"),
+        )
+    )
+
+
+def _hits_half(
+    edge_frame: DataFrame,
+    scores: DataFrame,
+    join_key: str,
+    out_key: str,
+    out_col: str,
+    broadcast: bool,
+    scale: int | None,
+) -> DataFrame:
+    """One HITS half-round: the (node, score) vector joins the edges on
+    ``join_key``, sums per ``out_key``, and is L1-normalized by a 1-row
+    norm — ``raw / nm`` in doubles, or with ``scale`` the integer
+    ``(raw * scale) div nm``, guarded against overflow — then
+    checkpointed as (node, ``out_col``)."""
+    joined = edge_frame.join(
+        F.broadcast(scores) if broadcast else scores,
+        edge_frame[join_key] == scores["node"],
+    )
+    raw = joined.groupBy(out_key).agg(F.sum(scores.columns[1]).alias("raw"))
+    if scale is None:
+        nm, value = F.sum("raw"), F.col("raw") / F.col("nm")
+    else:
+        # The overflow guard is folded INTO the consumed `nm` column: a
+        # standalone assert_true("_chk") column is never referenced
+        # downstream, so ColumnPruning deletes it and the guard never
+        # runs (verified empirically on Spark 4.1.2).
+        side = "authority" if out_col == "a" else "hub"
+        nm = F.when(F.sum("raw") <= F.lit((2**63 - 1) // scale), F.sum("raw")).otherwise(
+            F.raise_error(F.lit(f"hits_portable: {side} norm overflow"))
+        )
+        value = F.expr(f"(raw * {scale}) div nm")
+    return (
+        raw.crossJoin(F.broadcast(raw.agg(nm.alias("nm"))))
+        .select(F.col(out_key).alias("node"), value.alias(out_col))
+        .transform(ckpt, eager=True)
+    )
 
 
 def label_propagation(

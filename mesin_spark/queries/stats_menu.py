@@ -1545,8 +1545,10 @@ def q_hits(spark, sf_dir):
     fixed-point quantization plus the structural properties (L1 norms
     sum to 1, star-center authority dominance). Exists because the 100x
     scale sweep's 1.5M-node graph trips hits_portable's 1e6-unit
-    envelope guard — this path auto-routes broadcast vs Pregel shuffle
-    half-rounds at the same 8M-node ceiling as pagerank()."""
+    envelope guard — this path takes the graph tier's measured edge
+    route (ext/measure.edge_route): broadcast vs Pregel shuffle
+    half-rounds at measure.BROADCAST_MAX_NODES, the ceiling pagerank()
+    shares, and an edge pin past measure.EDGE_PIN_MIN_BYTES."""
     from mesin_spark.ext.graph import hits
 
     return hits(_purchase_edges(spark, sf_dir), rounds=6).select(

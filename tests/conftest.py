@@ -26,3 +26,23 @@ def duck():
     for t in "region nation customer supplier part orders lineitem events documents embeddings".split():
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
     return con
+
+
+def force_edge_route(monkeypatch, pin: bool, broadcast: bool) -> list:
+    """Force the graph tier's measured edge route (ext/measure.edge_route)
+    through its module constants: ``pin`` the static edge frame or keep
+    AQE rounds, ``broadcast`` the per-node vector or shuffle it. Returns
+    the list each ``EdgeRoute.pin`` call appends its key to."""
+    from mesin_spark.ext import measure
+
+    monkeypatch.setattr(measure, "EDGE_PIN_MIN_BYTES", 0 if pin else float("inf"))
+    monkeypatch.setattr(measure, "BROADCAST_MAX_NODES", 2**62 if broadcast else 0)
+    keys = []
+    real = measure.EdgeRoute.pin
+
+    def pin_(self, frame, key):
+        keys.append(key)
+        return real(self, frame, key)
+
+    monkeypatch.setattr(measure.EdgeRoute, "pin", pin_)
+    return keys

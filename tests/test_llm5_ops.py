@@ -11,7 +11,7 @@ import os
 
 import pytest
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, force_edge_route
 
 
 def _write_documents(spark, tmp_path, rows):
@@ -243,20 +243,37 @@ def test_pagerank_tol_early_exit(spark):
 
 
 def test_pagerank_drops_null_endpoints(spark):
-    """A NULL endpoint names no node: its edge is dropped rather than
-    read as the NULL-keyed sentinel row that carries the uniform term."""
+    """A NULL endpoint names no node: every ranking operator drops its
+    edge rather than ranking a NULL node (or, in pagerank, reading it as
+    the NULL-keyed sentinel row that carries the uniform term), and the
+    portable ranks keep their whole mass."""
     import pytest
 
-    from mesin_spark.ext.graph import pagerank
+    from mesin_spark.ext import graph as G
 
-    base = [(1, 2), (2, 3), (3, 1), (4, 1)]
+    base = [(1, 2), (2, 3), (3, 1), (1, 3), (4, 1)]
     clean = spark.createDataFrame(base, "src long, dst long")
-    dirty = spark.createDataFrame(base + [(None, 2), (4, None)], "src long, dst long")
-    want = {r["node"]: r["rank"] for r in pagerank(clean, max_iter=4).collect()}
-    got = {r["node"]: r["rank"] for r in pagerank(dirty, max_iter=4).collect()}
-    assert got == want
+    dirty = spark.createDataFrame(
+        base + [(None, 2), (4, None), (2, None), (None, 4)], "src long, dst long"
+    )
+    ops = {
+        "pagerank": lambda df: G.pagerank(df, max_iter=4),
+        "pagerank_portable": lambda df: G.pagerank_portable(df, rounds=4),
+        "ppr_portable": lambda df: G.ppr_portable(df, seed_mod=1, rounds=4),
+        "hits": lambda df: G.hits(df, rounds=2),
+        "hits_portable": lambda df: G.hits_portable(df, rounds=2),
+    }
+    got = {}
+    for name, op in ops.items():
+        want = {r[0]: tuple(r[1:]) for r in op(clean).collect()}
+        got[name] = {r[0]: tuple(r[1:]) for r in op(dirty).collect()}
+        assert got[name] == want and want.keys() == {1, 2, 3, 4}, name
+    # with every node a seed, personalized PageRank is the uniform one
+    assert got["ppr_portable"] == got["pagerank_portable"]
+    mass = sum(v[0] for v in got["pagerank_portable"].values()) / G.PR_SCALE
+    assert 0.999999 < mass <= 1.0
     with pytest.raises(ValueError, match="max_iter"):
-        pagerank(clean, max_iter=0)
+        G.pagerank(clean, max_iter=0)
 
 
 def test_triangle_count_known_graphs(spark):
@@ -780,13 +797,13 @@ def test_containment_auto_routing_by_occupancy(spark, monkeypatch):
     assert got == want and len(got) > 0
 
 
-def test_hits_float_agreement_and_unbounded_envelope(spark):
+def test_hits_float_agreement_and_unbounded_envelope(spark, monkeypatch):
     """The engine-native hits() (doubles, any |V|) must track
     hits_portable within fixed-point quantization on an in-envelope
     graph, satisfy the structural invariants (L1 norms sum to 1,
     star-center authority dominance, pure sources/sinks score 0.0 on the
-    missing side), agree between its broadcast and shuffle half-round
-    routes to 1e-12, and — the reason it exists — accept a graph past
+    missing side), agree across its measured edge routes to 1e-12 (and
+    hits_portable exactly), and — the reason it exists — accept a graph past
     hits_portable's HITS_SCALE node envelope (found live by the 100x
     scale sweep's 1.5M-node graph)."""
     from mesin_spark.ext.graph import HITS_SCALE, hits, hits_portable
@@ -805,11 +822,21 @@ def test_hits_float_agreement_and_unbounded_envelope(spark):
     for u in fl:
         assert abs(fl[u]["hub"] - fp[u]["hub_fp"] / HITS_SCALE) < 1e-4
         assert abs(fl[u]["auth"] - fp[u]["auth_fp"] / HITS_SCALE) < 1e-4
-    # broadcast vs Pregel-shuffle half-rounds: same doubles to 1e-12
-    sh = {r["node"]: r for r in hits(df, rounds=8, broadcast_scores=False).collect()}
-    for u in fl:
-        assert abs(fl[u]["hub"] - sh[u]["hub"]) < 1e-12
-        assert abs(fl[u]["auth"] - sh[u]["auth"]) < 1e-12
+    # every edge route: AQE rounds or the two pinned edge copies (by the
+    # group keys when scores broadcast, by the join keys when they
+    # shuffle), broadcast or Pregel-shuffle half-rounds — the same
+    # doubles to 1e-12 and the same fixed point exactly
+    for pin in (False, True):
+        for broadcast in (False, True):
+            keys = force_edge_route(monkeypatch, pin, broadcast)
+            sh = {r["node"]: r for r in hits(df, rounds=8).collect()}
+            for u in fl:
+                assert abs(fl[u]["hub"] - sh[u]["hub"]) < 1e-12
+                assert abs(fl[u]["auth"] - sh[u]["auth"]) < 1e-12
+            assert {r["node"]: r for r in hits_portable(df, rounds=8).collect()} == fp
+            pinned = ["dst", "src"] if broadcast else ["src", "dst"]
+            assert keys == (pinned * 2 if pin else [])
+    monkeypatch.undo()
 
     # past the portable envelope: portable refuses loudly, float runs
     from pyspark.sql import functions as F
@@ -821,6 +848,66 @@ def test_hits_float_agreement_and_unbounded_envelope(spark):
         hits_portable(big, rounds=1)
     out = hits(big.limit(50), rounds=1)  # semantics on a small slice
     assert out.count() == 51
+
+
+def test_graph_operators_measure_edges_once(spark, monkeypatch):
+    """Each graph-operator call runs at most one measuring aggregate:
+    hits, hits_portable and dedup_clusters one edge_route each, the
+    PageRank family none (pagerank's auto pre-pass is skipped when
+    broadcast_ranks is given). hits_portable used to measure the same
+    deduplicated edge frame twice, once per pin key: on this graph its
+    1-round build started 20 jobs, 4 of them in its two measuring
+    aggregates. Jobs are counted by job group."""
+    import uuid
+
+    from mesin_spark.ext import dedup as D
+    from mesin_spark.ext import graph as G
+    from mesin_spark.ext import measure
+
+    sc = spark.sparkContext
+
+    def jobs(fn):
+        """(result, jobs started by ``fn``), counted in a job group of
+        its own; the enclosing group is restored after."""
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        group = f"jobs-{uuid.uuid4().hex[:8]}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    measuring = []
+    real = measure.edge_route
+
+    def spy(leaf, copies=1):
+        route, n = jobs(lambda: real(leaf, copies))
+        measuring.append(n)
+        return route
+
+    monkeypatch.setattr(measure, "edge_route", spy)
+    monkeypatch.setattr(D, "edge_route", spy)
+    df = spark.createDataFrame(
+        [(1, 5), (1, 6), (2, 5), (3, 6), (3, 7), (4, 7)], "src bigint, dst bigint"
+    )
+    _, rest = jobs(lambda: G.hits_portable(df, rounds=1))
+    assert len(measuring) == 1 and measuring[0] >= 1
+    assert rest + measuring[0] < 20
+    calls = {}
+    for name, op in {
+        "hits": lambda: G.hits(df, rounds=1),
+        "dedup_clusters": lambda: D.dedup_clusters(df.toDF("id_a", "id_b")),
+        "pagerank": lambda: G.pagerank(df, max_iter=1, broadcast_ranks=True),
+        "pagerank_portable": lambda: G.pagerank_portable(df, rounds=1),
+        "ppr_portable": lambda: G.ppr_portable(df, seed_mod=1, rounds=1),
+    }.items():
+        measuring.clear()
+        op()
+        calls[name] = len(measuring)
+    assert calls == {
+        "hits": 1, "dedup_clusters": 1, "pagerank": 0, "pagerank_portable": 0, "ppr_portable": 0
+    }
 
 
 def test_prefix_pigeonhole_exact_threshold_boundaries(spark, monkeypatch):

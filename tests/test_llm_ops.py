@@ -13,7 +13,7 @@ from mesin_spark.ext import multimodal as M
 from mesin_spark.ext import similarity as S
 from mesin_spark.ext import text as TX
 from mesin_spark.queries import T
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, force_edge_route
 
 
 @pytest.fixture(scope="module")
@@ -172,51 +172,34 @@ def test_dedup_clusters_chains(spark):
     assert out == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
-def test_dedup_clusters_prepartition_route_equality(spark):
-    """The measured edge-prepartition route (round-11: one up-front
-    repartition+pin of the STATIC edge table instead of one exchange per
-    pointer-jump round) moves an exchange, never semantics: both forced
-    routes and auto must return identical cluster maps, and string ids
-    must size via measured octet lengths without error."""
-    import pytest
-
+def test_dedup_clusters_prepartition_route_equality(spark, monkeypatch):
+    """Every measured edge route (ext/measure.edge_route, forced through
+    its constants) moves exchanges, never semantics: AQE rounds or the
+    pinned edge table (one up-front repartition+pin instead of one
+    exchange per pointer-jump round), with the labels broadcast (edges
+    pinned by src) or shuffled (pinned by dst), return identical cluster
+    maps, and string ids size via measured octet lengths without error."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (5, 6), (6, 7), (7, 8), (20, 21), (30, 30)],
         "id_a long, id_b long",
     )
-    outs = {
-        route: sorted(map(tuple, D.dedup_clusters(pairs, prepartition=route).collect()))
-        for route in (False, True, "auto")
-    }
-    assert outs[False] == outs[True] == outs["auto"]
-    # string keys exercise the octet-length branch of _row_bytes_expr
+    want = sorted(map(tuple, D.dedup_clusters(pairs).collect()))
+    assert dict(want)[8] == 1 and dict(want)[21] == 20
+    for pin in (False, True):
+        for broadcast in (False, True):
+            keys = force_edge_route(monkeypatch, pin, broadcast)
+            assert sorted(map(tuple, D.dedup_clusters(pairs).collect())) == want
+            assert keys == ([("src" if broadcast else "dst")] if pin else [])
+    # string keys exercise the octet-length branch of row_bytes_expr
     spairs = spark.createDataFrame(
         [("a", "b"), ("b", "c"), ("x", "y")], "id_a string, id_b string"
     )
-    souts = {
-        route: sorted(map(tuple, D.dedup_clusters(spairs, prepartition=route).collect()))
-        for route in (False, True)
-    }
+    souts = {}
+    for pin in (False, True):
+        force_edge_route(monkeypatch, pin, True)
+        souts[pin] = sorted(map(tuple, D.dedup_clusters(spairs).collect()))
     assert souts[False] == souts[True]
     assert dict(souts[True])["c"] == "a"
-    # within the prepartitioned tier, the broadcast-labels route (|V|
-    # under the ceiling: src-partitioned edges + per-round broadcast)
-    # and the web-scale route (dst-partitioned edges + shuffled labels)
-    # must also agree
-    bouts = {
-        cap: sorted(
-            map(
-                tuple,
-                D.dedup_clusters(
-                    pairs, prepartition=True, broadcast_max_nodes=cap
-                ).collect(),
-            )
-        )
-        for cap in (0, 8_000_000)
-    }
-    assert bouts[0] == bouts[8_000_000] == outs[False]
-    with pytest.raises(ValueError, match="prepartition"):
-        D.dedup_clusters(pairs, prepartition="maybe")
 
 
 def test_hash_split_deterministic_and_fractional(spark, docs):

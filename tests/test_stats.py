@@ -1009,27 +1009,27 @@ def test_pagerank_broadcast_and_shuffle_paths_agree(spark):
     assert abs(sum(bc.values()) - 1.0) < 1e-9
 
 
-def test_pagerank_auto_route_resolves_before_setup(spark):
-    """broadcast_ranks=None on a graph past broadcast_max_nodes must take
+def test_pagerank_auto_route_resolves_before_setup(spark, monkeypatch):
+    """broadcast_ranks=None on a graph past BROADCAST_MAX_NODES must take
     the skew-safe groupBy-outdeg SETUP as well as the shuffle rounds
     (ADVICE r07: the auto decision used to land after the window-outdeg
     setup had already run) — and agree with the broadcast route."""
+    from mesin_spark.ext import measure
     from mesin_spark.ext.graph import pagerank
 
     edges = spark.createDataFrame(
         [(i, 0) for i in range(1, 9)] + [(0, 100), (100, 101), (101, 0)],
         "src long, dst long",
     )
-    # force the auto-BIG route: the HLL pre-pass sees ~11 nodes > 1
-    auto_big = {
-        r["node"]: r["rank"]
-        for r in pagerank(
-            edges, max_iter=6, broadcast_ranks=None, broadcast_max_nodes=1
-        ).collect()
-    }
     bc = {
         r["node"]: r["rank"]
         for r in pagerank(edges, max_iter=6, broadcast_ranks=True).collect()
+    }
+    # force the auto-BIG route: the HLL pre-pass sees ~11 nodes > 1
+    monkeypatch.setattr(measure, "BROADCAST_MAX_NODES", 1)
+    auto_big = {
+        r["node"]: r["rank"]
+        for r in pagerank(edges, max_iter=6, broadcast_ranks=None).collect()
     }
     assert auto_big.keys() == bc.keys()
     assert all(abs(auto_big[k] - bc[k]) < 1e-12 for k in bc)
@@ -1037,22 +1037,23 @@ def test_pagerank_auto_route_resolves_before_setup(spark):
 
 def test_portable_rank_broadcast_guard(spark, monkeypatch):
     """pagerank_portable / ppr_portable broadcast the full |V|-row rank
-    vector every round — past PR_BROADCAST_MAX they must fail with a
+    vector every round — past BROADCAST_MAX_NODES they must fail with a
     clear remedy (use pagerank()'s shuffle path), not an opaque
     broadcast OOM (ADVICE r07)."""
     import pytest
 
     from mesin_spark.ext import graph as G
+    from mesin_spark.ext import measure
 
     edges = spark.createDataFrame(
         [(i, (i + 1) % 5) for i in range(5)], "src long, dst long"
     )
-    monkeypatch.setattr(G, "PR_BROADCAST_MAX", 3)
+    monkeypatch.setattr(measure, "BROADCAST_MAX_NODES", 3)
     with pytest.raises(ValueError, match="exceeds broadcast range"):
         G.pagerank_portable(edges, rounds=2)
     with pytest.raises(ValueError, match="exceeds broadcast range"):
         G.ppr_portable(edges, seed_mod=5, rounds=2)
-    monkeypatch.setattr(G, "PR_BROADCAST_MAX", 8_000_000)
+    monkeypatch.setattr(measure, "BROADCAST_MAX_NODES", 5)
     assert G.pagerank_portable(edges, rounds=2).count() == 5
 
 

@@ -275,7 +275,7 @@ def main() -> int:
         " four), window-derived outdeg (one raw-edge scan, two setup"
         " materializations instead of three), and the redundant"
         " _purchase_edges distinct removed. Shuffle path retained for"
-        " graphs past broadcast_max_nodes with the skew-safe groupBy"
+        " graphs past measure.BROADCAST_MAX_NODES with the skew-safe groupBy"
         " outdeg; both paths pytest-proven to agree to 1e-12."
     )
     out.append("")
